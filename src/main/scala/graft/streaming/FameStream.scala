@@ -44,9 +44,9 @@ import graft.parse.FameParser
 object FameStream {
 
   /** Small daemon pool for the per-batch independent writes (emit,
-    * carry, kernel states) — see the `parallel` helper in
-    * [[runIncremental]]. 4 threads: a batch has at most ~4 independent
-    * writes, and more in flight would only fight for executor slots.
+    * carry, bronze, kernel states) — see the `parallel` helper in
+    * [[runIncremental]]. 4 threads: more writes in flight would only
+    * fight for executor slots; a batch's further writes queue.
     */
   private lazy val batchWritePool =
     java.util.concurrent.Executors.newFixedThreadPool(4,
@@ -1251,14 +1251,21 @@ object FameStream {
     * cliff behind a flag).
     *
     * Mechanics per micro-batch, all idempotent under checkpoint replay:
-    *  1. the batch lands at `bronzeDir/batch=<id>` (overwrite — the
-    *     [[run]] bronze contract);
-    *  2. the script runs over (carried rows ∪ batch): the carry is the
+    *  1. (carried rows ∪ batch) is materialized ONCE as an in-memory
+    *     leaf — the batch's only scan of the source — with each row
+    *     flagged new, held (step 3) and late. A late row (dated before
+    *     its key's newest carried row) fails the batch with
+    *     [[OutOfOrderIngestException]] before anything of it is
+    *     written. Every later step reads the leaf; the writes of steps
+    *     2–6 then run as concurrent jobs;
+    *  2. the batch's rows land at `bronzeDir/batch=<id>` (overwrite —
+    *     the [[run]] bronze contract), written from the leaf;
+    *  3. the script runs over the leaf: the carry is the
     *     last `maxLag + maxLead` INPUT rows per key as of the previous
     *     batch, so every backward lag a row needs is present, and —
     *     when the script reads FORWARD (`v[t+k]`, maxLead > 0) — every
-    *     still-unemitted row's lookahead accumulates until it arrives;
-    *  3. HOLD-BACK emission: a row's outputs land at
+    *     still-unemitted row's lookahead accumulates until it arrives.
+    *     HOLD-BACK emission: a row's outputs land at
     *     `resultDir/batch=<id>` (overwrite) only once `maxLead` rows
     *     after it (per key) have arrived — at that point every forward
     *     read the row makes is in frame, so its value is FINAL (the
@@ -1355,13 +1362,15 @@ object FameStream {
     // per batch, which the r20 profiles showed dominating walls on
     // streams whose task time is sub-second. Batch n−1 therefore also
     // hands batch n its frames as lazily-localCheckpointed in-memory
-    // leaves — materialized BY their own parquet write, so no extra job
-    // — and the parquet write remains the versioned recovery artifact: a
-    // restarted query has empty caches and re-reads v=n−1 exactly as
-    // before, so the replay contract is unchanged (the leaf and the file
-    // hold the same rows by construction). Consumed leaves are released
-    // as soon as the batch that read them finishes (ADVICE r20:
-    // localCheckpoint blocks otherwise live until RDD GC).
+    // leaves, built and written inside the pool task that owns the
+    // frame — under AQE building the leaf already runs the frame's
+    // shuffle stage as its own execution, so it stays off the stream
+    // thread — and the parquet write remains the versioned recovery
+    // artifact: a restarted query has empty caches and re-reads v=n−1
+    // exactly as before, so the replay contract is unchanged (the leaf
+    // and the file hold the same rows by construction). Consumed leaves
+    // are released as soon as the batch that read them finishes (ADVICE
+    // r20: localCheckpoint blocks otherwise live until RDD GC).
     var tailCache: Option[(Long, DataFrame)] = None
     var stateCache: Map[String, (Long, DataFrame)] = Map.empty
     def releaseLeaf(df: DataFrame): Unit = df.queryExecution.analyzed match {
@@ -1370,7 +1379,6 @@ object FameStream {
       case _ => ()
     }
     w.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      batch.write.mode("overwrite").parquet(s"$bronzeDir/batch=$batchId")
       val tailPath = new org.apache.hadoop.fs.Path(
         s"$bronzeDir/_tail/v=${batchId - 1}")
       val fs = tailPath.getFileSystem(hconf)
@@ -1395,27 +1403,6 @@ object FameStream {
             spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
             upper.schema).withColumn("__EMITTED", lit(true))
       }
-      // Enforce the ingest contract instead of documenting it: any
-      // batch row dated before its key's newest carried-tail row is a
-      // late arrival the incremental form cannot evaluate correctly —
-      // fail loudly rather than emit silently-wrong output. The tail
-      // is ≤ maxLag rows per key, so this is one cheap pass per batch.
-      val late =
-        if (keysU.isEmpty) {
-          val tm = prevTail.agg(max(col(dateU))).collect()(0)
-          if (tm.isNullAt(0)) Array.empty[org.apache.spark.sql.Row]
-          else upper.where(col(dateU) < lit(tm.get(0))).limit(1).collect()
-        } else {
-          val tailMax = prevTail.groupBy(keysU.map(col): _*)
-            .agg(max(col(dateU)).as("__TAIL_MAX"))
-          upper.join(tailMax, keysU, "inner")
-            .where(col(dateU) < col("__TAIL_MAX")).limit(1).collect()
-        }
-      if (late.nonEmpty) throw new OutOfOrderIngestException(
-        s"batch $batchId contains a row older than already-processed " +
-        s"history (first offender: ${late.head}); the incremental path " +
-        "requires nondecreasing dates per key — use mode = Snapshot " +
-        "for out-of-order ingest")
       // position from the key's frontier: the last maxLead rows per key
       // are PENDING (their forward reads are incomplete) — everything
       // older is emittable. For lag-only scripts maxLead = 0 and every
@@ -1423,21 +1410,38 @@ object FameStream {
       val keyCols = if (keysU.isEmpty) Seq(lit(1)) else keysU.map(col)
       val kw = Window.partitionBy(keyCols: _*)
       val ord = kw.orderBy(col(dateU).desc)
-      // MATERIALIZE the work frame once (r20, guide §2.4/§5): every
-      // action this batch takes — the emit write, the carry write, the
-      // chain/fishvol state finalizes — previously re-executed (and,
-      // worse, re-SERIALIZED into every task binary) the whole
-      // tail-parquet ∪ batch ∪ hold-window lineage; stage sampling
-      // showed 100-200 ms of task DESERIALIZE time per task on KB-sized
-      // frames, the dominant per-batch cost for the kernel-bearing
-      // streams. The work frame is bounded (carry + one micro-batch),
-      // so an eager localCheckpoint is one tiny job that makes every
-      // downstream plan hang off a leaf RDD. Values are unchanged: the
-      // same rows, computed by the same plan, now computed exactly once.
-      val work = prevTail
-        .unionByName(upper.withColumn("__EMITTED", lit(false)))
+      // MATERIALIZE the work frame once (r20, guide §2.4/§5) as the
+      // batch's one in-memory leaf: the only action that scans the
+      // micro-batch (its source is re-read by every action over it), and
+      // the frame every later step reads — the late check, the bronze,
+      // emit and carry writes, the chain/fishvol state finalizes. Without
+      // it each of those re-executed (and re-SERIALIZED into every task
+      // binary) the tail ∪ batch ∪ hold-window lineage. __NEW marks the
+      // batch's rows; __LATE flags a batch row dated before its key's
+      // newest carried row — a late arrival the incremental form cannot
+      // evaluate correctly. Both windows share the __HOLD partitioning,
+      // so the leaf costs one exchange.
+      val leaf = prevTail.withColumn("__NEW", lit(false))
+        .unionByName(upper.withColumn("__EMITTED", lit(false))
+          .withColumn("__NEW", lit(true)))
         .withColumn("__HOLD", row_number().over(ord) <= lit(maxLead))
+        .withColumn("__LATE", col("__NEW") &&
+          col(dateU) < max(when(!col("__NEW"), col(dateU))).over(kw))
         .localCheckpoint(true)
+      // Enforce the ingest contract instead of documenting it: fail
+      // loudly rather than emit silently-wrong output, before any write
+      // of this batch has started (so a rejected batch leaves no bronze)
+      val late = leaf.where(col("__LATE"))
+        .select(cols.map(c => col(c.toUpperCase)): _*).limit(1).collect()
+      if (late.nonEmpty) {
+        releaseLeaf(leaf)
+        throw new OutOfOrderIngestException(
+          s"batch $batchId contains a row older than already-processed " +
+          s"history (first offender: ${late.head}); the incremental path " +
+          "requires nondecreasing dates per key — use mode = Snapshot " +
+          "for out-of-order ingest")
+      }
+      val work = leaf.drop("__NEW", "__LATE")
       // chain scripts (r17): seed each $chain with the closed-year
       // aggregate state finalized by the previous batch (versioned like
       // the carry — replay of batch n re-reads v=n−1, idempotent), so
@@ -1545,33 +1549,49 @@ object FameStream {
           // or just arrived — the work frame holds the WHOLE bucket and
           // the value is the whole-history one. Replay of batch n
           // re-reads carry v=n−1 → identical cutoffs, idempotent.
+          // Input rows have a non-null __EMITTED and synthetic rows a
+          // null one, so the two selections are disjoint and ONE filter
+          // takes both: a union of two filters would plan the whole FAME
+          // subplan twice (Catalyst cannot merge the branches).
           val scoped = out
             .withColumn("__CUT_NEW",
               max(when(col("__HOLD") === false, col(dateU))).over(kw))
             .withColumn("__CUT_PREV",
               max(when(col("__EMITTED") === true, col(dateU))).over(kw))
-          scoped.where(!col("__EMITTED") && !col("__HOLD"))
-            .unionByName(scoped.where(col("__EMITTED").isNull &&
-              col(dateU) <= col("__CUT_NEW") &&
-              (col("__CUT_PREV").isNull ||
-                col(dateU) > col("__CUT_PREV"))))
+          scoped.where((!col("__EMITTED") && !col("__HOLD")) ||
+              (col("__EMITTED").isNull &&
+                col(dateU) <= col("__CUT_NEW") &&
+                (col("__CUT_PREV").isNull ||
+                  col(dateU) > col("__CUT_PREV"))))
             .drop("__CUT_NEW", "__CUT_PREV")
         }
-      // Independent writes of this batch — the emit below, the carry,
-      // and the chain/fishvol state finalizes — all read the
-      // MATERIALIZED work/out leaves and land in disjoint directories,
-      // so they run as concurrent jobs (guide §2.6: actions are only
-      // sequential because the driver calls them sequentially). Each
-      // job is tiny; sequencing them paid ~150 ms of driver+scheduler
-      // latency apiece. Failure of any write fails the batch exactly as
-      // before (Await rethrows), and checkpoint replay overwrites every
-      // destination idempotently, so the commit contract is unchanged.
+      // Independent writes of this batch — bronze, the emit below, the
+      // carry, and the chain/fishvol state finalizes — all read the
+      // MATERIALIZED leaf (or the out leaf) and land in disjoint
+      // directories, so they run as concurrent jobs (guide §2.6: actions
+      // are only sequential because the driver calls them sequentially).
+      // Each job is tiny; sequencing them paid ~150 ms of
+      // driver+scheduler latency apiece. Each task runs under the stream
+      // thread's local properties and active session as of submission
+      // (pool threads outlive the query that created them; inherited
+      // properties would file the jobs under that first query's job
+      // group, out of reach of this query's stop()), with a job
+      // description naming the write. Failure of any write fails the
+      // batch exactly as before (the await below rethrows), and
+      // checkpoint replay overwrites every destination idempotently, so
+      // the commit contract is unchanged.
+      val session =
+        batch.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       val pendingWrites =
         scala.collection.mutable.ListBuffer.empty[java.util.concurrent.Future[_]]
-      def parallel(body: => Unit): Unit =
-        pendingWrites += batchWritePool.submit(
-          new java.util.concurrent.Callable[Unit] { def call(): Unit = body })
-      parallel {
+      def parallel(label: String)(body: => Unit): Unit =
+        pendingWrites += org.apache.spark.sql.execution.SQLExecution
+          .withThreadLocalCaptured(session, batchWritePool) {
+            session.sparkContext.setJobDescription(
+              s"FameStream batch $batchId: $label")
+            body
+          }
+      parallel("emit") {
         emit.drop("__EMITTED", "__HOLD")
           .write.mode("overwrite").parquet(s"$resultDir/batch=$batchId")
       }
@@ -1644,19 +1664,34 @@ object FameStream {
           val minUnem = min(when(!col("__EMITTED"), col("__ARN"))).over(kw)
           !col("__EMITTED") || col("__ARN") >= minUnem - lit(maxLag)
         }
-      // lazy localCheckpoint: the parquet write below materializes the
-      // leaf as a side effect (no extra job); the leaf is next batch's
-      // in-memory prevTail
-      val carry = ranked
-        .withColumn("__PINNED", coalesce(pinned, lit(false)))
-        .withColumn("__KEEPUN", coalesce(keepUnemitted, lit(false)))
-        .where(col("__RN") <= carrySize || col("__PINNED") ||
-          col("__KEEPUN"))
-        .drop("__RN", "__ARN", "__PINNED", "__KEEPUN")
-        .localCheckpoint(false)
-      parallel {
-        carry.write.mode("overwrite")
-          .parquet(s"$bronzeDir/_tail/v=$batchId")
+      // One pool task per handed-on frame: it builds the frame's lazy
+      // localCheckpoint leaf (under AQE that alone runs the frame's
+      // shuffle stages, as a `localCheckpoint` execution of its own),
+      // then writes it, which fills the leaf's blocks. The leaf comes
+      // back through the reference; it is next batch's in-memory input.
+      def leafWrite(label: String, path: String)(frame: => DataFrame)
+          : java.util.concurrent.atomic.AtomicReference[DataFrame] = {
+        val ref = new java.util.concurrent.atomic.AtomicReference[DataFrame]()
+        parallel(label) {
+          val handed = frame.localCheckpoint(false)
+          ref.set(handed)
+          handed.write.mode("overwrite").parquet(path)
+        }
+        ref
+      }
+      // the carry leaf is next batch's prevTail
+      val carryRef = leafWrite("carry", s"$bronzeDir/_tail/v=$batchId") {
+        ranked
+          .withColumn("__PINNED", coalesce(pinned, lit(false)))
+          .withColumn("__KEEPUN", coalesce(keepUnemitted, lit(false)))
+          .where(col("__RN") <= carrySize || col("__PINNED") ||
+            col("__KEEPUN"))
+          .drop("__RN", "__ARN", "__PINNED", "__KEEPUN")
+      }
+      parallel("bronze") {
+        leaf.where(col("__NEW"))
+          .select(cols.map(c => col(c.toUpperCase).as(c)): _*)
+          .write.mode("overwrite").parquet(s"$bronzeDir/batch=$batchId")
       }
       // finalize chain state: closed years' aggregate rows, computed
       // from the output frame (derived source columns materialized) and
@@ -1664,8 +1699,8 @@ object FameStream {
       // finalized at close time; later partial rows of the same year
       // (tail/pin leftovers) are anti-joined away
       // each finalized state is also handed to the next batch as an
-      // in-memory leaf (lazy localCheckpoint, materialized by its own
-      // write) — set after quiescence below, only on batch success
+      // in-memory leaf (built and written by its own pool task) — set
+      // after quiescence below, only on batch success
       val newStateRefs = scala.collection.mutable.ListBuffer
         .empty[(String, java.util.concurrent.atomic.AtomicReference[DataFrame])]
       plan.chains.foreach { c =>
@@ -1675,18 +1710,14 @@ object FameStream {
           .where(col("__CYR") < col("__CMAXYR"))
         val fresh = graft.kernels.Indices.yearlyAggs(
           closed, dateU, c.terms, keysU)
-        val newState = (chainSeeds.get(c.target) match {
-          case Some(st) => st.unionByName(fresh.join(
-            st.select((keysU :+ "__year").map(col): _*),
-            keysU :+ "__year", "left_anti"))
-          case None => fresh
-        }).localCheckpoint(false)
-        val ref = new java.util.concurrent.atomic.AtomicReference[DataFrame](
-          newState)
-        newStateRefs += c.target -> ref
-        parallel {
-          newState.write.mode("overwrite")
-            .parquet(s"$bronzeDir/_state/${c.target}/v=$batchId")
+        newStateRefs += c.target -> leafWrite(s"state:${c.target}",
+            s"$bronzeDir/_state/${c.target}/v=$batchId") {
+          chainSeeds.get(c.target) match {
+            case Some(st) => st.unionByName(fresh.join(
+              st.select((keysU :+ "__year").map(col): _*),
+              keysU :+ "__year", "left_anti"))
+            case None => fresh
+          }
         }
       }
       // finalize fishvol state (relaxed-fp tier): per key, the raw
@@ -1710,20 +1741,17 @@ object FameStream {
           // unkeyed groupBy() yields one all-null row when nothing has
           // been emitted yet — that is "no state", not a seed
           .where(col("__FV_SEED").isNotNull)
-        val ref = new java.util.concurrent.atomic.AtomicReference[DataFrame]()
-        newStateRefs += f.target -> ref
-        parallel {
-          // the isEmpty probe is an action — keep it in the pool thread
-          val newState = (fishSeeds.get(f.target) match {
+        // the frame is built in the pool task, so the isEmpty probe (an
+        // action) stays off the stream thread
+        newStateRefs += f.target -> leafWrite(s"state:${f.target}",
+            s"$bronzeDir/_state/${f.target}/v=$batchId") {
+          fishSeeds.get(f.target) match {
             case Some(old) if keysU.nonEmpty =>
               fresh.unionByName(old.join(
                 fresh.select(keysU.map(col): _*), keysU, "left_anti"))
             case Some(old) => if (fresh.isEmpty) old else fresh
             case None => fresh
-          }).localCheckpoint(false)
-          ref.set(newState)
-          newState.write.mode("overwrite")
-            .parquet(s"$bronzeDir/_state/${f.target}/v=$batchId")
+          }
         }
       }
       // Await ALL pool futures before propagating any failure (ADVICE
@@ -1741,7 +1769,7 @@ object FameStream {
       }
       // this batch's consumed leaves are dead once the writes are done:
       // release their blocks now instead of at RDD GC (ADVICE r20)
-      releaseLeaf(work)
+      releaseLeaf(leaf)
       if (outGated) releaseLeaf(out)
       cachedTail.foreach(releaseLeaf)
       stateCache.foreach { case (_, (v, df)) =>
@@ -1750,7 +1778,7 @@ object FameStream {
       // commit the new leaves for batch n+1 (success path only — a
       // failed batch leaves the caches stale and the replay, a fresh
       // foreachBatch closure after restart, reads parquet)
-      tailCache = Some((batchId, carry))
+      tailCache = Some((batchId, carryRef.get()))
       stateCache = newStateRefs.flatMap { case (t, ref) =>
         Option(ref.get()).map(df => t -> ((batchId, df))) }.toMap
       ()

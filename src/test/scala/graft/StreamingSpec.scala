@@ -1498,6 +1498,9 @@ class StreamingSpec extends SparkSpec {
     // batch 0's output is intact; the offending batch emitted nothing
     val emitted = spark.read.parquet(s"$base/result")
     assert(emitted.count() == 2)
+    // the late check runs before any write of the batch: no bronze either
+    assert(java.nio.file.Files.isDirectory(java.nio.file.Paths.get(s"$base/bronze/batch=0")))
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$base/bronze/batch=1")))
   }
 
   test("incremental FAME refuses a resultDir holding a flat snapshot-" +
@@ -3380,5 +3383,114 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
     // batches 0 and 1 emitted; the offending batch emitted nothing
     assert(spark.read.parquet(s"$base/result").count() == 4)
+    // the late check runs before any write of the batch: no bronze either
+    assert(java.nio.file.Files.isDirectory(java.nio.file.Paths.get(s"$base/bronze/batch=1")))
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$base/bronze/batch=2")))
+  }
+
+  /** The q218 shape — keyed `pct` plus a monthly→quarterly down-convert —
+    * streamed from a MemoryStream with one add per micro-batch: 3 batches
+    * of 4 months for 2 keys. Returns the stopped query and the rows added.
+    */
+  private def bucketedStream(base: String)
+      : (org.apache.spark.sql.streaming.StreamingQuery, Int) = {
+    implicit val sql = spark.sqlContext
+    import spark.implicits._
+    val src = MemoryStream[(String, java.sql.Date, Double)]
+    val q = graft.streaming.FameStream.runIncremental(
+      src.toDF().toDF("NATION", "DATE", "REV"),
+      """freq m
+        |growth = pct(rev)
+        |rev_q = convert(rev, q, discrete, sum)""".stripMargin,
+      s"$base/bronze", s"$base/result", partitionKeys = Seq("NATION"),
+      checkpointDir = Some(s"$base/ckpt"))
+    val batches = (0 until 3).map(b =>
+      for (k <- Seq("FR", "DE"); m <- 1 to 4)
+        yield (k, d(f"1995-${4 * b + m}%02d-01"), (10 * b + m + k.head).toDouble))
+    try batches.foreach { b => src.addData(b: _*); q.processAllAvailable() }
+    finally q.stop()
+    (q, batches.map(_.size).sum)
+  }
+
+  /** Deliver every posted listener event before reading what listeners
+    * saw (the bus is asynchronous; its drain is Spark-internal, so it is
+    * reached by reflection).
+    */
+  private def drainListeners(): Unit = {
+    val sc = spark.sparkContext
+    val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+    bus.getClass.getMethod("waitUntilEmpty").invoke(bus): Unit
+  }
+
+  // SQL executions one bucketed micro-batch may run: the work leaf, the
+  // late check, the bronze, emit and carry writes, the carry leaf's
+  // shuffle stage, and foreachBatch's own. An eager action added to the
+  // batch has to raise this visibly.
+  private val bucketedBatchExecBudget = 7
+
+  test("incremental FAME per-batch budget: a micro-batch reads its source " +
+      "once and runs at most the budgeted SQL executions; every write runs " +
+      "under its own query's job group, named") {
+    import scala.jdk.CollectionConverters._
+    // a query before the measured one, so the measured query's writes run
+    // on pool threads another query created
+    bucketedStream(tmpDir("famebudget0").toString)
+    val execs = new java.util.concurrent.atomic.AtomicInteger
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit =
+        e match {
+          case _: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+            execs.incrementAndGet(): Unit
+          case _ =>
+        }
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(j.properties).foreach { p =>
+          jobs.add(String.valueOf(p.getProperty("spark.job.description")) ->
+            String.valueOf(p.getProperty("spark.jobGroup.id"))): Unit
+        }
+    }
+    drainListeners()
+    spark.sparkContext.addSparkListener(listener)
+    val (q, rowsAdded) =
+      try bucketedStream(tmpDir("famebudget").toString)
+      finally { drainListeners(); spark.sparkContext.removeSparkListener(listener) }
+    val batches = q.recentProgress.filter(_.numInputRows > 0)
+    assert(batches.length == 3)
+    assert(batches.map(_.numInputRows).sum == rowsAdded,
+      "every action over the micro-batch re-reads its source")
+    assert(execs.get <= batches.length * bucketedBatchExecBudget,
+      s"${execs.get} SQL executions over ${batches.length} batches")
+    val writes = jobs.asScala.toSeq.filter(_._1.startsWith("FameStream batch "))
+    assert(writes.map(_._1.split(": ").last).toSet ==
+      Set("bronze", "emit", "carry"), writes.toString)
+    assert(writes.forall(_._2 == q.runId.toString), writes.toString)
+  }
+
+  test("incremental FAME bucketed emit plans the FAME subplan once: one " +
+      "FullOuter convert-bridge join per down-convert statement") {
+    val joins = new java.util.concurrent.ConcurrentLinkedQueue[Int]
+    val aqe = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+        qe.analyzed.collectFirst {
+          case c: org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+              if c.outputPath.toString.contains("/result/batch=") => ()
+        }.foreach { _ =>
+          joins.add(aqe.collect(qe.executedPlan) {
+            case j: org.apache.spark.sql.execution.joins.BaseJoinExec
+                if j.joinType == org.apache.spark.sql.catalyst.plans.FullOuter => j
+          }.size): Unit
+        }
+      def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    drainListeners()
+    spark.listenerManager.register(listener)
+    try bucketedStream(tmpDir("famejoins").toString)
+    finally { drainListeners(); spark.listenerManager.unregister(listener) }
+    import scala.jdk.CollectionConverters._
+    assert(joins.asScala.toSeq == Seq(1, 1, 1))
   }
 }
