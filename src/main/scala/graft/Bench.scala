@@ -44,28 +44,16 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
-    // Engine session defaults (r21): the shuffle-writer choice
-    // (bypassMergeThreshold=1, guide §2.2 — see the rationale on
-    // SparkEntry.sessionDefaults) moved from a bench-only config into the
-    // engine defaults so production sessions get the same writer; the bench
-    // session applies the shared map, value unchanged from r20.
-    val builder0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-    val spark = SparkEntry.sessionDefaults.foldLeft(builder0) {
-      case (b, (k, v)) => b.config(k, v) }
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SparkEntry.session(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     spark.sparkContext.setLogLevel("WARN")
+    def loud(what: String, e: Throwable): Unit = System.err.println(
+      s"[bench] $what FAILED: ${e.getClass.getName}: ${Option(e.getMessage).getOrElse("").take(300)}")
     // warm the JVM (classloading, codegen, parquet reader) with one small
     // untimed query; per-query codegen is warmed by each query's own
     // untimed first run below
-    try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
+    try SparkEntry.entry(spark).count() catch { case e: Throwable => loud("warmup", e) }
     // dev-loop filter: comma-separated name substrings; unset (the
     // driver's mode) = run everything
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
@@ -95,10 +83,7 @@ object Bench {
           if (noopSink) df.write.mode("overwrite").format("noop").save()
           else df.count(): Unit
         }
-        catch { case e: Throwable =>
-          if (failed.add(name)) System.err.println(
-            s"[bench] $name FAILED: ${e.getClass.getName}: ${Option(e.getMessage).getOrElse("").take(300)}")
-        }
+        catch { case e: Throwable => if (failed.add(name)) loud(name, e) }
         (System.nanoTime() - t0) / 1e9
       }
     val firstPass = selected.map { case (name, fn) =>
@@ -221,14 +206,6 @@ object Bench {
     val passJson = passResults.map { case (t, la) =>
       s"""{"sec":${r3(t)},"load_avg":${r3(la)}}""" }.mkString("[", ",", "]")
     val loadNow = loadAvg()
-    println(s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$qs,"sf":"$sfDir","runs":$runs,"baseline_subset_sec":$bsTotalJson,"baseline_subset_n":${baselineSubset.size},"baseline_subset_median":$bsMedianJson,"subset_passes":$passJson,"load_avg":${r3(loadNow)}}""")
-    // Second, COMPACT summary line printed LAST: the per-query line above
-    // overflows the driver's stdout capture window (87 queries; rounds 6-7
-    // stored a truncated head and "parsed": null), and a tail-capture keeps
-    // whatever prints last. This line is ~120 bytes and carries everything
-    // the perf gate needs, so the machine-readable record no longer depends
-    // on where truncation lands. The full per-query map is also persisted to
-    // bench_queries.json in the cwd for post-hoc reads.
     val failedArr = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val noopTotalJson =
       if (noopResults.isEmpty) "null" else r3(noopResults.map(_._2).sum)
@@ -252,19 +229,12 @@ object Bench {
       }
       java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_SUMMARY.json"),
         (summary + "\n").getBytes("UTF-8"))
-    } catch { case _: Throwable => () }
-    println(summary)
-    // FINAL stdout line (r21 measurement-contract fix, VERDICT r20 item 1):
-    // the driver's perf gate parses the LAST stdout line as bare JSON and
-    // has read null for 20 rounds — the per-query "total" line printed
-    // first and the compact summary lacked the per-query map. This line
-    // merges everything the gate needs: the summary fields plus the
-    // per-query map under BOTH names the contract/gate use ("queries" per
-    // the bench contract, "per_query" per the PERF gate). Timing protocol,
-    // sinks, warmup and the two lines above are unchanged — this is purely
-    // where the already-measured numbers are printed. Paired with
-    // build.sbt's StdoutOutput/showSuccess=false so sbt neither prefixes
-    // "[info] " nor appends "[success] ..." after it.
+    } catch { case e: Throwable => loud("record-file write", e) }
+    // The ONE stdout line: the driver's perf gate parses the last stdout
+    // line as bare JSON — the summary fields plus the per-query map under
+    // both names the contract and the gate use ("queries", "per_query").
+    // Paired with build.sbt's StdoutOutput/showSuccess=false so sbt
+    // neither prefixes "[info] " nor appends "[success] ..." after it.
     val merged = summary.dropRight(1) +
       s""","queries":$qs,"per_query":$qs}"""
     println(merged)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.api.FameSession
@@ -12,16 +11,7 @@ import graft.api.FameSession
 object Demo {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkEntry.sessionDefaults.foldLeft(
-      SparkSession.builder()
-        .master("local[4]")
-        .appName("graft-demo")
-        .config("spark.sql.shuffle.partitions", "4")) {
-      case (b, (k, v)) => b.config(k, v) }
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SparkEntry.session(4, Map("spark.app.name" -> "graft-demo"))
     spark.sparkContext.setLogLevel("WARN")
 
     // monthly revenue + order count series from orders.parquet

@@ -339,12 +339,12 @@ object QueriesExt {
     * stays cell-exact. normText is materialized in its own projection:
     * inlining it into the charNgrams lambda would re-run the regex once
     * per gram. The set itself builds via [[TextOps.hashedNgramSet]] —
-    * the native one-pass `tri_hashes` kernel under GraftExtensions.
+    * the native one-pass `tri_hashes` kernel.
     */
   private def triFrame(s: SparkSession, dir: String): DataFrame =
     docs(s, dir)
       .select(col("doc_id"), TextOps.normText(col("text")).as("t"))
-      .select(col("doc_id"), TextOps.hashedNgramSet(s, col("t"), 3).as("g"))
+      .select(col("doc_id"), TextOps.hashedNgramSet(col("t"), 3).as("g"))
 
   /** (id1, id2, jaccard) between consecutive doc ids over a trigram
     * frame `d` — q21's body, shared with the q39/q50 edge builder.
@@ -4930,8 +4930,7 @@ object QueriesExt {
     // native ProductAgg the seeded fold is the SAME multiplication
     // sequence as the whole-history run (bit-exact — StreamingSpec
     // pins it); the gate compares at round(,8) on the q219 integer
-    // grid, the tier's documented tolerance (the exp∘sum∘log fallback
-    // re-associates ≤1 ulp per batch). Emission holds until the
+    // grid. Emission holds until the
     // nation's base year closes; after that every row is final on
     // arrival — the emitted set is whole keys, not year prefixes.
     "q222_fame_incremental_fishvol" -> ((s, dir) => {

@@ -1,59 +1,76 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 
-/** Scaling measurement harness (SCALING.md §6b): runs named queries
-  * against a fixture dir and reports, per query, wall time plus the
-  * MEMORY-PRESSURE metrics a wall clock can't see — total shuffle
-  * write/read bytes, peak single-stage shuffle write, and memory/disk
-  * spill — from a stage-level SparkListener. Wall-time sweeps showed
-  * the dedup family linear through 30×; this is the instrument for the
-  * 100× question "does it still fit, or does it start spilling?"
+/** Scaling and profiling probe (SCALING.md §6b): runs named queries
+  * against a fixture dir and reports, per query, wall time plus what a
+  * wall clock can't see, all from ONE SparkListener:
+  *  - memory pressure — total shuffle write/read bytes, peak
+  *    single-stage shuffle write, memory/disk spill (the 100× question
+  *    "does it still fit, or does it start spilling?");
+  *  - where the time went — `job_wall` (time at least one of the
+  *    query's Spark jobs was running; concurrent jobs count once),
+  *    `driver_gap` (wall − job_wall: planning, analysis and scheduling
+  *    while no job runs), and the query's `jobs`, `stages`,
+  *    `tasks` and cumulative `task_time_ms`. For a query whose data is
+  *    tiny the split tells whether to optimize the plan (executor) or
+  *    the per-query fixed cost (driver).
   *
-  * Usage: runMain graft.ScaleProbe <sfDir> <q1,q2,...> [runs]
-  * Emits one JSON line per query (min-wall run's metrics) and one
-  * `{"probe":"done"}` terminator. Measurement infrastructure, not a
-  * shipped operator — same standing as Bench.
+  * Usage:
+  *  - `runMain graft.ScaleProbe <sfDir> <q1,q2,...> [runs]` — one JSON
+  *    line per query (the min-wall run's metrics) and a
+  *    `{"probe":"done"}` terminator;
+  *  - `runMain graft.ScaleProbe plan <sfDir> <outDir> <tag> <q1,q2,...>`
+  *    — writes `.explain("formatted")` of each named query to
+  *    `<outDir>/<query>_<tag>.txt`. Streaming-harness queries (q185/q210/
+  *    q214+) execute a full stream inside their builder, so their
+  *    returned frame is the RESULT READBACK plan.
+  *
+  * `SPARK_GRAFT_CPUS` sets `local[N]` (default 32);
+  * `SPARK_GRAFT_EXTRA_CONF="k1=v1;k2=v2"` applies extra session confs
+  * (a partition-count or shuffle-writer A/B) without a code edit.
+  * Measurement infrastructure, not a shipped operator — same standing
+  * as Bench.
   */
 object ScaleProbe {
 
-  private class StageMetrics extends SparkListener {
-    @volatile var shuffleWrite = 0L
-    @volatile var shuffleRead = 0L
-    @volatile var peakStageWrite = 0L
-    @volatile var memorySpill = 0L
-    @volatile var diskSpill = 0L
-    // outstanding-job tracking for the deterministic drain below: the
-    // bus delivers events to a listener FIFO, so once this listener has
-    // seen JobEnd for every JobStart, all StageCompleted events of
-    // those jobs have already been accumulated.
-    private var outstanding = 0
-    override def onJobStart(e: SparkListenerJobStart): Unit =
-      synchronized { outstanding += 1 }
-    override def onJobEnd(e: SparkListenerJobEnd): Unit =
-      synchronized { outstanding -= 1; notifyAll() }
-    def outstandingJobs: Int = synchronized(outstanding)
+  private class ProbeMetrics extends SparkListener {
+    private var running = Set.empty[Int]
+    private var busySince = 0L
+    private var m = Map.empty[String, Long].withDefaultValue(0L)
+    private def add(k: String, v: Long): Unit = m = m.updated(k, m(k) + v)
+    override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
+      if (running.isEmpty) busySince = System.nanoTime()
+      running += e.jobId
+    }
+    override def onJobEnd(e: SparkListenerJobEnd): Unit = synchronized {
+      // only jobs whose start this run saw: a job that began before a
+      // reset() must not count
+      if (running.contains(e.jobId)) {
+        running -= e.jobId
+        add("jobs", 1)
+        if (running.isEmpty) add("job_wall_ns", System.nanoTime() - busySince)
+      }
+    }
     override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
       synchronized {
-        val m = e.stageInfo.taskMetrics
-        if (m != null) {
-          shuffleWrite += m.shuffleWriteMetrics.bytesWritten
-          shuffleRead += m.shuffleReadMetrics.totalBytesRead
-          peakStageWrite = math.max(peakStageWrite,
-            m.shuffleWriteMetrics.bytesWritten)
-          memorySpill += m.memoryBytesSpilled
-          diskSpill += m.diskBytesSpilled
+        add("stages", 1)
+        add("tasks", e.stageInfo.numTasks.toLong)
+        val t = e.stageInfo.taskMetrics
+        if (t != null) {
+          val w = t.shuffleWriteMetrics.bytesWritten
+          add("shuffle_write", w)
+          add("shuffle_read", t.shuffleReadMetrics.totalBytesRead)
+          m = m.updated("peak_stage_write", math.max(m("peak_stage_write"), w))
+          add("memory_spill", t.memoryBytesSpilled)
+          add("disk_spill", t.diskBytesSpilled)
+          add("task_time_ms", t.executorRunTime)
         }
       }
-    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = ()
-    def snapshot(): Map[String, Long] = synchronized(Map(
-      "shuffle_write" -> shuffleWrite, "shuffle_read" -> shuffleRead,
-      "peak_stage_write" -> peakStageWrite,
-      "memory_spill" -> memorySpill, "disk_spill" -> diskSpill))
+    def snapshot(): Map[String, Long] = synchronized(m)
     def reset(): Unit = synchronized {
-      shuffleWrite = 0L; shuffleRead = 0L; peakStageWrite = 0L
-      memorySpill = 0L; diskSpill = 0L
+      running = Set.empty; m = Map.empty[String, Long].withDefaultValue(0L)
     }
   }
 
@@ -166,7 +183,7 @@ object ScaleProbe {
     * exactly one micro-batch.
     */
   private def streamProbe(spark: SparkSession, sfDir: String, reps: Int,
-      listener: StageMetrics, drain: () => Unit,
+      listener: ProbeMetrics, drain: () => Unit,
       probe: String = "famestreamprobe",
       scriptOverride: Option[String] = None,
       wide: Boolean = false): Unit = {
@@ -255,68 +272,71 @@ object ScaleProbe {
   }
 
   def main(args: Array[String]): Unit = {
-    require(args.length >= 2, "usage: ScaleProbe <sfDir> <q1,q2,...> [runs]")
-    val sfDir = args(0)
-    val names = args(1).split(",").toSeq
-    val runs = if (args.length > 2) args(2).toInt else 2
+    val planMode = args.headOption.contains("plan")
+    if (planMode) require(args.length == 5,
+      "usage: ScaleProbe plan <sfDir> <outDir> <tag> <q1,q2,...>")
+    else require(args.length >= 2,
+      "usage: ScaleProbe <sfDir> <q1,q2,...> [runs]")
+    val extra = sys.env.get("SPARK_GRAFT_EXTRA_CONF").toSeq
+      .flatMap(_.split(";")).filter(_.contains("=")).map { kv =>
+        val Array(k, v) = kv.split("=", 2)
+        k.trim -> v.trim
+      }.toMap
+    val spark = SparkEntry.session(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt, extra)
+    spark.sparkContext.setLogLevel("WARN")
+    val reps = sys.env.getOrElse("SPARK_GRAFT_FAME_REPS", "100").toInt
+    val byName = SparkEntry.queries ++ fameProbes(reps)
+    if (planMode) {
+      val Array(_, sfDir, outDir, tag, list) = args
+      plans(spark, byName, sfDir, outDir, tag, list.split(",").toSeq)
+    } else probe(spark, byName, reps, args(0), args(1).split(",").toSeq,
+      if (args.length > 2) args(2).toInt else 2)
+    spark.stop()
+  }
+
+  private def plans(spark: SparkSession,
+      byName: Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame],
+      sfDir: String, outDir: String, tag: String, names: Seq[String]): Unit = {
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
+    names.foreach { name =>
+      val txt = byName(name)(spark, sfDir).queryExecution.explainString(
+        org.apache.spark.sql.execution.FormattedMode)
+      java.nio.file.Files.write(
+        java.nio.file.Paths.get(outDir, s"${name}_$tag.txt"),
+        (s"== $name @ $sfDir ($tag) ==\n" + txt).getBytes("UTF-8"))
+      println(s"dumped $name")
+    }
+  }
+
+  private def probe(spark: SparkSession,
+      byName: Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame],
+      reps: Int, sfDir: String, names: Seq[String], runs: Int): Unit = {
     // runs = 0 would leave best = (Double.MaxValue, empty) and print
     // garbage wall_sec JSON (r13 ADVICE) — the probe needs >= 1 timed run
     require(runs >= 1, s"ScaleProbe needs runs >= 1, got $runs")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkEntry.sessionDefaults.foldLeft(
-      SparkSession.builder()
-        .master(s"local[$cpus]")) { case (b, (k, v)) => b.config(k, v) }
-      // override to measure partition-count mitigations (e.g. the
-      // famebucketprobe spill row: more partitions = less join state
-      // per task, the knob a real cluster scales with keys)
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val reps = sys.env.getOrElse("SPARK_GRAFT_FAME_REPS", "100").toInt
-    val listener = new StageMetrics
+    val listener = new ProbeMetrics
     spark.sparkContext.addSparkListener(listener)
-    // Deterministic listener drain (replaces the old fixed
-    // Thread.sleep(300), which under load let stage-completed events
-    // land AFTER the snapshot and under-report shuffle/spill for the
-    // recorded min-wall run — r13 ADVICE). Primary: the listener bus's
-    // own waitUntilEmpty() (private[spark] = public in bytecode, so
-    // plain reflection reaches it) — after it returns, every posted
-    // event has been delivered to every listener. Fallback if the
-    // internals move: poll until no jobs are outstanding AND two
-    // consecutive snapshots agree.
-    val busWait: Option[(AnyRef, java.lang.reflect.Method)] =
-      try {
-        val sc = spark.sparkContext
-        val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-        Some((bus, bus.getClass.getMethod("waitUntilEmpty")))
-      } catch { case _: Throwable => None }
-    def drain(): Unit = busWait match {
-      case Some((bus, m)) => m.invoke(bus): Unit
-      case None =>
-        val deadline = System.nanoTime() + 30L * 1000000000L
-        var prev = listener.snapshot()
-        var stable = false
-        while (!stable && System.nanoTime() < deadline) {
-          Thread.sleep(150)
-          val cur = listener.snapshot()
-          stable = listener.outstandingJobs == 0 && cur == prev
-          prev = cur
-        }
+    // Deterministic listener drain: the listener bus's own
+    // waitUntilEmpty() (private[spark] = public in bytecode, so plain
+    // reflection reaches it) — after it returns, every posted event has
+    // been delivered to every listener, so the next snapshot holds the
+    // whole run (a fixed sleep let stage events land after the snapshot
+    // under load — r13 ADVICE).
+    val drain: () => Unit = {
+      val sc = spark.sparkContext
+      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+      val wait = bus.getClass.getMethod("waitUntilEmpty")
+      () => wait.invoke(bus): Unit
     }
-    val byName = SparkEntry.queries ++ fameProbes(reps)
     names.foreach { pat =>
       if (pat.startsWith("famestreamprobe")) {
-        streamProbe(spark, sfDir, reps, listener, () => drain())
+        streamProbe(spark, sfDir, reps, listener, drain)
       } else if (pat.startsWith("famebucketprobe")) {
         // the r16 bucket hold-back at entity scale: a keyed m→q
         // downsample (hold 2/key) plus a lag — the synthetic-anchor
         // cutoff window and the quarterly groupBy run per batch
-        streamProbe(spark, sfDir, reps, listener, () => drain(),
+        streamProbe(spark, sfDir, reps, listener, drain,
           probe = "famebucketprobe", scriptOverride = Some(
             """freq m
               |growth = pct(rev)
@@ -328,7 +348,7 @@ object ScaleProbe {
         // the open year's raw rows, and the question is whether the
         // state channel stays linear in keys while the raw carry stays
         // bounded by the open year
-        streamProbe(spark, sfDir, reps, listener, () => drain(),
+        streamProbe(spark, sfDir, reps, listener, drain,
           probe = "famechainprobe", scriptOverride = Some(
             """freq m
               |mom = pct(a)
@@ -339,7 +359,7 @@ object ScaleProbe {
         // open-ended rebase (two pin windows — base's 1995-H1 support
         // and the June-1995 lookup row — carried permanently per key)
         // plus one lead (1-row hold-back per key)
-        streamProbe(spark, sfDir, reps, listener, () => drain(),
+        streamProbe(spark, sfDir, reps, listener, drain,
           probe = "famepinprobe", scriptOverride = Some(
             """freq m
               |growth = pct(rev)
@@ -351,10 +371,10 @@ object ScaleProbe {
       val matches = byName.keys.filter(_.contains(pat)).toSeq.sorted
       matches.foreach { name =>
         // run 1 untimed warmup (codegen), then `runs` timed; report the
-        // min-wall run's stage metrics (listener reset per run)
+        // min-wall run's metrics (listener drained and reset per run)
         var best: (Double, Map[String, Long]) = (Double.MaxValue, Map.empty)
         (0 to runs).foreach { i =>
-          listener.reset()
+          drain(); listener.reset()
           val t0 = System.nanoTime()
           // noop sink, NOT count(): count() lets column pruning delete
           // the whole projection of a map-only query (a pure per-row
@@ -368,19 +388,22 @@ object ScaleProbe {
           val snap = listener.snapshot()
           if (i > 0 && wall < best._1) best = (wall, snap)
         }
-        val m = best._2
+        val (wall, m) = best
         def mb(k: String): String =
           "%.1f".formatLocal(java.util.Locale.US, m.getOrElse(k, 0L) / 1e6)
-        println(s"""{"query":"$name","sf":"$sfDir","wall_sec":${
-          "%.3f".formatLocal(java.util.Locale.US, best._1)
+        def sec(x: Double): String = "%.3f".formatLocal(java.util.Locale.US, x)
+        def n(k: String): Long = m.getOrElse(k, 0L)
+        val jobWall = n("job_wall_ns") / 1e9
+        println(s"""{"query":"$name","sf":"$sfDir","wall_sec":${sec(wall)
         },"shuffle_write_mb":${mb("shuffle_write")},"shuffle_read_mb":${
           mb("shuffle_read")},"peak_stage_write_mb":${mb("peak_stage_write")
         },"memory_spill_mb":${mb("memory_spill")},"disk_spill_mb":${
-          mb("disk_spill")}}""")
+          mb("disk_spill")},"job_wall":${sec(jobWall)},"driver_gap":${
+          sec(wall - jobWall)},"jobs":${n("jobs")},"stages":${n("stages")
+        },"tasks":${n("tasks")},"task_time_ms":${n("task_time_ms")}}""")
       }
       }
     }
     println("""{"probe":"done"}""")
-    spark.stop()
   }
 }

@@ -2,9 +2,9 @@ package graft
 import org.apache.spark.sql.{SparkSession, DataFrame}
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt. */
 object SparkEntry {
-  /** Engine session defaults — the single source every main (Bench, Verify,
-    * Demo, DebugOne, ScaleProbe, PlanDump) applies to its builder and the
-    * recommended production configuration.
+  /** Engine session defaults, applied by [[session]] (and by any harness
+    * that builds its own session) — the recommended production
+    * configuration.
     *
     * `spark.shuffle.sort.bypassMergeThreshold=1` (guide §2.2): with R reduce
     * partitions the bypass-merge writer creates R files PER MAP TASK (then
@@ -15,13 +15,43 @@ object SparkEntry {
     * (R > 200, any 100 TB layout) every shuffle already takes the sort path,
     * so the setting is a provable no-op there (ScaleProbe sf10 rows in
     * SCALING.md) and only rescues the small-R regime where per-file churn
-    * dominates. Lived only in Bench.scala in r20; homed here in r21 so the
-    * production session gets the same writer (VERDICT r20 item 2).
-    * Env-overridable: SPARK_GRAFT_SHUFFLE_BYPASS_THRESHOLD.
+    * dominates. An A/B against the Spark default goes through
+    * [[session]]'s `extra` map (ScaleProbe's `SPARK_GRAFT_EXTRA_CONF`).
     */
   def sessionDefaults: Map[String, String] = Map(
-    "spark.shuffle.sort.bypassMergeThreshold" ->
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_BYPASS_THRESHOLD", "1"))
+    "spark.shuffle.sort.bypassMergeThreshold" -> "1")
+
+  /** THE engine session: `local[cpus]` with `cpus` shuffle partitions,
+    * UTC, [[graft.plans.GraftExtensions]], nanosecond parquet timestamps
+    * read as longs, UI off, then [[sessionDefaults]], then `extra`.
+    *
+    * Every operator compiles to the native expressions the extension
+    * registers, with no builtin fallback, so the session is checked once
+    * here: `getOrCreate` hands back an already-running session unchanged
+    * (static confs such as `spark.sql.extensions` are ignored on reuse),
+    * and a session built elsewhere without the extension fails now, by
+    * name, instead of at the first query that needs a native function.
+    */
+  def session(cpus: Int, extra: Map[String, String] = Map.empty)
+      : SparkSession = {
+    val conf = Map(
+      "spark.sql.shuffle.partitions" -> cpus.toString,
+      "spark.sql.session.timeZone" -> "UTC",
+      "spark.sql.extensions" -> "graft.plans.GraftExtensions",
+      "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+      "spark.ui.enabled" -> "false") ++ sessionDefaults ++ extra
+    val spark = conf.foldLeft(SparkSession.builder().master(s"local[$cpus]")) {
+      case (b, (k, v)) => b.config(k, v) }.getOrCreate()
+    if (!spark.catalog.functionExists("product_agg"))
+      throw new IllegalStateException(
+        "graft.plans.GraftExtensions is missing from this SparkSession: " +
+        "the native functions (product_agg, md5_prefix32, ...) are not " +
+        "registered. A session created earlier without " +
+        "spark.sql.extensions=graft.plans.GraftExtensions was reused; " +
+        "stop it or build it with the extension.")
+    spark
+  }
+
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0:
     * a multi-operator FAME model over the monthly revenue series.
     */

@@ -6,17 +6,8 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkEntry.sessionDefaults.foldLeft(
-      SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)) {
-      case (b, (k, v)) => b.config(k, v) }
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SparkEntry.session(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     spark.sparkContext.setLogLevel("WARN")
     // dev-loop filter: comma-separated name substrings; unset (the
     // driver's mode) = dump everything

@@ -26,7 +26,8 @@ import graft.compile.ColumnCompiler.qcol
   *
   * Execution shape (scales): one `groupBy(year)` shuffle over (keys, year),
   * ordered window over the tiny per-key year table for the cumulative
-  * product (`exp(sum(log))`), then a broadcast join back to the fact rows.
+  * product (the native [[graft.plans.ProductAgg]]), then a broadcast join
+  * back to the fact rows.
   */
 object Indices {
 
@@ -34,19 +35,14 @@ object Indices {
     if (keys.isEmpty) Window.orderBy(orderCol)
     else Window.partitionBy(keys.map(col): _*).orderBy(orderCol)
 
-  /** Cumulative product of `c` over an ordered window. With the
-    * [[graft.plans.GraftExtensions]] extension installed this is the exact
-    * native [[graft.plans.ProductAgg]]; otherwise exp∘sum∘log (positive
-    * links only — fine for index links, which are guarded > 0 upstream).
+  /** Cumulative product of the positive values of `c` over an ordered
+    * window: the exact sequential native [[graft.plans.ProductAgg]]
+    * (index links are guarded > 0 upstream).
     */
-  def cumprod(df: DataFrame, c: Column,
-      w: org.apache.spark.sql.expressions.WindowSpec): Column = {
-    val frame = w.rowsBetween(Window.unboundedPreceding, 0)
-    if (Kernels.hasProductAgg(df))
-      call_function("product_agg", when(c > 0, c)).over(frame)
-    else
-      exp(sum(when(c > 0, log(c))).over(frame))
-  }
+  def cumprod(c: Column, w: org.apache.spark.sql.expressions.WindowSpec)
+      : Column =
+    call_function("product_agg", when(c > 0, c))
+      .over(w.rowsBetween(Window.unboundedPreceding, 0))
 
   /** Per-(keys, year) chain aggregates — the groupBy stage of
     * [[chainYearly]], exposed on its own because the incremental
@@ -84,10 +80,8 @@ object Indices {
     *                (seed ∪ fresh) — the same window fold over the same
     *                year rows as a whole-history run, so seeding changes
     *                no fp association (fishvol's per-row fold instead
-    *                seeds a running product — bit-exact only under the
-    *                sequential native ProductAgg, which is why its
-    *                incremental tier is the opt-in relaxedFp one; see
-    *                [[fishvolRaw]]).
+    *                seeds a running product, on the opt-in relaxedFp
+    *                incremental tier; see [[fishvolRaw]]).
     * @return frame `keys :+ __year :+ idxName` (one row per year) to join
     *         back on year.
     */
@@ -128,7 +122,7 @@ object Indices {
 
     val linked = yearly
       .withColumn("__f", fisher)
-      .withColumn("__raw", cumprod(yearly, col("__f"), w))
+      .withColumn("__raw", cumprod(col("__f"), w))
     // re-reference so base year = 100
     val baseW =
       if (keys.isEmpty) Window.partitionBy()
@@ -186,9 +180,8 @@ object Indices {
     *   lag predecessors); the FIRST row after it folds the seed into
     *   its link — `(seed × l_f) × l_{f+1} × …` — which under the
     *   sequential native ProductAgg is the SAME multiplication sequence
-    *   as the whole-history fold (bit-exact by induction; under the
-    *   exp∘sum∘log fallback it re-associates — the ≤1-ulp-per-batch
-    *   the relaxed tier's name concedes). The base average comes from
+    *   as the whole-history fold (bit-exact by induction;
+    *   IncrementalPropertySpec pins every cell). The base average comes from
     *   the carried state (it finalized, in-frame and whole, the batch
     *   the base year closed); keys absent from the seed run the plain
     *   whole-history path (their entire backlog is still in frame).
@@ -234,7 +227,7 @@ object Indices {
     // nest inside the running product's window function
     val withRaw = seeded
       .withColumn("__fv_link", foldLink)
-      .withColumn("__FV_RAW", cumprod(seeded, col("__fv_link"), w))
+      .withColumn("__FV_RAW", cumprod(col("__fv_link"), w))
       .drop("__fv_link")
     val baseW =
       if (keys.isEmpty) Window.partitionBy()

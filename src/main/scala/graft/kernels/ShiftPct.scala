@@ -23,7 +23,7 @@ import graft.compile.ColumnCompiler.qcol
   * of growth factors over `(t, anchor]` telescopes, but we keep the general
   * running-product form so a raw pct-change series also works:
   * newV_t = anchor / Π_{s ∈ (t, anchor]} f_s, computed as
-  * `exp(sum(log f) over (currentRow+1, unboundedFollowing))` restricted to
+  * `product_agg(f) over (currentRow+1, unboundedFollowing)` restricted to
   * the anchor range — one window pass for ALL pairs (no per-pair scan), no
   * descending re-sort, no repair join. Rows outside [start, anchor] keep
   * their existing value.
@@ -49,9 +49,7 @@ object ShiftPct {
     val inRange = startCond && col(dateCol) <= anchorLit
 
     // growth factor f_t = 1 + pct(p)_t / 100 = p_t / p_{t-1}; suffix
-    // product via the native ProductAgg when registered, exp∘sum∘log
-    // otherwise (see graft.plans.GraftExtensions)
-    val useProduct = Kernels.hasProductAgg(df)
+    // product via the native ProductAgg
     pairs.foldLeft(df) { case (acc, (tgt, p)) =>
       // qcol: dotted target/pct series names must read literally, not as
       // struct access (same class as the r17 q220 dotted-name find)
@@ -60,13 +58,8 @@ object ShiftPct {
           when(col(dateCol) <= anchorLit, qcol(p) / lag(qcol(p), 1).over(w)))
         .withColumn("__anchor",
           max(when(col(dateCol) === anchorLit, qcol(tgt))).over(everything))
-      val suffixProduct =
-        if (useProduct)
-          coalesce(call_function("product_agg",
-            when(col("__f") > 0, col("__f"))).over(suffix), lit(1.0))
-        else
-          exp(coalesce(sum(when(col("__f") > 0, log(col("__f"))))
-            .over(suffix), lit(0.0)))
+      val suffixProduct = coalesce(call_function("product_agg",
+        when(col("__f") > 0, col("__f"))).over(suffix), lit(1.0))
       stepped
         .withColumn(tgt,
           when(inRange, col("__anchor") / suffixProduct).otherwise(qcol(tgt)))

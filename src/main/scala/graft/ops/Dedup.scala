@@ -1349,8 +1349,7 @@ object Dedup {
     *
     * Scale shape: the whole per-doc pipeline — shingle hashing,
     * window-of-`window` minima over FULL windows only, per-doc dedup —
-    * runs as array higher-order functions INSIDE the scan projection
-    * (transform → slice/array_min → array_distinct), so no
+    * runs as one native expression INSIDE the scan projection, so no
     * character-level rows ever hit an exchange; only the surviving
     * fingerprints (~2/(window+1) of hashes, distinct per doc) explode.
     * The earlier doc-keyed-window formulation shuffled every character
@@ -1367,32 +1366,11 @@ object Dedup {
       minShared: Long = 2): DataFrame = {
     require(gram > 0 && window > 0 && minShared > 0)
     val norm = TextOps.normText(col(textCol))
-    val fpArr =
-      if (org.apache.spark.sql.SparkSession.getActiveSession
-          .exists(_.catalog.functionExists("winnow_fps")))
-        // native one-pass winnow (plans.WinnowFps): O(n) monotonic-deque
-        // window min, grams sliced from the UTF8 byte buffer, codegen'd
-        call_function("winnow_fps", norm, lit(gram), lit(window))
-      else {
-        // portable spelling, bit-identical (spec-pinned): hash array
-        // materialized ONCE per row — inlining it into the per-position
-        // lambda would re-hash the whole doc at every window start
-        // (O(n²) md5 calls — measured: hung); full windows only, the
-        // trailing <window-sized frames would re-sample suffix hashes
-        // already covered
-        val hs = transform(TextOps.charNgrams(norm, gram),
-          g => Sampling.md5Prefix32(g))
-        // null-propagate EXPLICITLY: the native expression is
-        // null-intolerant (null text → null), while size(null) = -1
-        // would route the bare spelling to the empty-array branch —
-        // the two paths must stay bit-identical on EVERY input,
-        // including null (spec-pinned in OpsSpec)
-        when(norm.isNull, lit(null).cast("array<long>"))
-          .otherwise(array_distinct(when(size(hs) >= window,
-            transform(sequence(lit(1), size(hs) - window + 1),
-              i => array_min(slice(hs, i, lit(window)))))
-            .otherwise(array().cast("array<long>"))))
-      }
+    // native one-pass winnow (plans.WinnowFps): O(n) monotonic-deque
+    // window min, grams sliced from the UTF8 byte buffer, codegen'd;
+    // bit-identical to the declarative md5Prefix32-array spelling,
+    // null text included (spec-pinned in OpsSpec)
+    val fpArr = call_function("winnow_fps", norm, lit(gram), lit(window))
     val hashed = df.select(col(idCol), fpArr.as("__fps"))
     // fps feeds the hot-df count AND the anti-join, with NO exchange
     // between scan and join for ReuseExchange to dedupe — without the

@@ -273,46 +273,26 @@ object Dsir {
     // covers the full 0..buckets-1 domain by construction)
     val lrArr = typedLit(
       (0L until m.buckets.toLong).map(m.lr4dp).toIndexedSeq)
-    scoreFromSum(gramStepSum(text, lrArr, m.buckets),
+    scoreFromSum(gramStepSum(text, lrArr),
       sn => sn._1.cast("double") / 1e4)
   }
 
   /** (step_sum, n_grams) of `text` against a dense weight-array literal —
     * the shared serving kernel of this scorer and
-    * [[QualityClassifier.scoreExpr]]. Uses the codegen'd native
-    * [[graft.plans.GramWsum]] when the session has GraftExtensions (one
-    * tight loop per row; guide §4.1) and falls back to the interpreted
-    * `aggregate` HOF otherwise — both produce identical longs (same gram
-    * strings, same md5 bucket arithmetic, exact long sums; SelectionSpec
-    * pins serve parity end to end).
+    * [[QualityClassifier.scoreExpr]]: the codegen'd native
+    * [[graft.plans.GramWsum]] (one tight loop per row; guide §4.1). Its
+    * longs equal the interpreted `aggregate` over [[gramsOf]] with
+    * [[gramBucket]] lookups (same gram strings, same md5 bucket
+    * arithmetic, exact long sums) — SelectionSpec pins the two, and
+    * serve parity end to end.
     */
-  private[ops] def gramStepSum(text: Column, wArr: Column,
-      buckets: Int): (Column, Column) = {
-    if (hasNativeGramWsum) {
-      val sn = call_function("gram_wsum", TextOps.tokens(text), wArr)
-      (element_at(sn, 1), element_at(sn, 2))
-    } else {
-      // ONE reference to the gram array: the step sum and the gram count
-      // accumulate together in a struct. Referencing `grams` once matters
-      // because every reference inlines the whole tokenizer chain into
-      // the (interpreted, HOF-bearing) projection — three references
-      // meant three regex normalizations per row.
-      val acc = aggregate(gramsOf(TextOps.tokens(text)),
-        struct(lit(0L).as("s"), lit(0L).as("n")),
-        (acc, g) => struct(
-          (acc.getField("s") + element_at(wArr,
-            (gramBucket(g, buckets) + 1).cast("int"))).as("s"),
-          (acc.getField("n") + lit(1L)).as("n")))
-      (acc.getField("s"), acc.getField("n"))
-    }
+  private[ops] def gramStepSum(text: Column, wArr: Column): (Column, Column) = {
+    val sn = call_function("gram_wsum", TextOps.tokens(text), wArr)
+    (element_at(sn, 1), element_at(sn, 2))
   }
 
   /** Null-for-featureless-docs guard shared by both serving scorers. */
   private[ops] def scoreFromSum(sn: (Column, Column),
       score: ((Column, Column)) => Column): Column =
     when(sn._2 > 0, score(sn))
-
-  private def hasNativeGramWsum: Boolean =
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .exists(_.catalog.functionExists("gram_wsum"))
 }

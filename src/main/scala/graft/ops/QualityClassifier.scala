@@ -156,12 +156,11 @@ object QualityClassifier {
     // dense-domain ARRAY literal, not a map literal: element_at on a
     // literal map linear-scans all `buckets` entries per gram (see train).
     // The gram walk itself is the shared serving kernel
-    // [[Dsir.gramStepSum]] — the codegen'd native gram_wsum when the
-    // session has GraftExtensions, the interpreted HOF otherwise (r21,
-    // guide §4.1; identical longs either way).
+    // [[Dsir.gramStepSum]] — the codegen'd native gram_wsum (r21,
+    // guide §4.1).
     val wArr = typedLit(
       (0L until m.buckets.toLong).map(m.w6dp).toIndexedSeq)
-    Dsir.scoreFromSum(Dsir.gramStepSum(text, wArr, m.buckets),
+    Dsir.scoreFromSum(Dsir.gramStepSum(text, wArr),
       sn => sigmoid(marginOf(m.bias6dp, sn._1, sn._2)))
   }
 }

@@ -22,37 +22,21 @@ object Sampling {
     * deterministic decision here and in [[Output]] derives from (oracles
     * must mirror this exact arithmetic; keep it in one place).
     *
-    * Uses the fused native [[graft.plans.Md5Prefix32]] expression when
-    * the session has `GraftExtensions` (one digest + 4-byte read; no
-    * per-row hex string) and falls back to the builtin md5/substr/conv
-    * chain otherwise. Both produce the identical value (spec-pinned),
-    * so oracles and recorded splits never depend on which path ran.
+    * The fused native [[graft.plans.Md5Prefix32]] expression (one
+    * digest + 4-byte read; no per-row hex string). Its value equals the
+    * builtin `conv(substr(md5(c), 1, 8), 16, 10)` chain any engine can
+    * replay (spec-pinned), so oracles never depend on the engine.
     */
   def md5Prefix32(c: Column): Column =
-    if (hasNativeMd5Prefix)
-      call_function("md5_prefix32", c.cast("string"))
-    else
-      conv(substr(md5(c.cast("string")), lit(1), lit(8)), 16, 10).cast("long")
-
-  private def hasNativeMd5Prefix: Boolean =
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .exists(_.catalog.functionExists("md5_prefix32"))
+    call_function("md5_prefix32", c.cast("string"))
 
   /** Digest bytes 4-7 of md5(`c`) as an unsigned 32-bit value — the
     * second word of the SAME digest [[md5Prefix32]] reads the first word
     * of. Oracle twin: `('0x' || substr(md5(t), 9, 8))::BIGINT`. The
-    * 64-bit SimHash's high half; independent of the first word, and free
-    * on the native path (one digest yields both).
+    * 64-bit SimHash's high half; independent of the first word.
     */
   def md5Second32(c: Column): Column =
-    if (hasNativeMd5Second)
-      call_function("md5_second32", c.cast("string"))
-    else
-      conv(substr(md5(c.cast("string")), lit(9), lit(8)), 16, 10).cast("long")
-
-  private def hasNativeMd5Second: Boolean =
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .exists(_.catalog.functionExists("md5_second32"))
+    call_function("md5_second32", c.cast("string"))
 
   /** Uniform [0, 1) hash of `key`: [[md5Prefix32]] scaled by 2⁻³².
     * Exact in double, so threshold comparisons are bit-reproducible

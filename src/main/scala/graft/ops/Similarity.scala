@@ -18,23 +18,14 @@ import org.apache.spark.sql.functions._
   */
 object Similarity {
 
-  /** Sequential-fold dot product of two equal-length numeric arrays.
-    * Uses the native fused [[graft.plans.DotProduct]] expression when the
-    * session has `GraftExtensions` (one multiply-add loop in codegen, no
-    * intermediate array); falls back to the builtin zip_with/aggregate
-    * spelling otherwise. Both are the same left-to-right fold, so results
-    * are bit-identical either way.
+  /** Sequential-fold dot product of two equal-length numeric arrays: the
+    * native fused [[graft.plans.DotProduct]] expression (one multiply-add
+    * loop in codegen, no intermediate array) — the same left-to-right
+    * fold as the builtin zip_with/aggregate spelling, bit for bit
+    * (spec-pinned).
     */
   def dot(a: Column, b: Column): Column =
-    if (hasNativeDot)
-      call_function("dot_product", a, b)
-    else
-      aggregate(zip_with(a.cast("array<double>"), b.cast("array<double>"),
-        (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
-
-  private def hasNativeDot: Boolean =
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .exists(_.catalog.functionExists("dot_product"))
+    call_function("dot_product", a, b)
 
   /** Cosine similarity (null on zero-norm input). */
   def cosine(a: Column, b: Column): Column =
@@ -585,27 +576,14 @@ object Similarity {
     * exact long squared distance from the query's j-th grid subvector
     * to codebook centroid c — so no query vector ever reaches the
     * driver (r19; the VERDICT-r18 "LUT build is the last driver data
-    * path on serve" item). Uses the native [[graft.plans.AdcLut]]
-    * expression when the session has GraftExtensions (one multiply-add
-    * loop; the builtin higher-order-function spelling below measured
-    * ~2.6 ms/row interpreted — 26 s of the 10⁴-query serve probe).
-    * Both spellings are the same exact long arithmetic the DuckDB
-    * oracle replays.
+    * path on serve" item). The native [[graft.plans.AdcLut]] expression
+    * (one multiply-add loop; the builtin higher-order-function spelling
+    * measured ~2.6 ms/row interpreted — 26 s of the 10⁴-query serve
+    * probe) computes the same exact long arithmetic the DuckDB oracle
+    * replays (spec-pinned against that spelling).
     */
-  private def adcLut(books: Seq[Seq[Array[Long]]], qg: Column,
-      sub: Int): Column = {
-    val booksLit = typedlit(books.map(_.map(_.toSeq)))
-    if (org.apache.spark.sql.SparkSession.getActiveSession
-        .exists(_.catalog.functionExists("adc_lut")))
-      call_function("adc_lut", qg, booksLit)
-    else
-      transform(booksLit, (book, j) =>
-        transform(book, cent =>
-          aggregate(
-            zip_with(slice(qg, j * lit(sub) + lit(1), lit(sub)), cent,
-              (x, y) => (x - y) * (x - y)),
-            lit(0L), (acc, x) => acc + x)))
-  }
+  private def adcLut(books: Seq[Seq[Array[Long]]], qg: Column): Column =
+    call_function("adc_lut", qg, typedlit(books.map(_.map(_.toSeq))))
 
   /** The serve path alone — (query_id, cand_id, rank, est_d2) without the
     * exact-grid witness columns. This is what runs at eval-set scale: the
@@ -617,8 +595,6 @@ object Similarity {
       vecCol: String, k: Int = 10, m: Int = 8, ksub: Int = 16,
       iters: Int = 2): DataFrame = {
     val (codes, books) = pqTrain(corpus, idCol, vecCol, m, ksub, iters)
-    val dim = vecDim(corpus, vecCol)
-    val sub = dim / m
     val v = col(vecCol).cast("array<double>")
     // serve via ONE broadcast-LUT join, not per-query plan branches: the
     // r17 shape folded a `codes.select` per query row with unionByName,
@@ -628,17 +604,17 @@ object Similarity {
     // flat crossJoin scores every (query, code) pair: plan size is
     // constant, serve cost linear, and the arithmetic is the same exact
     // long LUT lookups (element_at over the broadcast nested array).
-    // r19: the LUTs build IN-PLAN — `transform` over the codebook
+    // r19: the LUTs build IN-PLAN — [[adcLut]] over the codebook
     // LITERAL (m×ksub×sub grid longs, driver-sized like every codebook)
     // against each query's grid vector — so serve has no driver data
     // path at all (the r18 shape still collect()ed the query vectors to
     // compute the LUTs driver-side: a memory/CPU bottleneck at ≥10⁶
-    // queries). slice/zip_with/aggregate replay the exact same long
-    // subvector squared distances, so the oracle is unchanged.
+    // queries). The exact long subvector squared distances are the
+    // ones the oracle replays.
     val lutDf = queries
       .select(col(idCol).as("query_id"), toGrid(v).as("__qg"))
       .select(col("query_id"),
-        adcLut(books, col("__qg"), sub).as("__lut"))
+        adcLut(books, col("__qg")).as("__lut"))
     // join orientation (r19): STREAM the query/LUT side, BROADCAST the
     // codes — codes are the 64×-compressed side by design (4 B/vector;
     // a corpus whose codes outgrow broadcast belongs on [[ivfPqServe]]'s
@@ -729,8 +705,6 @@ object Similarity {
       pqTrain(resid, idCol, "__r", m, ksub, pqIters, preGrid = true)
     val coded = codes.join(resid.select(col(idCol), col("list_id")),
       Seq(idCol)).localCheckpoint(true)
-    val dim = coarse.headOption.map(_.length).getOrElse(0)
-    val sub = dim / m
     // same broadcast-LUT shape as [[pqTopK]] (r17 plan fan-out fix), with
     // probe routing folded into the join key: one LUT row per
     // (query, probed list) — |queries|·nprobe rows — equi-joined on
@@ -745,7 +719,7 @@ object Similarity {
     // coarse ranking reuses [[adcLut]] with the coarse centroids as a
     // single-subspace codebook (1×nlist×dim): one native loop yields the
     // query's exact distance to every list centroid
-    val coarseDists = element_at(adcLut(Seq(coarse), col("__qg"), dim), 1)
+    val coarseDists = element_at(adcLut(Seq(coarse), col("__qg")), 1)
     val probes = slice(array_sort(transform(coarseDists, (d, i) =>
       struct(d.as("d"), i.as("i")))), 1, nprobe)
     val lutDf = queries
@@ -757,7 +731,7 @@ object Similarity {
           element_at(centLit, col("__p").getField("i") + 1),
           (x, c) => x - c).as("__rq"))
       .select(col("query_id"), col("list_id"),
-        adcLut(books, col("__rq"), sub).as("__lut"))
+        adcLut(books, col("__rq")).as("__lut"))
     val est = coded.join(broadcast(lutDf), Seq("list_id"))
       .select(col("query_id"), col(idCol).as("cand_id"),
         (0 until m).map(j =>

@@ -293,13 +293,6 @@ object Sketches {
     * ([[kmvMerge]]), and merging per-partition sketches equals
     * sketching the union EXACTLY (the k smallest of A∪B all lie in the
     * k smallest of A ∪ the k smallest of B) — SketchSpec pins it.
-    *
-    * Distributed top-k shape: hashes are made distinct, pre-pruned to
-    * the k smallest per (group, hv mod 64) bucket — a window over
-    * 1/64th of each group's distinct set — then the survivors
-    * (≤ groups×64×k rows, whatever the corpus size) feed the final
-    * per-group rank. No group's full distinct set is ever sorted in one
-    * partition.
     */
   def kmvSketch(df: DataFrame, groupCols: Seq[String], item: Column,
       k: Int): DataFrame = {
@@ -314,27 +307,18 @@ object Sketches {
     // every distinct hash three times. Same rows out: the k smallest
     // distinct values are partitioning-independent and rank = ascending
     // position (ties impossible on a distinct set); SketchSpec pins the
-    // equivalence. Window fallback for sessions without GraftExtensions.
-    if (hasKmvTopK)
-      hashed.groupBy(g: _*)
-        .agg(call_function("kmv_topk", col("hv"), lit(k)).as("__hvs"))
-        .select(g :+ posexplode(col("__hvs")).as(Seq("__p", "hv")): _*)
-        .select(g ++ Seq(col("hv"), (col("__p") + 1).as("rank")): _*)
-    else {
-      val distinctHashed = hashed.distinct()
-      val wPre = Window.partitionBy(g :+ (col("hv") % 64).as("__b"): _*)
-        .orderBy("hv")
-      val pruned = distinctHashed.withColumn("__rn", row_number().over(wPre))
-        .where(col("__rn") <= k).drop("__rn")
-      val wFin = Window.partitionBy(g: _*).orderBy("hv")
-      pruned.withColumn("rank", row_number().over(wFin))
-        .where(col("rank") <= k)
-    }
+    // equivalence with the window form.
+    kmvTopK(hashed, g, k)
   }
 
-  private def hasKmvTopK: Boolean =
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .exists(_.catalog.functionExists("kmv_topk"))
+  /** The k smallest distinct `hv` per group as (g…, hv, rank): one
+    * [[graft.plans.KmvTopK]] aggregate, exploded with 1-based ranks.
+    */
+  private def kmvTopK(df: DataFrame, g: Seq[Column], k: Int): DataFrame =
+    df.groupBy(g: _*)
+      .agg(call_function("kmv_topk", col("hv"), lit(k)).as("__hvs"))
+      .select(g :+ posexplode(col("__hvs")).as(Seq("__p", "hv")): _*)
+      .select(g ++ Seq(col("hv"), (col("__p") + 1).as("rank")): _*)
 
   /** Merge two KMV sketches (same group columns): union the value
     * sets, drop duplicate values, keep the k smallest per group.
@@ -348,17 +332,7 @@ object Sketches {
     // same kmv_topk aggregate as [[kmvSketch]] (r21): dedup + k-smallest
     // + rank in one partial-aggregating exchange instead of
     // distinct + rank window (two)
-    if (hasKmvTopK)
-      uni.groupBy(g: _*)
-        .agg(call_function("kmv_topk", col("hv"), lit(k)).as("__hvs"))
-        .select(g :+ posexplode(col("__hvs")).as(Seq("__p", "hv")): _*)
-        .select(g ++ Seq(col("hv"), (col("__p") + 1).as("rank")): _*)
-    else {
-      val w = Window.partitionBy(g: _*).orderBy("hv")
-      uni.distinct()
-        .withColumn("rank", row_number().over(w))
-        .where(col("rank") <= k)
-    }
+    kmvTopK(uni, g, k)
   }
 
   /** Collapse a sketch to one row per group:

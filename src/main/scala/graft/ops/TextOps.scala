@@ -104,45 +104,16 @@ object TextOps {
           .as("chunk_text"))
   }
 
-  /** Array of character n-grams (positions 1..len-n+1) of the raw column. */
-  def charNgrams(c: Column, n: Int): Column =
-    when(length(c) >= n,
-      transform(sequence(lit(1), length(c) - n + 1), i => substr(c, i, lit(n))))
-      .otherwise(array())
-
   /** Distinct xxhash64'd char-n-gram set (first-occurrence order) — the
-    * near-dup edge pipelines' set representation. Uses the native
-    * one-pass `tri_hashes` kernel ([[graft.plans.TriHashes]]) when the
-    * session carries GraftExtensions — zero per-gram string allocation,
-    * measured 5x faster than the declarative spelling at sf0.1 — and
-    * falls back to the bit-identical declarative spelling otherwise.
-    * Both paths: null/short text → empty array (spec-pinned in OpsSpec).
-    *
-    * Pass `c` as a MATERIALIZED attribute, not a nested expression: the
-    * fallback's higher-order lambda re-evaluates a captured expression
-    * once per gram (measured 12 s vs 1.7 s on the sf0.1 corpus).
+    * near-dup edge pipelines' set representation, built by the native
+    * one-pass `tri_hashes` kernel ([[graft.plans.TriHashes]]): zero
+    * per-gram string allocation, measured 5x faster than the
+    * `array_distinct(transform(charNgrams, xxhash64))` spelling at sf0.1,
+    * and bit-identical to it (spec-pinned in OpsSpec). Null/short text
+    * → empty array.
     */
   def hashedNgramSet(c: Column, n: Int): Column =
-    if (org.apache.spark.sql.SparkSession.getActiveSession
-        .exists(_.catalog.functionExists("tri_hashes")))
-      call_function("tri_hashes", c, lit(n))
-    else
-      array_distinct(transform(charNgrams(c, n), g => xxhash64(g)))
-
-  /** [[hashedNgramSet]] with the native-vs-declarative choice resolved
-    * against an EXPLICIT session at plan time — prefer this from any
-    * caller that has the session in hand (triFrame does): the no-arg
-    * form consults `getActiveSession` at Column-construction time, so a
-    * Column built on a thread with no active session (or a different
-    * one than executes it) silently takes the slow declarative path.
-    * Both paths stay bit-identical; the choice is performance-only.
-    */
-  def hashedNgramSet(s: org.apache.spark.sql.SparkSession, c: Column,
-      n: Int): Column =
-    if (s.catalog.functionExists("tri_hashes"))
-      call_function("tri_hashes", c, lit(n))
-    else
-      array_distinct(transform(charNgrams(c, n), g => xxhash64(g)))
+    call_function("tri_hashes", c, lit(n))
 
   /** Fraction of tokens taken by the single most frequent token — the
     * Gopher-style "repetition" signal catching `spam spam spam…` pages.
@@ -476,9 +447,9 @@ object TextOps {
   def contentHash(c: Column): Column = xxhash64(normText(c))
 
   /** Cross-engine-reproducible content fingerprint: md5-prefix of the
-    * normalized text ([[Sampling.md5Prefix32]] — native fused expression
-    * under GraftExtensions, plain md5/substr/conv arithmetic any engine
-    * can replay). Use when the fingerprint value itself is the contract
+    * normalized text ([[Sampling.md5Prefix32]] — a native fused
+    * expression equal to the md5/substr/conv arithmetic any engine can
+    * replay). Use when the fingerprint value itself is the contract
     * (manifests, snapshots, oracles), [[contentHash]] when only equality
     * inside one engine matters.
     */
@@ -491,28 +462,16 @@ object TextOps {
     * [[Sampling.md5Prefix32]] so the value is engine-independent —
     * fingerprint files written today must verify on any engine tomorrow.
     *
-    * Uses the native one-pass `min_shingle_fp` kernel
-    * ([[graft.plans.MinShingleFp]]) when the session carries
-    * GraftExtensions: the declarative spelling materializes a per-row
-    * array of EVERY k-char shingle (O(chars) strings) plus one
-    * expression-level md5 per position before reducing to a single
-    * long — q30's 25.4 s noop-sink outlier (r14 verdict). Both paths
-    * are bit-identical (spec-pinned on random Unicode in OpsSpec).
+    * The native one-pass `min_shingle_fp` kernel
+    * ([[graft.plans.MinShingleFp]]): the declarative
+    * `array_min(transform(charNgrams, md5Prefix32))` spelling
+    * materializes a per-row array of EVERY k-char shingle (O(chars)
+    * strings) plus one expression-level md5 per position before reducing
+    * to a single long — q30's 25.4 s noop-sink outlier (r14 verdict).
+    * Both are bit-identical (spec-pinned on random Unicode in OpsSpec).
     */
   def minShingleFingerprint(c: Column, k: Int = 8): Column =
-    if (org.apache.spark.sql.SparkSession.getActiveSession
-        .exists(_.catalog.functionExists("min_shingle_fp")))
-      call_function("min_shingle_fp", normText(c), lit(k))
-    else
-      minShingleFingerprintDeclarative(c, k)
-
-  /** The builtin-only spelling of [[minShingleFingerprint]] — the
-    * cross-engine-reproducibility REFERENCE the native kernel is pinned
-    * against, and the fallback in sessions without GraftExtensions.
-    */
-  def minShingleFingerprintDeclarative(c: Column, k: Int = 8): Column =
-    array_min(transform(charNgrams(normText(c), k),
-      g => Sampling.md5Prefix32(g)))
+    call_function("min_shingle_fp", normText(c), lit(k))
 
   // --------------------------------------------------- compression ratio
 

@@ -26,7 +26,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * literal (m×ksub×sub — driver-sized like every ANN codebook). Null
   * semantics: null if the vector is null, its length isn't m·sub, or any
   * element is null (serve-path grid vectors are never element-null; the
-  * fallback spelling nulls per-entry instead, a difference no caller
+  * builtin spelling nulls per-entry instead, a difference no caller
   * observes).
   */
 case class AdcLut(left: Expression, right: Expression)

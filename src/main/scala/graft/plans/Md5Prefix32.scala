@@ -16,9 +16,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * re-validates it end-to-end since Verify runs with GraftExtensions).
   *
   * Registered as `md5_prefix32(str)` by [[GraftExtensions]];
-  * `Sampling.md5Prefix32` uses it when the session has the extensions
-  * and falls back to the builtin chain otherwise (the
-  * [[graft.ops.Similarity.dot]] pattern).
+  * `Sampling.md5Prefix32` calls it.
   */
 case class Md5Prefix32(child: Expression) extends UnaryExpression {
 

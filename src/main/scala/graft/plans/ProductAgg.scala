@@ -51,9 +51,10 @@ case class ProductAgg(child: Expression)
 }
 
 /** Session extension registering the graft native functions; install with
-  * `.config("spark.sql.extensions", "graft.plans.GraftExtensions")`.
-  * Kernels probe for `product_agg` and fall back to `exp(sum(ln))` in
-  * sessions without the extension.
+  * `.config("spark.sql.extensions", "graft.plans.GraftExtensions")`
+  * ([[graft.SparkEntry.session]] does, and checks it). The kernels and
+  * operators call these functions directly — there is no builtin
+  * fallback, so a session without the extension fails at analysis.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {

@@ -26,7 +26,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * corpus pass inside one scan projection like [[WinnowFps]].
   *
   * `gram` must be a foldable positive int. Null text → EMPTY ARRAY
-  * (matching the declarative fallback — the [[WinnowFps]] null-contract
+  * (matching the declarative spelling — the [[WinnowFps]] null-contract
   * lesson, pinned in OpsSpec).
   */
 case class TriHashes(left: Expression, right: Expression)

@@ -200,10 +200,9 @@ object FameStream {
     * shift-pct (anti-causal — it recurses backward from the series END,
     * so every row's value changes whenever the end advances);
     * fishvol ON THE BIT-EXACT TIERS (its cumulative product is a
-    * per-ROW fold — seeding it batch-wise re-associates the
-    * exp∘sum∘log fallback, and carrying the rows would be O(history);
-    * the r18 OPT-IN relaxed-fp tier accepts it, bit-exact under the
-    * native ProductAgg — see [[FishvolSpec]]); nlrx (a global
+    * per-ROW fold that only the r18 OPT-IN relaxed-fp tier seeds
+    * batch-wise — see [[FishvolSpec]]; carrying the rows instead would
+    * be O(history)); nlrx (a global
     * smoother — every output depends on every input); up-conversions
     * (interpolation reads the NEXT observation, unboundedly far
     * ahead); open-START masks and plain-assign lookups (affected rows
@@ -319,12 +318,12 @@ object FameStream {
     * key, the Fisher prefix product at the newest emitted row plus the
     * closed base-year average ([[graft.kernels.Indices.fishvolRaw]]
     * seed schema), and every batch's kernel run continues the fold
-    * from the seed. Under the sequential native ProductAgg the seeded
-    * fold performs the SAME multiplication sequence as the
-    * whole-history run (bit-exact by induction); under the
-    * exp∘sum∘log fallback the seed injection re-associates the fold —
-    * ≤ 1 ulp per batch boundary — which is why this tier is opt-in and
-    * the bit-exact default keeps refusing fishvol. Emission holds
+    * from the seed. The sequential native ProductAgg makes the seeded
+    * fold the SAME multiplication sequence as the whole-history run
+    * (bit-exact by induction; IncrementalPropertySpec checks every
+    * cell). The bit-exact default tiers still refuse fishvol: lifting
+    * that refusal is the emission-cutoff composition work, and the
+    * refusal is pinned as a fence test until then. Emission holds
     * until the key's base year closes (before that the rebase
     * denominator, hence EVERY index value, would still move); after
     * the close each row's index is final on arrival.
@@ -1189,18 +1188,14 @@ object FameStream {
             }
           // fishvol is refused on the BIT-EXACT tiers: its cumulative
           // product is a per-ROW left fold (raw_t = raw_{t-1} × link_t
-          // over the row-level window) — seeding it batch-wise with a
-          // carried scalar re-associates the exp∘sum∘log fallback fold,
-          // so batch outputs could not bit-equal the snapshot kernel
-          // there; carrying the rows instead would be O(history). Chain
-          // escapes this because its fold runs over the YEAR table
-          // (1 row per key-year), cheap enough to carry whole and
-          // recompute exactly. The RELAXED-FP tier (r18, opt-in via
-          // runIncremental(relaxedFp = true)) accepts it: the executor
-          // carries the per-key prefix product + closed base average
-          // and the seeded fold is bit-exact under the sequential
-          // native ProductAgg, ≤ 1 ulp per batch under the fallback
-          // (see [[FishvolSpec]]).
+          // over the row-level window), which only the RELAXED-FP tier
+          // (r18, opt-in via runIncremental(relaxedFp = true)) seeds
+          // batch-wise with a carried scalar — the per-key prefix
+          // product + closed base average, bit-exact under the
+          // sequential native ProductAgg (see [[FishvolSpec]]); carrying
+          // the rows instead would be O(history). Chain escapes this
+          // because its fold runs over the YEAR table (1 row per
+          // key-year), cheap enough to carry whole and recompute.
           case FishvolAssign(t, vs, ps, baseYear) =>
             val srcs = (vs ++ ps).distinct
             if (!relaxedFp)

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -18,6 +18,23 @@ class OpsSpec extends SparkSpec {
       new java.util.ArrayList[Row](scala.jdk.CollectionConverters
         .SeqHasAsJava(rows.map { case (i, t) => Row(i, t) }).asJava), schema)
   }
+
+  // ---- builtin-only reference spellings the native text kernels
+  // (tri_hashes, winnow_fps, min_shingle_fp) are pinned against
+
+  /** Array of character n-grams (positions 1..len-n+1) of the raw column. */
+  private def charNgrams(c: Column, n: Int): Column =
+    when(length(c) >= n,
+      transform(sequence(lit(1), length(c) - n + 1), i => substr(c, i, lit(n))))
+      .otherwise(array())
+
+  /** The builtin-only spelling of [[TextOps.minShingleFingerprint]] — the
+    * cross-engine-reproducibility reference the native kernel is pinned
+    * against.
+    */
+  private def minShingleFingerprintDeclarative(c: Column, k: Int): Column =
+    array_min(transform(charNgrams(TextOps.normText(c), k),
+      g => graft.ops.Sampling.md5Prefix32(g)))
 
   test("exact dedup keeps min id and counts the group") {
     val df = docFrame(
@@ -1671,9 +1688,9 @@ class OpsSpec extends SparkSpec {
       .toDF("doc_id", "text")
     val gram = 8; val window = 4
     val norm = TextOps.normText(col("text"))
-    val hs = transform(TextOps.charNgrams(norm, gram),
+    val hs = transform(charNgrams(norm, gram),
       g => graft.ops.Sampling.md5Prefix32(g))
-    // the winnowingPairs fallback spelling, INCLUDING its explicit null
+    // the portable winnowing spelling, INCLUDING its explicit null
     // propagation (size(null) = -1 would otherwise route null text to
     // the empty-array branch while the native expression returns null)
     val portable = when(norm.isNull, lit(null).cast("array<long>"))
@@ -1723,7 +1740,7 @@ class OpsSpec extends SparkSpec {
         .select(col("doc_id"), TextOps.normText(col("text")).as("t"))
         .select(col("doc_id"),
           call_function("tri_hashes", col("t"), lit(gram)).as("native"),
-          array_distinct(transform(TextOps.charNgrams(col("t"), gram),
+          array_distinct(transform(charNgrams(col("t"), gram),
             g => xxhash64(g))).as("decl"))
         .orderBy("doc_id").collect()
       rows.foreach { r =>
@@ -1785,7 +1802,7 @@ class OpsSpec extends SparkSpec {
       val rows = df.select(col("doc_id"),
           call_function("min_shingle_fp",
             TextOps.normText(col("text")), lit(gram)).as("native"),
-          TextOps.minShingleFingerprintDeclarative(col("text"), gram)
+          minShingleFingerprintDeclarative(col("text"), gram)
             .as("decl"))
         .orderBy("doc_id").collect()
       rows.foreach { r =>
@@ -1804,7 +1821,7 @@ class OpsSpec extends SparkSpec {
     // GraftExtensions and keeps the same value
     val viaOps = df.select(col("doc_id"),
         TextOps.minShingleFingerprint(col("text"), 8).as("fp"),
-        TextOps.minShingleFingerprintDeclarative(col("text"), 8).as("ref"))
+        minShingleFingerprintDeclarative(col("text"), 8).as("ref"))
       .collect()
     viaOps.foreach { r =>
       assert(r.isNullAt(1) == r.isNullAt(2) &&

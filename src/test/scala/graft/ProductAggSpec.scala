@@ -168,4 +168,64 @@ class ProductAggSpec extends SparkSpec {
     assert(graft.ops.Sampling.md5Second32(col("s")).toString
       .toLowerCase.contains("md5_second32"))
   }
+
+  test("adc_lut matches the nested transform/zip_with spelling bit-for-bit") {
+    val rnd = new scala.util.Random(4242)
+    val (m, ksub, sub) = (4, 8, 3)
+    val books = Seq.fill(m, ksub, sub)(rnd.nextInt(2001).toLong - 1000L)
+    val booksLit = typedlit(books)
+    val vecs = Seq.fill(60)(Seq.fill(m * sub)(
+      Long.box(rnd.nextInt(200001).toLong - 100000L))) :+ null
+    val d = spark.createDataFrame(
+      new java.util.ArrayList[Row](scala.jdk.CollectionConverters
+        .SeqHasAsJava(vecs.zipWithIndex.map { case (v, i) => Row(i, v) })
+        .asJava),
+      StructType(Seq(StructField("i", IntegerType),
+        StructField("qg", ArrayType(LongType)))))
+    val qg = col("qg")
+    val builtin = transform(booksLit, (book, j) =>
+      transform(book, cent =>
+        aggregate(
+          zip_with(slice(qg, j * lit(sub) + lit(1), lit(sub)), cent,
+            (x, y) => (x - y) * (x - y)),
+          lit(0L), (acc, x) => acc + x)))
+    val out = d.orderBy("i").select(
+      call_function("adc_lut", qg, booksLit).as("native"),
+      builtin.as("builtin")).collect()
+    def table(r: Row, i: Int) =
+      r.getSeq[scala.collection.Seq[Any]](i).map(_.toSeq)
+    out.init.foreach { r =>
+      val native = table(r, 0)
+      assert(native.length == m && native.forall(_.length == ksub))
+      assert(native == table(r, 1), s"mismatch: $r")
+    }
+    // null vector: the native table is null; the builtin spelling nulls
+    // every entry instead (no serve path sees a null grid vector)
+    assert(out.last.isNullAt(0))
+    assert(table(out.last, 1).flatten.forall(_ == null))
+  }
+
+  test("operators built on a thread with no active session still compile " +
+      "to the native expressions") {
+    import spark.implicits._
+    var built: Seq[org.apache.spark.sql.Column] = Nil
+    var hadSession = true
+    val t = new Thread(() => {
+      org.apache.spark.sql.SparkSession.clearActiveSession()
+      hadSession = org.apache.spark.sql.SparkSession.getActiveSession.nonEmpty
+      built = Seq(
+        graft.ops.Sampling.md5Prefix32(col("s")).as("h"),
+        graft.ops.Similarity.dot(col("a"), col("b")).as("d"),
+        graft.ops.TextOps.minShingleFingerprint(col("s"), 3).as("f"))
+    })
+    t.start(); t.join()
+    assert(!hadSession && built.length == 3)
+    val q = Seq(("hello world", Seq(1.0, 2.0), Seq(3.0, 4.0)))
+      .toDF("s", "a", "b").select(built: _*)
+    val plan = q.queryExecution.analyzed.toString.toLowerCase
+    Seq("md5_prefix32", "dot_product", "min_shingle_fp").foreach { f =>
+      assert(plan.contains(f), s"$f missing from the analyzed plan:\n$plan")
+    }
+    assert(q.collect()(0).getDouble(1) == 11.0)
+  }
 }

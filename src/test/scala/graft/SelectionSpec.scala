@@ -137,6 +137,53 @@ class SelectionSpec extends SparkSpec {
     }
   }
 
+  test("gram_wsum equals the interpreted aggregate gram-bucket spelling " +
+      "on random text, incl. empty and null") {
+    val rnd = new scala.util.Random(2718)
+    val buckets = 64
+    val wArr = typedLit(
+      Seq.fill(buckets)(rnd.nextInt(200001).toLong - 100000L))
+    val vocab = Seq("the", "a", "Data", "data,", "x", "ünïcode", "日本語",
+      "😀", "", " ", "\t", "quick", "fox")
+    val texts = Seq.fill(80)(Seq.fill(rnd.nextInt(25))(
+        vocab(rnd.nextInt(vocab.size))).mkString(" ")) ++
+      Seq("", "   ", "solo", "two tokens", null)
+    val df = docFrame(texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }: _*)
+      .select(col("doc_id"), graft.ops.TextOps.tokens(col("text")).as("t"))
+    val toks = col("t")
+    // the interpreted serving spelling: unigrams + strict word bigrams,
+    // one md5 bucket lookup per gram, step sum and gram count together
+    val grams = concat(toks,
+      filter(
+        zip_with(toks, slice(toks, lit(2), greatest(size(toks) - 1, lit(0))),
+          (a, b) => concat(a, lit(" "), b)),
+        g => g.isNotNull))
+    val acc = aggregate(grams,
+      struct(lit(0L).as("s"), lit(0L).as("n")),
+      (acc, g) => struct(
+        (acc.getField("s") + element_at(wArr,
+          (Dsir.gramBucket(g, buckets) + 1).cast("int"))).as("s"),
+        (acc.getField("n") + lit(1L)).as("n")))
+    val sn = call_function("gram_wsum", toks, wArr)
+    val rows = df.select(col("doc_id"),
+        element_at(sn, 1).as("s"), element_at(sn, 2).as("n"),
+        acc.getField("s").as("ref_s"), acc.getField("n").as("ref_n"))
+      .orderBy("doc_id").collect()
+    def opt(r: Row, i: Int): Option[Long] =
+      if (r.isNullAt(i)) None else Some(r.getLong(i))
+    rows.foreach { r =>
+      assert((opt(r, 1), opt(r, 2)) == (opt(r, 3), opt(r, 4)),
+        s"doc ${r.getLong(0)} '${texts(r.getLong(0).toInt)}': native " +
+          s"(${opt(r, 1)}, ${opt(r, 2)}) != reference (${opt(r, 3)}, ${opt(r, 4)})")
+    }
+    val tail = rows.takeRight(5)
+    // empty and whitespace-only text: no grams; null text: null
+    assert(opt(tail(0), 2).contains(0L) && opt(tail(1), 2).contains(0L))
+    assert(opt(tail(2), 2).contains(1L) && opt(tail(3), 2).contains(3L))
+    assert(tail(4).isNullAt(1) && tail(4).isNullAt(2) && tail(4).isNullAt(3))
+    assert(rows.count(r => opt(r, 2).exists(_ > 0)) > 60)
+  }
+
   test("DSIR ranks target-like docs above off-target docs") {
     val target = (1 to 20).map(i =>
       (100L + i) -> "alpha beta gamma delta epsilon zeta")

@@ -9,15 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared local SparkSession for all suites (one JVM, fast). */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = SparkEntry.session(4, Map("spark.app.name" -> "graft-test"))
     s.sparkContext.setLogLevel("ERROR")
     s
   }
