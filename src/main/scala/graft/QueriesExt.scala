@@ -4921,18 +4921,17 @@ object QueriesExt {
         .orderBy("nation", "date")
     }),
 
-    // RELAXED-FP INCREMENTAL FISHVOL (r18, r17 verdict task 5): the
-    // per-row Fisher fold streams under the OPT-IN relaxed tier
-    // (runIncremental(relaxedFp = true)) — the executor carries, per
-    // nation, the prefix product at the newest emitted row plus the
-    // base average finalized the batch the base year closed, and each
-    // batch's kernel continues the fold from the seed. Under the
-    // native ProductAgg the seeded fold is the SAME multiplication
-    // sequence as the whole-history run (bit-exact — StreamingSpec
-    // pins it); the gate compares at round(,8) on the q219 integer
-    // grid. Emission holds until the
-    // nation's base year closes; after that every row is final on
-    // arrival — the emitted set is whole keys, not year prefixes.
+    // INCREMENTAL FISHVOL (r18, r17 verdict task 5): the per-row
+    // Fisher fold streams through runIncremental — the executor
+    // carries, per nation, the prefix product at the newest emitted
+    // row plus the base average finalized the batch the base year
+    // closed, and each batch's kernel continues the fold from the
+    // seed. Under the native ProductAgg the seeded fold is the SAME
+    // multiplication sequence as the whole-history run (bit-exact —
+    // StreamingSpec pins it); the gate compares at round(,8) on the
+    // q219 integer grid. Emission holds until the nation's base year
+    // closes; after that every row is final on arrival — the emitted
+    // set is whole keys, not year prefixes.
     "q222_fame_incremental_fishvol" -> ((s, dir) => {
       val base = scratch("q222")
       val fs = org.apache.hadoop.fs.FileSystem.get(
@@ -4951,8 +4950,7 @@ object QueriesExt {
           |x = fishvol_rebase({a,b},{pa,pb},1996)""".stripMargin,
         s"$base/bronze", s"$base/result",
         partitionKeys = Seq("NATION"),
-        checkpointDir = Some(s"$base/ckpt"),
-        relaxedFp = true)
+        checkpointDir = Some(s"$base/ckpt"))
       try q.processAllAvailable() finally q.stop()
       s.read.parquet(s"$base/result")
         .select(col("NATION").as("nation"), col("DATE").as("date"),
@@ -4962,14 +4960,14 @@ object QueriesExt {
     }),
 
     // ANCHORED INCREMENTAL SHIFT_PCT (r19, r18 verdict task 4): the
-    // backward level reconstruction streams on the BIT-EXACT default
-    // tier when its date mask has a FIXED end — the anchor is then a
-    // constant date, every factor a window row needs lives on rows
-    // ≤ anchor, and the executor holds [start, anchor] back until the
-    // key's frontier passes the anchor, flushing the window whole in
-    // ONE in-frame computation. There is never a cross-batch fp fold
-    // (stronger than the verdict's requested relaxed-fp tier: the
-    // flush batch's suffix product multiplies exactly the
+    // backward level reconstruction streams BIT-exactly through
+    // runIncremental when its date mask has a FIXED end — the anchor
+    // is then a constant date, every factor a window row needs lives
+    // on rows ≤ anchor, and the executor holds [start, anchor] back
+    // until the key's frontier passes the anchor, flushing the window
+    // whole in ONE in-frame computation. There is never a cross-batch
+    // fp fold
+    // (the flush batch's suffix product multiplies exactly the
     // whole-history factor sequence — rows outside the window
     // contribute null factors to both). The open/default-anchor form
     // keeps its named refusal: a moving anchor would revise emitted

@@ -72,7 +72,7 @@ object FameSession {
     *                    frame alone. Empty (the default) = historical
     *                    behavior for every batch caller.
     * @param fishvolSeed per-fishvol-target carried state for the
-    *                    relaxed-fp incremental tier
+    *                    incremental streaming executor
     *                    ([[Indices.fishvolRaw]] seed schema: prefix
     *                    product at the newest emitted row + the closed
     *                    base-year average, one row per key). Empty
@@ -468,7 +468,9 @@ object FameSession {
         rv <- staticFold(r, scalars).collect { case d: Double => d }
         v <- op match {
           case "+" => Some(lv + rv); case "-" => Some(lv - rv)
-          case "*" => Some(lv * rv); case "/" => Some(lv / rv)
+          case "*" => Some(lv * rv)
+          // division by zero is NC, as in the compiled `/`
+          case "/" => Some(if (rv == 0) null else lv / rv)
           case _ => None
         }
       } yield v

@@ -135,7 +135,9 @@ object ColumnCompiler {
         case "+"  => cl + cr
         case "-"  => cl - cr
         case "*"  => cl * cr
-        case "/"  => cl / cr
+        // FAME division by zero is NC (missing): try_divide is null on a
+        // zero divisor where ANSI `/` fails the job, and stays strict
+        case "/"  => try_divide(cl, cr)
         case "eq" => cl === cr
         case "ne" => cl =!= cr
         case "gt" => cl > cr
@@ -167,7 +169,7 @@ object ColumnCompiler {
         val k = args.lift(1).collect { case Num(v) => v.toInt }.getOrElse(1)
         val cur = at(args.head, o, ctx)
         val prev = at(args.head, o - k, ctx)
-        (cur - prev) / prev * lit(100.0)
+        try_divide(cur - prev, prev) * lit(100.0)
       case "diff" =>
         val k = args.lift(1).collect { case Num(v) => v.toInt }.getOrElse(1)
         at(args.head, o, ctx) - at(args.head, o - k, ctx)

@@ -80,8 +80,8 @@ object Indices {
     *                (seed ∪ fresh) — the same window fold over the same
     *                year rows as a whole-history run, so seeding changes
     *                no fp association (fishvol's per-row fold instead
-    *                seeds a running product, on the opt-in relaxedFp
-    *                incremental tier; see [[fishvolRaw]]).
+    *                seeds a running product in the incremental
+    *                executor; see [[fishvolRaw]]).
     * @return frame `keys :+ __year :+ idxName` (one row per year) to join
     *         back on year.
     */
@@ -173,8 +173,8 @@ object Indices {
     * its carried state — the prefix product at the newest emitted row
     * and the closed base average — from the SAME plan the kernel uses.
     *
-    * @param seed per-key carried state (the relaxed-fp incremental
-    *   tier): `keys :+ __FV_SEED :+ __FV_SEED_DATE :+ __FV_BAVG_ST`.
+    * @param seed per-key carried state (the incremental executor):
+    *   `keys :+ __FV_SEED :+ __FV_SEED_DATE :+ __FV_BAVG_ST`.
     *   Rows dated ≤ the key's seed date get a null raw (they were
     *   emitted by earlier batches; the work frame holds them only as
     *   lag predecessors); the FIRST row after it folds the seed into

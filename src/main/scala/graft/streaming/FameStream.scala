@@ -58,30 +58,26 @@ object FameStream {
         }
       })
 
-  /** Execution mode for [[run]]: `Auto` (default) consults
-    * [[incrementalEligibility]] and routes forward-only scripts to the
-    * O(batch) incremental evaluator, everything else to the O(history)
-    * snapshot recompute; `Snapshot` / `Incremental` force a path.
-    * Force `Snapshot` when ingest is NOT nondecreasing-date-ordered per
-    * key — the incremental path's contract (late rows need the
-    * recompute form to revise already-emitted output).
+  /** Execution mode for [[run]]: `Auto` (default) routes a script
+    * whose [[incrementalPlan]] emits every row on arrival
+    * ([[IncrementalPlan.emitsOnArrival]]) to the O(batch) incremental
+    * evaluator and everything else to the O(history) snapshot
+    * recompute; `Snapshot` forces the recompute. Force `Snapshot` when
+    * ingest is NOT nondecreasing-date-ordered per key — the incremental
+    * path's contract (late rows need the recompute form to revise
+    * already-emitted output).
     *
-    * Lead-bearing scripts (`v[t+k]`, bounded forward reach —
-    * [[incrementalReach]]) run incrementally under HOLD-BACK emission,
-    * but ONLY on explicit opt-in (`Incremental`, or [[runIncremental]]
-    * directly): hold-back WITHHOLDS each key's newest `maxLead` rows
-    * until their lookahead arrives, while the snapshot emits them
-    * immediately with null leads — a different output contract, so
-    * `Auto` deliberately keeps routing lead scripts to the snapshot
-    * rather than silently trimming the frontier rows. PIN-bearing
-    * lead-free scripts (open-ended-mask fixed reads —
-    * [[incrementalPlan]]) emit exactly what the snapshot would, so
-    * `Auto` does route them incrementally.
+    * A plan that WITHHOLDS rows — leads, bucketed converts, chain,
+    * fishvol or shift_pct hold-back — emits a different row set per
+    * batch than the snapshot (which emits every row at once, with null
+    * leads and unfinished buckets), so `Auto` keeps those on the
+    * snapshot path; call [[runIncremental]] directly to opt in. Pins
+    * change the carry, not the output, so pin-bearing plans do route
+    * incrementally.
     */
   sealed trait Mode
-  case object Auto        extends Mode
-  case object Snapshot    extends Mode
-  case object Incremental extends Mode
+  case object Auto     extends Mode
+  case object Snapshot extends Mode
 
   /** Thrown (inside the stream; surfaces as the cause of the query's
     * StreamingQueryException) when a micro-batch on the incremental
@@ -98,11 +94,10 @@ object FameStream {
     * stops it). `stream` must carry the same columns a batch
     * [[FameSession.run]] input would (dateCol + series columns).
     *
-    * The single user-facing entry (VERDICT r11 task 3): `mode = Auto`
-    * dispatches on [[incrementalEligibility]] — an eligible
-    * (bounded-backward-reach) script runs [[runIncremental]], an
-    * ineligible one falls back to the snapshot recompute below — so
-    * callers no longer need to know which evaluator fits their script.
+    * The single user-facing entry: `mode = Auto` runs a script whose
+    * plan emits on arrival through [[runIncremental]] and falls back to
+    * the snapshot recompute below otherwise — so callers need not know
+    * which evaluator fits their script.
     * NOTE the result layouts differ: incremental appends
     * `resultDir/batch=<id>` subdirs (plus a synthetic `batch` partition
     * column on read), snapshot overwrites a flat gold snapshot; both
@@ -115,21 +110,8 @@ object FameStream {
       businessCal: BusinessCalendar = BusinessCalendar.WeekdaysOnly,
       checkpointDir: Option[String] = None,
       mode: Mode = Auto): StreamingQuery = {
-    val incremental = mode match {
-      case Incremental => true
-      case Snapshot    => false
-      case Auto        =>
-        // pin-bearing lead-FREE scripts emit exactly what the snapshot
-        // emits (pins change the carry, not the output), so Auto routes
-        // them incrementally; lead scripts (maxLead > 0) WITHHOLD the
-        // frontier rows, and chain scripts (r17) withhold the whole
-        // open year — different output contracts — so Auto keeps both
-        // on the snapshot path unless the caller opts in
-        incrementalPlan(script, partitionKeys.nonEmpty,
-          Some(stream.columns.toSet))
-          .exists(p => p.maxLead == 0 && p.chains.isEmpty)
-    }
-    if (incremental)
+    if (mode == Auto && incrementalPlan(script, Some(stream.columns.toSet))
+        .exists(_.emitsOnArrival))
       return runIncremental(stream, script, bronzeDir, resultDir, dateCol,
         partitionKeys, nlrx, businessCal, checkpointDir)
     val spark = stream.sparkSession
@@ -149,68 +131,186 @@ object FameStream {
     }.start()
   }
 
-  /** Append-only eligibility analysis over the parsed script:
-    * `Right(maxLag)` when every statement can be evaluated over only the
-    * arriving rows plus a carried `maxLag`-row-per-key history tail, or
-    * `Left(reason)` naming the first disqualifying construct.
+  /** One permanently-carried window of input rows: every row whose
+    * date falls in [start, end], PLUS — when the read series is
+    * DERIVED with nonzero recorded reach — the `prec` physical rows
+    * immediately preceding the window's first row and the `foll`
+    * physical rows immediately following its last row, per key.
     *
-    * A statement is eligible when its value at row t depends only on
-    * rows ≤ t at bounded distance: arithmetic/conditionals/lsum (row-
-    * local), date masks and point-in-time assigns (functions of the
-    * row's own date), backward lags `v[t−k]` / `pct` / `diff`
-    * (bounded reach k, ACCUMULATED through nesting — `pct(v[t-2], 3)`
-    * reaches 5 back). Disqualifiers: leads `v[t+k]` with positive NET
-    * offset (the value isn't known when the row is emitted) — and
-    * deliberately ALSO net-backward compositions through a derived
-    * series (`a = rev[t-3]; b = a[t+1]` reads rev[t−2] in VALUE terms,
-    * but the compiled plan is `lag(a, −1)`, which reads through the
-    * next PHYSICAL row; at a batch edge that row hasn't arrived, so
-    * batch parity breaks — the frontier test in StreamingSpec carries
-    * the counterexample; interval arithmetic that cancelled offsets
-    * would be unsound against this executor), whole-
-    * series functions (`ave`, `firstvalue`, `lastvalue`, `dateof` —
-    * their value changes as history grows; EXCEPT, since r15, over a
-    * BOUNDED-SUPPORT series under a closed horizon — see the
-    * whole-series case in `reach`, which needs `inputColumns` to know
-    * a masked target had nothing to preserve), history lookups
-    * `v[scalar]` / `v["date"]` (unbounded reach), every kernel
-    * statement (convert re-buckets history, shift-pct recurses
-    * backward from the END of the series, chain/fishvol/nlrx are
-    * whole-series solves), and scalars derived from series data (their
-    * value is a moving target). The reach arithmetic mirrors
-    * [[graft.compile.ColumnCompiler]]'s offset composition
-    * (`callAt`: pct/diff evaluate their argument at `o` and `o−k`).
+    * prec/foll are ROW counts, not periods, because the engine
+    * evaluates lags/leads as physical row offsets over the key's
+    * ordered frame (ColumnCompiler `lag(col, k)`): with per-key date
+    * gaps the physical predecessor a pinned value depends on can sit
+    * arbitrarily many PERIODS before the window — a date-widened
+    * window under-pins there (r16's shipped form; the r17 fix), while
+    * rank adjacency is gap-proof. The rank selection is stable across
+    * batches: the carried predecessors stay physically adjacent to the
+    * window inside every later work frame (nothing between them and
+    * the window ever existed), so re-selecting "the prec rows before
+    * the window's first row" re-selects exactly them.
+    */
+  final case class Pin(start: java.time.LocalDate,
+      end: java.time.LocalDate, prec: Int, foll: Int)
+
+  /** A statement whose rows emit under its own per-key gate, on top of
+    * the generic lead hold-back: [[ChainSpec]], [[FishvolSpec]] or
+    * [[ShiftPctSpec]]. [[runIncremental]] ANDs the specs' gates into one
+    * emission gate; chain and fishvol also carry versioned state.
+    */
+  sealed trait HoldBack { def target: String }
+
+  /** An annually-linked `$chain` statement (r17), run under YEAR
+    * hold-back — a row emits only once its calendar year has CLOSED for
+    * its key (a later-year row arrived; in-order ingest proves no more
+    * rows of the year can follow) AND every chain's base year has
+    * closed (the rebase denominator is final; before that every index
+    * value would still move). Closed years' aggregate rows
+    * ([[graft.kernels.Indices.yearlyAggs]] — 1 row per key per year)
+    * are carried as versioned derived state and seeded back into the
+    * kernel, so each batch recomputes the full link/cumprod/rebase
+    * pipeline over the COMPLETE year table without carrying O(history)
+    * raw rows. The honest latency trade: up to one year of hold-back
+    * (q218's bucket argument with span = periods-per-year).
+    */
+  final case class ChainSpec(target: String, terms: Seq[(Int, String)],
+      baseYear: Int) extends HoldBack
+
+  /** A `fishvol_rebase` statement (r18): the executor carries, per key,
+    * the Fisher prefix product at the newest emitted row plus the
+    * closed base-year average ([[graft.kernels.Indices.fishvolRaw]]
+    * seed schema), and every batch's kernel run continues the fold
+    * from the seed. The sequential native ProductAgg makes the seeded
+    * fold the SAME multiplication sequence as the whole-history run
+    * (bit-exact by induction; IncrementalPropertySpec checks every
+    * cell). Emission holds until the key's base year closes (before
+    * that the rebase denominator, hence EVERY index value, would still
+    * move); after the close each row's index is final on arrival.
+    */
+  final case class FishvolSpec(target: String, volumes: Seq[String],
+      prices: Seq[String], baseYear: Int) extends HoldBack
+
+  /** A backward `shift_pct` statement whose date mask has a FIXED end
+    * (the anchor): rows inside [start, anchor] reconstruct from the
+    * anchor value and the suffix product of growth factors in
+    * (t, anchor] — ALL of which live on rows dated ≤ anchor — so the
+    * executor holds the window back until the key's frontier passes the
+    * anchor and then flushes it whole. At the flush every window row is
+    * in frame and the kernel's suffix product multiplies the SAME factor
+    * sequence the whole-history run multiplies (rows outside the window
+    * contribute null factors, skipped by both), so emitted values are
+    * BIT-exact under either product spelling — there is never a
+    * cross-batch fp fold. State is the un-flushed window's raw rows:
+    * bounded by the FIXED mask span (the chain pre-base-backlog
+    * argument), dropping to the generic tail forever after the flush.
+    * The open/default-anchor form (`to *` or no mask) keeps its named
+    * refusal — its anchor is the moving series end, so already-emitted
+    * rows would be revised by every batch.
+    */
+  final case class ShiftPctSpec(target: String, pctSeries: String,
+      start: Option[java.time.LocalDate], anchor: java.time.LocalDate)
+      extends HoldBack
+
+  /** What [[runIncremental]] needs to evaluate a script: carry the last
+    * `maxLag + maxLead` input rows per key, emit a row once `maxLead`
+    * rows after it have arrived, and keep every input row a `pins`
+    * entry selects in the carry PERMANENTLY (per key, flagged emitted)
+    * — those windows hold the fixed targets of open-ended-mask reads
+    * (`set <date A to *> x = … v["d"] …`, whole-series over bounded
+    * support), whose values are constants once their rows arrive but
+    * sit arbitrarily far behind the frontier, beyond any bounded tail.
     *
-    * This is the STRICTEST of three analysis tiers, the one whose
-    * `Right` means "emit every row the batch it arrives, tail only":
+    * `bucketed` marks a script with at least one convert. A
+    * DOWN-conversion makes the executor also emit the SYNTHETIC
+    * bucket-anchor rows the convert bridge's full-outer join creates
+    * for buckets whose anchor date has no input row, gated by per-key
+    * emission cutoffs (once per anchor, only after the bucket closes),
+    * and carry one extra row per key so the previous cutoff is always
+    * recoverable from the carry; an UP-conversion's synthetic tail past
+    * the frontier pends behind the same cutoffs.
     *
-    *  - [[incrementalEligibility]] (this): lag-only; refuses anything
-    *    needing delayed emission or extra carry.
-    *  - [[incrementalReach]] (r16): + bounded LEADS, evaluated by
-    *    hold-back emission (each key's newest maxLead rows pend).
-    *  - [[incrementalPlan]] (r16, what [[runIncremental]] uses): + PINS
-    *    (open-ended-mask fixed reads carried permanently) and BUCKETED
-    *    down-conversions (span−1 hold + synthetic-anchor emission).
-    *    `run(Auto)` routes on this tier when maxLead == 0 (identical
-    *    output contract to the snapshot) and falls back to the snapshot
-    *    for lead/bucket scripts (hold-back trims the frontier — an
-    *    explicit opt-in).
+    * `chains`, `fishvols` and `shiftPcts` are the [[HoldBack]]
+    * statements, each with its own emission gate.
+    */
+  final case class IncrementalPlan(maxLead: Int, maxLag: Int,
+      pins: Seq[Pin], bucketed: Boolean = false,
+      chains: Seq[ChainSpec] = Nil,
+      fishvols: Seq[FishvolSpec] = Nil,
+      shiftPcts: Seq[ShiftPctSpec] = Nil) {
+    def holdBacks: Seq[HoldBack] = chains ++ fishvols ++ shiftPcts
+
+    /** Every row emits the batch it arrives — the snapshot's output
+      * contract. Pins change the carry, not the output, so they do not
+      * count; leads, buckets and hold-back statements withhold rows.
+      */
+    def emitsOnArrival: Boolean =
+      maxLead == 0 && !bucketed && holdBacks.isEmpty
+  }
+
+  /** Upper bound on source rows per target-frequency bucket — the
+    * hold-back distance a down-conversion needs (an overestimate only
+    * delays emission, never corrupts it). None = not a downsample this
+    * analysis accepts.
+    */
+  private def bucketSpan(src: Frequency, tgt: Frequency): Option[Int] =
+    (src, tgt) match {
+      case (Frequency.Monthly, Frequency.Quarterly)   => Some(3)
+      case (Frequency.Monthly, Frequency.Annual)      => Some(12)
+      case (Frequency.Quarterly, Frequency.Annual)    => Some(4)
+      case (Frequency.Weekly(_), Frequency.Monthly)   => Some(5)
+      case (Frequency.Weekly(_), Frequency.Quarterly) => Some(14)
+      case (Frequency.Weekly(_), Frequency.Annual)    => Some(53)
+      case (Frequency.Daily | Frequency.Business, Frequency.Weekly(_)) =>
+        Some(7)
+      case (Frequency.Daily | Frequency.Business, Frequency.Monthly) =>
+        Some(31)
+      case (Frequency.Daily | Frequency.Business, Frequency.Quarterly) =>
+        Some(92)
+      case (Frequency.Daily | Frequency.Business, Frequency.Annual) =>
+        Some(366)
+      case _ => None
+    }
+
+  /** The incremental analysis of a parsed script: `Right(plan)` when
+    * every statement can be evaluated over the arriving rows plus a
+    * bounded carry under per-key emission cutoffs — the
+    * [[IncrementalPlan]] [[runIncremental]] executes — or
+    * `Left(reason)` naming the first construct that cannot.
     *
-    * Still refused at EVERY tier, with the reasoning on record:
-    * shift-pct (anti-causal — it recurses backward from the series END,
-    * so every row's value changes whenever the end advances);
-    * fishvol ON THE BIT-EXACT TIERS (its cumulative product is a
-    * per-ROW fold that only the r18 OPT-IN relaxed-fp tier seeds
-    * batch-wise — see [[FishvolSpec]]; carrying the rows instead would
-    * be O(history)); nlrx (a global
-    * smoother — every output depends on every input); up-conversions
-    * (interpolation reads the NEXT observation, unboundedly far
-    * ahead); open-START masks and plain-assign lookups (affected rows
-    * PRECEDE the read target — a forward read no carry policy can
-    * satisfy); and series-derived scalars (moving targets). CHAIN
-    * (r17) is accepted at the PLAN tier only: its per-YEAR fold is
-    * cheap to carry whole as derived state, and rows run under year
-    * hold-back (see [[ChainSpec]]).
+    * A statement's value at row t may depend on rows at BOUNDED
+    * distance: arithmetic/conditionals/lsum (row-local), date masks and
+    * point-in-time assigns (functions of the row's own date), backward
+    * lags `v[t−k]` / `pct` / `diff` (reach k, ACCUMULATED through
+    * nesting — `pct(v[t-2], 3)` reaches 5 back) and leads `v[t+k]`. The
+    * reach arithmetic mirrors [[graft.compile.ColumnCompiler]]'s offset
+    * composition (`callAt`: pct/diff evaluate their argument at `o` and
+    * `o−k`). The plan composes one term per machinery:
+    *
+    *  - backward reach → `maxLag`, the carried tail;
+    *  - forward reach → `maxLead`, HOLD-BACK emission: each key's newest
+    *    maxLead rows pend until their lookahead arrives. A lead through
+    *    a derived series counts even when its NET offset is backward
+    *    (`a = rev[t-3]; b = a[t+1]` reads rev[t−2] in VALUE terms, but
+    *    the compiled plan is `lag(a, −1)`, which reads through the next
+    *    PHYSICAL row — at a batch edge that row hasn't arrived; the
+    *    frontier test in StreamingSpec carries the counterexample);
+    *  - fixed reads under an OPEN-ENDED mask (`set <date A to *>` with
+    *    the read target entirely before A) → `pins`: no tail reach, the
+    *    target rows are carried permanently;
+    *  - converts → `bucketed`, emitted by per-key date cutoffs;
+    *  - chain / fishvol / fixed-anchor shift_pct → their [[HoldBack]]
+    *    specs, each with its own gate and carried state.
+    *
+    * Refused, with the reasoning on record: open-anchor shift_pct (it
+    * recurses backward from the series END, so every row's value
+    * changes whenever the end advances); nlrx (a global smoother —
+    * every output depends on every input); open-START masks and
+    * plain-assign lookups (affected rows PRECEDE the read target — a
+    * forward read no carry policy can satisfy); whole-series functions
+    * (`ave`, `firstvalue`, `lastvalue`, `dateof`) and series-derived
+    * scalars over UNBOUNDED support (their value moves as history
+    * grows); leads inside whole-series functions and in a hold-back
+    * statement's sources; and two hold-back statements of different
+    * kinds in one script (each stream runs under one kind of cutoff).
     *
     * Reach is TRANSITIVE through derived series: in
     * `a = pct(rev); b = pct(a)`, `b` at row t reads `a[t−1]` which
@@ -238,202 +338,25 @@ object FameStream {
     *    d ≤ A the read reaches at most `periods(d → B)` back (d inside
     *    the mask would be a forward read for rows before d — refused).
     *
+    * Whole-series functions over a BOUNDED-SUPPORT series (r15) follow
+    * the same arithmetic with the support start as the date — see the
+    * whole-series case in `reach`, which needs `inputColumns` to know a
+    * masked target had nothing to preserve.
+    *
     * Period distance is CEILED per the session frequency (an over-long
     * tail is sound — it only carries extra rows; a short one silently
     * nulls the lookup); business frequency uses calendar days, an
     * overestimate of business-day rows. Lookups need a `freq` already
     * declared.
     *
-    * Since r16 the `partitioned` flag adds NO extra refusals: the
-    * executor materializes keyed lookups as per-key columns
-    * (FameSession.materializeKeyedLookups) and compiles whole-series
-    * functions to key-partitioned windows, so every eligible shape is
-    * eligible keyed with the same maxLag, per key. The parameter stays
-    * for call-site stability and for any future keyed-only hazard.
-    */
-  def incrementalEligibility(script: String,
-      partitioned: Boolean = false,
-      inputColumns: Option[Set[String]] = None): Either[String, Int] =
-    reachAnalysis(script, partitioned, inputColumns,
-      allowLeads = false, allowPins = false).map(_.maxLag)
-
-  /** One permanently-carried window of input rows: every row whose
-    * date falls in [start, end], PLUS — when the read series is
-    * DERIVED with nonzero recorded reach — the `prec` physical rows
-    * immediately preceding the window's first row and the `foll`
-    * physical rows immediately following its last row, per key.
-    *
-    * prec/foll are ROW counts, not periods, because the engine
-    * evaluates lags/leads as physical row offsets over the key's
-    * ordered frame (ColumnCompiler `lag(col, k)`): with per-key date
-    * gaps the physical predecessor a pinned value depends on can sit
-    * arbitrarily many PERIODS before the window — a date-widened
-    * window under-pins there (r16's shipped form; the r17 fix), while
-    * rank adjacency is gap-proof. The rank selection is stable across
-    * batches: the carried predecessors stay physically adjacent to the
-    * window inside every later work frame (nothing between them and
-    * the window ever existed), so re-selecting "the prec rows before
-    * the window's first row" re-selects exactly them.
-    */
-  final case class Pin(start: java.time.LocalDate,
-      end: java.time.LocalDate, prec: Int, foll: Int)
-
-  /** What [[runIncremental]] needs to evaluate an eligible script:
-    * carry the last `maxLag + maxLead` input rows per key, emit a row
-    * once `maxLead` rows after it have arrived, and keep every input
-    * row a `pins` entry selects in the carry PERMANENTLY (per key,
-    * flagged emitted) — those windows hold the fixed targets of
-    * open-ended-mask reads (`set <date A to *> x = … v["d"] …`,
-    * whole-series over bounded support), whose values are constants
-    * once their rows arrive but sit arbitrarily far behind the
-    * frontier, beyond any bounded tail.
-    *
-    * `bucketed` marks a script with at least one DOWN-conversion
-    * (`convert(src, coarser, …)`): the executor then also emits the
-    * SYNTHETIC bucket-anchor rows the convert bridge's full-outer join
-    * creates for buckets whose anchor date has no input row, gated by
-    * per-key emission cutoffs (once per anchor, only after the bucket
-    * closes), and carries one extra row per key so the previous cutoff
-    * is always recoverable from the carry.
-    *
-    * `chains` (r17) lists the script's annually-linked `$chain`
-    * statements: the executor then runs under YEAR hold-back — a row
-    * emits only once its calendar year has CLOSED for its key (a
-    * later-year row arrived; in-order ingest proves no more rows of the
-    * year can follow) AND every chain's base year has closed (the
-    * rebase denominator is final; before that every index value would
-    * still move). Closed years' aggregate rows ([[graft.kernels
-    * .Indices.yearlyAggs]] — 1 row per key per year) are carried as
-    * versioned derived state and seeded back into the kernel, so each
-    * batch recomputes the full link/cumprod/rebase pipeline over the
-    * COMPLETE year table without carrying O(history) raw rows. The
-    * honest latency trade: up to one year of hold-back (q218's bucket
-    * argument with span = periods-per-year).
-    */
-  final case class ChainSpec(target: String, terms: Seq[(Int, String)],
-      baseYear: Int)
-
-  /** A `fishvol_rebase` statement accepted on the RELAXED-FP
-    * incremental tier (`relaxedFp = true`): the executor carries, per
-    * key, the Fisher prefix product at the newest emitted row plus the
-    * closed base-year average ([[graft.kernels.Indices.fishvolRaw]]
-    * seed schema), and every batch's kernel run continues the fold
-    * from the seed. The sequential native ProductAgg makes the seeded
-    * fold the SAME multiplication sequence as the whole-history run
-    * (bit-exact by induction; IncrementalPropertySpec checks every
-    * cell). The bit-exact default tiers still refuse fishvol: lifting
-    * that refusal is the emission-cutoff composition work, and the
-    * refusal is pinned as a fence test until then. Emission holds
-    * until the key's base year closes (before that the rebase
-    * denominator, hence EVERY index value, would still move); after
-    * the close each row's index is final on arrival.
-    */
-  final case class FishvolSpec(target: String, volumes: Seq[String],
-      prices: Seq[String], baseYear: Int)
-
-  /** A backward `shift_pct` statement accepted on the incremental plan
-    * tier when its date mask has a FIXED end (the anchor): rows inside
-    * [start, anchor] reconstruct from the anchor value and the suffix
-    * product of growth factors in (t, anchor] — ALL of which live on
-    * rows dated ≤ anchor — so the executor holds the window back until
-    * the key's frontier passes the anchor and then flushes it whole.
-    * At the flush every window row is in frame and the kernel's suffix
-    * product multiplies the SAME factor sequence the whole-history run
-    * multiplies (rows outside the window contribute null factors,
-    * skipped by both), so emitted values are BIT-exact under either
-    * product spelling — there is never a cross-batch fp fold, which is
-    * why this statement lands on the bit-exact default tier even
-    * though fishvol's per-row forward fold needs the relaxed tier.
-    * State is the un-flushed window's raw rows: bounded by the FIXED
-    * mask span (the chain pre-base-backlog argument), dropping to the
-    * generic tail forever after the flush. The open/default-anchor
-    * form (`to *` or no mask) keeps its named refusal on every tier —
-    * its anchor is the moving series end, so already-emitted rows
-    * would be revised by every batch.
-    */
-  final case class ShiftPctSpec(target: String, pctSeries: String,
-      start: Option[java.time.LocalDate], anchor: java.time.LocalDate)
-
-  final case class IncrementalPlan(maxLead: Int, maxLag: Int,
-      pins: Seq[Pin], bucketed: Boolean = false,
-      chains: Seq[ChainSpec] = Nil,
-      fishvols: Seq[FishvolSpec] = Nil,
-      shiftPcts: Seq[ShiftPctSpec] = Nil)
-
-  /** Upper bound on source rows per target-frequency bucket — the
-    * hold-back distance a down-conversion needs (an overestimate only
-    * delays emission, never corrupts it). None = not a downsample this
-    * analysis accepts.
-    */
-  private def bucketSpan(src: Frequency, tgt: Frequency): Option[Int] =
-    (src, tgt) match {
-      case (Frequency.Monthly, Frequency.Quarterly)   => Some(3)
-      case (Frequency.Monthly, Frequency.Annual)      => Some(12)
-      case (Frequency.Quarterly, Frequency.Annual)    => Some(4)
-      case (Frequency.Weekly(_), Frequency.Monthly)   => Some(5)
-      case (Frequency.Weekly(_), Frequency.Quarterly) => Some(14)
-      case (Frequency.Weekly(_), Frequency.Annual)    => Some(53)
-      case (Frequency.Daily | Frequency.Business, Frequency.Weekly(_)) =>
-        Some(7)
-      case (Frequency.Daily | Frequency.Business, Frequency.Monthly) =>
-        Some(31)
-      case (Frequency.Daily | Frequency.Business, Frequency.Quarterly) =>
-        Some(92)
-      case (Frequency.Daily | Frequency.Business, Frequency.Annual) =>
-        Some(366)
-      case _ => None
-    }
-
-  /** Lead-aware sibling of [[incrementalEligibility]]: returns
-    * `Right((maxLead, maxLag))` for scripts whose every statement has
-    * BOUNDED reach in both directions — backward lags up to maxLag rows
-    * and forward leads (`v[t+k]`, including net-forward compositions
-    * through derived series) up to maxLead rows — or `Left(reason)`.
-    *
-    * A positive maxLead means no maxLag-tail executor can evaluate the
-    * script append-only (the frontier test in StreamingSpec carries the
-    * counterexample: the value needs rows that have not arrived), so
-    * [[incrementalEligibility]] keeps refusing those scripts by name.
-    * [[runIncremental]] instead runs them under HOLD-BACK emission: a
-    * row is emitted only once `maxLead` rows after it (per key) have
-    * arrived — the watermark-style delay that makes every forward read
-    * resolvable at emission time. Leads stay refused where hold-back
-    * cannot help: inside whole-series aggregates and history lookups
-    * (their completeness arguments need lag-only arguments), and in
-    * every kernel statement.
-    */
-  def incrementalReach(script: String,
-      partitioned: Boolean = false,
-      inputColumns: Option[Set[String]] = None)
-      : Either[String, (Int, Int)] =
-    reachAnalysis(script, partitioned, inputColumns, allowLeads = true,
-      allowPins = false).map(p => (p.maxLead, p.maxLag))
-
-  /** The widest analysis — leads AND pins allowed — feeding
-    * [[runIncremental]]. Accepts everything [[incrementalReach]] does,
-    * plus fixed-date lookups / bounded-support whole-series reads under
-    * an OPEN-ENDED mask (`set <date A to *>` with the read target
-    * entirely before A): those contribute no tail reach — the read
-    * target is a constant once arrived — and instead register a pin
-    * window the executor carries permanently. Open-START masks and
-    * plain assigns stay refused: their affected rows include rows
-    * BEFORE the read target, which would be emitted before the target
-    * arrives (a forward read no carry can satisfy).
+    * Keyed streams get the same plan: the executor materializes keyed
+    * lookups as per-key columns (FameSession.materializeKeyedLookups)
+    * and compiles whole-series functions to key-partitioned windows, so
+    * every accepted shape holds per key with the same reach.
     */
   def incrementalPlan(script: String,
-      partitioned: Boolean = false,
-      inputColumns: Option[Set[String]] = None,
-      relaxedFp: Boolean = false)
-      : Either[String, IncrementalPlan] =
-    reachAnalysis(script, partitioned, inputColumns, allowLeads = true,
-      allowPins = true, relaxedFp = relaxedFp)
-
-  private def reachAnalysis(script: String,
-      partitioned: Boolean,
-      inputColumns: Option[Set[String]],
-      allowLeads: Boolean,
-      allowPins: Boolean,
-      relaxedFp: Boolean = false): Either[String, IncrementalPlan] = {
+      inputColumns: Option[Set[String]] = None)
+      : Either[String, IncrementalPlan] = {
     import java.time.LocalDate
     import FameExpr._
     import FameStmt._
@@ -492,8 +415,8 @@ object FameStream {
     // range is CLOSED (bounded tail reach), None when OPEN-ENDED
     // (`set <date A to *>`) — there a fixed-date read has no finite
     // tail distance, but its target rows are a CONSTANT once arrived,
-    // so under `allowPins` the executor keeps them in the carry
-    // permanently (a PIN) instead of reaching through the tail.
+    // so the executor keeps them in the carry permanently (a PIN)
+    // instead of reaching through the tail.
     // None (no horizon at all / open-START) = lookups unbounded here.
     final case class Horizon(latest: LocalDate, end: Option[LocalDate],
         f: Frequency)
@@ -506,18 +429,18 @@ object FameStream {
     // dependent predecessor row can sit more periods back than rows —
     // a period-widened window would under-pin it (r17 ADVICE fix).
     val pins = scala.collection.mutable.ListBuffer.empty[Pin]
-    // accepted chain statements (plan tier only), their targets (reads
-    // of a chain index are refused: its open-year values are non-final
-    // until the year closes, so a derived read would leak a moving
-    // value into an already-emitted row), and their source columns
-    // (reassignment after the chain is refused: the executor finalizes
-    // a closed year's aggregates from the OUTPUT frame's source
-    // columns, which a later reassignment would have overwritten)
+    // accepted hold-back statements, their targets (reads of a held
+    // target are refused: its values are non-final until the gate
+    // opens, so a derived read would leak a moving value into an
+    // already-emitted row), and their source columns (reassignment
+    // after the statement is refused: the executor finalizes a closed
+    // year's state from the OUTPUT frame's source columns, which a
+    // later reassignment would have overwritten)
     val chains = scala.collection.mutable.ListBuffer.empty[ChainSpec]
     val fishvols = scala.collection.mutable.ListBuffer.empty[FishvolSpec]
     val shiftPcts = scala.collection.mutable.ListBuffer.empty[ShiftPctSpec]
-    var sealedNames  = Set.empty[String]
-    var chainSrcNames = Set.empty[String]
+    var sealedNames = Set.empty[String]
+    var frozenNames = Set.empty[String]
     // series-derived scalars accepted via pinned support windows (r17):
     // name → the support's END date. The scalar's value is a constant
     // once every support row (plus its arg's lag predecessors — both
@@ -558,8 +481,9 @@ object FameStream {
       else None
     def sealedRead(n: String): Option[String] =
       if (sealedNames.contains(n))
-        Some(s"read of chain index $n (open-year values are non-final " +
-          "until the year closes)")
+        Some(s"read of sealed series $n (a held target's values are " +
+          "non-final until its gate opens; an up-convert's fine grid " +
+          "mixes synthetic rows)")
       else None
 
     // Support interval of an expression: Some((a, b)) proves the
@@ -671,7 +595,7 @@ object FameStream {
               // s's value AT date d carries s's own recorded lag behind d
               val lg = env.getOrElse(s, (0, 0))._2
               Right((0, lg + periods(f, d, horizon)))
-            case None if allowPins =>
+            case None =>
               // open-ended horizon: the read target is FIXED — pin the
               // rows s@d computes from (the target row plus s's own
               // recorded interval as PHYSICAL neighbors, gap-proof)
@@ -679,10 +603,6 @@ object FameStream {
               val (ld, lg) = env.getOrElse(s, (0, 0))
               pins += Pin(d, d, lg, ld)
               Right((0, 0))
-            case None => Left(s"history lookup $shown under an " +
-              "open-ended mask (bounded only inside a closed date mask " +
-              "or point-in-time assign; the incremental executor " +
-              "evaluates it via pinned rows)")
           }
       }
       e match {
@@ -783,7 +703,7 @@ object FameStream {
                       case (0, lg) => endOpt match {
                         case Some(horizon) =>
                           Right((0, lg + periods(f, supStart, horizon)))
-                        case None if allowPins =>
+                        case None =>
                           // open-ended horizon: the aggregate over the
                           // bounded support is a CONSTANT once every
                           // support row (plus its lg PHYSICAL
@@ -791,10 +711,6 @@ object FameStream {
                           // arrived — pin that window, no tail reach
                           pins += Pin(supStart, supEnd, lg, 0)
                           Right((0, 0))
-                        case None => Left(s"whole-series $name under " +
-                          "an open-ended horizon (closed horizon " +
-                          "required; the incremental executor evaluates " +
-                          "it via pinned rows)")
                       }
                       case (ld, _) =>
                         Left(s"lead +$ld inside whole-series $name")
@@ -830,13 +746,9 @@ object FameStream {
                       case (0, lg) => endOpt match {
                         case Some(horizon) =>
                           Right((0, lg + periods(f, supStart, horizon)))
-                        case None if allowPins =>
+                        case None =>
                           pins += Pin(supStart, supEnd, lg, 0)
                           Right((0, 0))
-                        case None => Left("whole-series dateof under " +
-                          "an open-ended horizon (closed horizon " +
-                          "required; the incremental executor evaluates " +
-                          "it via pinned rows)")
                       }
                       case (ld, _) =>
                         Left(s"lead +$ld inside dateof")
@@ -907,18 +819,52 @@ object FameStream {
         Set.empty))) {
       (acc, s) =>
       acc.flatMap { st =>
-        def accept(target: String, r: Either[String, (Int, Int)])
-            : Either[String, St] = r.flatMap {
-          // target already carries the DB prefix (FameParser.colName
-          // folds `aa'x` to AA_X before Assign is built, and Ref/
-          // TimeShift sites see the same folded name), so it is the
-          // env key as-is — re-prefixing here would record AA_AA_X
-          // and lose transitive reach for every local-db chain.
-          case rr @ (ld, lg) if ld == 0 || allowLeads => Right(st.copy(
-            lead = math.max(st.lead, ld), lag = math.max(st.lag, lg),
-            env = record(st.env, target, rr)))
-          case (ld, _) => Left(s"lead reach +$ld in ${s}")
-        }
+        // target already carries the DB prefix (FameParser.colName
+        // folds `aa'x` to AA_X before Assign is built, and Ref/
+        // TimeShift sites see the same folded name), so it is the env
+        // key as-is — re-prefixing here would record AA_AA_X and lose
+        // transitive reach for every local-db chain.
+        def accept(target: String, rr: (Int, Int)): St = st.copy(
+          lead = math.max(st.lead, rr._1), lag = math.max(st.lag, rr._2),
+          env = record(st.env, target, rr))
+        // Each stream runs under ONE kind of hold-back cutoff: a convert
+        // or hold-back statement is refused next to a statement of
+        // another kind, naming the kinds already present.
+        def alongside(kind: String, t: String): Option[String] =
+          Seq("convert" -> st.bucketed, "chain" -> chains.nonEmpty,
+            "fishvol" -> fishvols.nonEmpty,
+            "shift_pct" -> shiftPcts.nonEmpty)
+            .collect { case (k, true) if k != kind => k } match {
+            case Nil => None
+            case present => Some(s"$kind ($t) alongside " +
+              s"${present.mkString(" and ")} (hold-back emission cutoffs " +
+              "are not composed; run them as separate streams)")
+          }
+        // One rule for the [[HoldBack]] statements: sources must be
+        // neither sealed, forward-referenced nor LEAD-bearing (the gate
+        // opening proves ONE later row arrived, not a k-row lookahead).
+        // Then the target is SEALED (no downstream reads), the sources
+        // are frozen (no reassignment) and the carry keeps the sources'
+        // lag reach plus the statement's own `linkLag` physical
+        // predecessors ahead of the unemitted suffix.
+        def holdBack(kind: String, t: String, srcs: Seq[String],
+            linkLag: Int)(register: => Unit): Either[String, St] =
+          alongside(kind, t)
+            .orElse(srcs.flatMap(n =>
+              sealedRead(n).orElse(fwdRead(n, st.env))).headOption)
+            .orElse(srcs.find(n => st.env.getOrElse(n, (0, 0))._1 > 0)
+              .map(n => s"$kind ($t) source $n carries lead reach " +
+                s"+${st.env(n)._1}: opening the gate proves one later " +
+                "row arrived, not the source's full lookahead"))
+            .toLeft {
+              register
+              sealedNames += t
+              frozenNames ++= srcs
+              val srcLag = srcs.map(n => st.env.getOrElse(n, (0, 0))._2)
+                .foldLeft(0)(math.max)
+              val st2 = accept(t, (0, srcLag + linkLag))
+              st2.copy(assigned = st2.assigned + t)
+            }
         // bounded-support bookkeeping after an ACCEPTED definition of
         // `target` whose written range is `rng` (None = unbounded
         // writes): support stays recorded only while every definition
@@ -943,11 +889,11 @@ object FameStream {
           case SetDate(filter)  => Right(st.copy(filter = Some(filter)))
           case ClearDate        => Right(st.copy(filter = None))
           case ListAlias(_, _)  => Right(st)
-          case Assign(target, e, inline, _)
-              if chainSrcNames.contains(target) =>
-            Left(s"reassignment of chain source $target after the chain " +
-              "statement (the executor finalizes closed-year aggregates " +
-              "from the output frame, which would hold the new definition)")
+          case Assign(target, _, _, _)
+              if frozenNames.contains(target) =>
+            Left(s"reassignment of hold-back source $target after its " +
+              "statement (the executor finalizes state from the output " +
+              "frame, which would hold the new definition)")
           case Assign(target, _, _, _)
               if scalarBaseNames.contains(target) =>
             Left(s"reassignment of $target after a scalar was derived " +
@@ -955,19 +901,19 @@ object FameStream {
               "from the same definition)")
           case Assign(target, e, inline, _) =>
             val look = maskLook(st, inline)
-            accept(target, reach(e, st.env, look, st.sdates, st.supports))
-              .map(updSupport(_, target,
+            reach(e, st.env, look, st.sdates, st.supports).map(r =>
+              updSupport(accept(target, r), target,
                 look.flatMap(h => h.end.map(b => (h.latest, b)))))
           case PointInTime(target, _, _)
-              if chainSrcNames.contains(target) ||
+              if frozenNames.contains(target) ||
                 scalarBaseNames.contains(target) =>
-            Left(s"reassignment of $target after a chain/scalar " +
+            Left(s"reassignment of $target after a hold-back/scalar " +
               "statement froze it")
           case PointInTime(target, dte, e) =>
-            accept(target,
-              reach(e, st.env, st.freq.map(f => Horizon(dte, Some(dte), f)),
-                st.sdates, st.supports))
-              .map(updSupport(_, target, Some((dte, dte))))
+            reach(e, st.env, st.freq.map(f => Horizon(dte, Some(dte), f)),
+              st.sdates, st.supports)
+              .map(r => updSupport(accept(target, r), target,
+                Some((dte, dte))))
           case ScalarAssign(n, e) =>
             // A non-date reassign must INVALIDATE any earlier make(...)
             // binding for the same name (r14 ADVICE): keeping the stale
@@ -998,7 +944,7 @@ object FameStream {
               // refused keyed.)
               case Call(ws, args)
                   if Set("ave", "firstvalue", "lastvalue")(ws) &&
-                    args.nonEmpty && allowPins =>
+                    args.nonEmpty =>
                 st.freq match {
                   case Some(f) =>
                     exprSupport(args.head, st.supports, f) match {
@@ -1059,40 +1005,22 @@ object FameStream {
           // SEALED: downstream row-offset reads on the fine grid would
           // mix synthetic rows, whose offsets are not representable in
           // the input-row carry contract.
-          // plan-tier ONLY (allowPins): the bucketed flag is what makes
-          // the executor emit synthetic anchor rows — a reach-tier
-          // caller would get a correct (lead, lag) but silently drop
-          // sparse frames' anchors, so the reach tier refuses converts
           case ConvertAssign(target, source, tgtFreq, technique, _, asFreq, _) =>
-            if (chains.nonEmpty || fishvols.nonEmpty || shiftPcts.nonEmpty)
-              Left(s"convert ($target) alongside a chain/fishvol/" +
-                "shift_pct statement (bucket hold-back and year/anchor " +
-                "hold-back emission cutoffs are not composed; run them " +
-                "as separate streams)")
-            else {
-              val srcFOpt = asFreq.orElse(st.freq)
+            val srcFOpt = asFreq.orElse(st.freq)
+            val (sld, slg) = st.env.getOrElse(source, (0, 0))
+            alongside("convert", target).toLeft(()).flatMap { _ =>
               srcFOpt.flatMap(srcF => bucketSpan(srcF, tgtFreq)) match {
-                case Some(span) if allowLeads && allowPins =>
-                  val (sld, slg) = st.env.getOrElse(source, (0, 0))
-                  accept(target, Right((span - 1 + sld, slg)))
-                    .map(st2 => updSupport(st2.copy(bucketed = true),
-                      target, None))
-                case _ if allowLeads && allowPins && srcFOpt.exists(
-                    srcF => graft.ast.Frequency.rank(tgtFreq) <
-                      graft.ast.Frequency.rank(srcF)) =>
-                  val (sld, slg) = st.env.getOrElse(source, (0, 0))
+                case Some(span) =>
+                  Right(updSupport(accept(target, (span - 1 + sld, slg))
+                    .copy(bucketed = true), target, None))
+                case _ if srcFOpt.exists(srcF =>
+                    Frequency.rank(tgtFreq) < Frequency.rank(srcF)) =>
                   val (leadK, lagK) =
                     if (technique == "cubic") (1, 2) else (0, 1)
-                  accept(target, Right((leadK + sld, lagK + slg)))
-                    .map { st2 =>
-                      sealedNames += target
-                      updSupport(st2.copy(bucketed = true), target, None)
-                    }
-                case _ =>
-                  Left(s"convert ($target) re-buckets history" +
-                    (if (!(allowLeads && allowPins)) " (converts run " +
-                      "under bucket/observation hold-back via " +
-                      "runIncremental)" else ""))
+                  sealedNames += target
+                  Right(updSupport(accept(target, (leadK + sld, lagK + slg))
+                    .copy(bucketed = true), target, None))
+                case _ => Left(s"convert ($target) re-buckets history")
               }
             }
           // Backward shift_pct (r19): with a FIXED mask end the anchor
@@ -1100,11 +1028,11 @@ object FameStream {
           // on rows ≤ anchor, and the executor flushes the whole window
           // the batch the key's frontier passes the anchor — a single
           // in-frame computation, bit-exact vs the whole-history run
-          // (see [[ShiftPctSpec]]). State = the un-flushed window's raw
-          // rows, bounded by the fixed mask span (the chain
-          // pre-base-backlog argument). The default/open-anchor form
-          // keeps the named refusal: its anchor is the moving series
-          // end, so emitted rows would be revised every batch.
+          // (see [[ShiftPctSpec]]). The growth factor reads the pct
+          // source at t−1: one physical predecessor ahead of the held
+          // window. The default/open-anchor form keeps the named
+          // refusal: its anchor is the moving series end, so emitted
+          // rows would be revised every batch.
           case ShiftPctAssign(t, p, _) =>
             st.filter.flatMap(_.end) match {
               case None =>
@@ -1112,124 +1040,36 @@ object FameStream {
                   "end (a fixed mask end date makes the anchor a " +
                   "constant and streams under anchor hold-back)")
               case Some(anchor) =>
-                val srcs = Seq(p, t).distinct
-                if (!(allowLeads && allowPins))
-                  Left(s"shift_pct ($t) whole-series (fixed-anchor " +
-                    "backward reconstruction runs under anchor " +
-                    "hold-back via runIncremental)")
-                else if (st.bucketed || chains.nonEmpty ||
-                    fishvols.nonEmpty)
-                  Left(s"shift_pct ($t) alongside a down-conversion, " +
-                    "chain or fishvol (hold-back emission cutoffs are " +
-                    "not composed; run them as separate streams)")
-                else srcs.flatMap(n =>
-                    sealedRead(n).orElse(fwdRead(n, st.env)))
-                  .headOption.map(Left(_)).getOrElse {
-                  srcs.find(n => st.env.getOrElse(n, (0, 0))._1 > 0) match {
-                    case Some(n) =>
-                      Left(s"shift_pct ($t) source $n carries lead " +
-                        s"reach +${st.env(n)._1}: the frontier passing " +
-                        "the anchor proves one later row arrived, not " +
-                        "the source's full lookahead")
-                    case None =>
-                      // the growth factor reads the pct source at t−1:
-                      // keep one physical predecessor ahead of the held
-                      // window, plus the sources' own lag reach
-                      val srcLag = srcs.map(n =>
-                        st.env.getOrElse(n, (0, 0))._2).foldLeft(0)(math.max)
-                      shiftPcts += ShiftPctSpec(t, p,
-                        st.filter.flatMap(_.start), anchor)
-                      sealedNames += t
-                      chainSrcNames ++= srcs
-                      accept(t, Right((0, srcLag + 1)))
-                        .map(st2 => st2.copy(assigned = st2.assigned + t))
-                  }
-                }
+                holdBack("shift_pct", t, Seq(p, t).distinct, linkLag = 1)(
+                  shiftPcts += ShiftPctSpec(t, p,
+                    st.filter.flatMap(_.start), anchor))
             }
-          // Annually-linked chain (r17, plan tier only): a year-Y link
-          // reads only years ≤ Y, so the statement is exactly a
-          // year-bucket hold-back (q218's argument with span =
-          // periods-per-year) — the executor emits a row once its year
-          // AND every base year have closed, and carries closed years'
-          // aggregate rows as derived state (see [[ChainSpec]]).
-          // LAGGED sources are sound: a year closes with ALL its rows
-          // still carried (unemitted), and the carry keeps the maxLag
-          // physical predecessors of the unemitted suffix — exactly
-          // the previous year's tail a lagged source's year-boundary
-          // rows read — so the closing batch's fresh aggregates see
-          // complete derived values (the source's own lag is already
-          // folded into maxLag by its defining statement). LEAD-bearing
-          // sources stay refused: closing a year proves only ONE later
-          // row arrived, not k. The target is SEALED (no downstream
-          // reads) and sources are frozen (no reassignment) — both
-          // named refusals above.
+          // Annually-linked chain (r17): a year-Y link reads only years
+          // ≤ Y, so the statement is exactly a year-bucket hold-back
+          // (q218's argument with span = periods-per-year) — the
+          // executor emits a row once its year AND every base year have
+          // closed, and carries closed years' aggregate rows as derived
+          // state (see [[ChainSpec]]). LAGGED sources are sound: a year
+          // closes with ALL its rows still carried (unemitted), and the
+          // carry keeps the maxLag physical predecessors of the
+          // unemitted suffix — exactly the previous year's tail a lagged
+          // source's year-boundary rows read — so the closing batch's
+          // fresh aggregates see complete derived values. The link reads
+          // the year table, not rows: no extra lag.
           case ChainAssign(target, terms, baseYear) =>
-            val srcs = (terms.map(_._2) ++ terms.map("P" + _._2)).distinct
-            if (!(allowLeads && allowPins))
-              Left(s"chain ($target) whole-series (annually-linked " +
-                "chains run under year hold-back via runIncremental)")
-            else if (st.bucketed || fishvols.nonEmpty || shiftPcts.nonEmpty)
-              Left(s"chain ($target) alongside a down-conversion, " +
-                "fishvol or shift_pct (hold-back emission cutoffs are " +
-                "not composed; run them as separate streams)")
-            else srcs.flatMap(n => sealedRead(n).orElse(fwdRead(n, st.env)))
-              .headOption.map(Left(_)).getOrElse {
-              srcs.find(n => st.env.getOrElse(n, (0, 0))._1 > 0) match {
-                case Some(n) =>
-                  Left(s"chain ($target) source $n carries lead reach " +
-                    s"+${st.env(n)._1}: a closing year proves one later " +
-                    "row arrived, not the source's full lookahead")
-                case None =>
-                  chains += ChainSpec(target, terms, baseYear)
-                  sealedNames += target
-                  chainSrcNames ++= srcs
-                  Right(st.copy(assigned = st.assigned + target))
-              }
-            }
-          // fishvol is refused on the BIT-EXACT tiers: its cumulative
-          // product is a per-ROW left fold (raw_t = raw_{t-1} × link_t
-          // over the row-level window), which only the RELAXED-FP tier
-          // (r18, opt-in via runIncremental(relaxedFp = true)) seeds
+            holdBack("chain", target,
+              (terms.map(_._2) ++ terms.map("P" + _._2)).distinct,
+              linkLag = 0)(chains += ChainSpec(target, terms, baseYear))
+          // fishvol (r18): its cumulative product is a per-ROW left
+          // fold (raw_t = raw_{t-1} × link_t), which the executor seeds
           // batch-wise with a carried scalar — the per-key prefix
           // product + closed base average, bit-exact under the
-          // sequential native ProductAgg (see [[FishvolSpec]]); carrying
-          // the rows instead would be O(history). Chain escapes this
-          // because its fold runs over the YEAR table (1 row per
-          // key-year), cheap enough to carry whole and recompute.
+          // sequential native ProductAgg (see [[FishvolSpec]]). The
+          // Fisher link reads each source at t−1: one physical
+          // predecessor ahead of the unemitted suffix.
           case FishvolAssign(t, vs, ps, baseYear) =>
-            val srcs = (vs ++ ps).distinct
-            if (!relaxedFp)
-              Left(s"fishvol ($t) whole-series (per-row cumulative " +
-                "product cannot be seeded batch-wise without changing " +
-                "the fp fold association; opt in to the relaxed-fp " +
-                "tier with runIncremental(relaxedFp = true))")
-            else if (!(allowLeads && allowPins))
-              Left(s"fishvol ($t) whole-series (the relaxed-fp tier " +
-                "runs under base-year hold-back via runIncremental)")
-            else if (st.bucketed || chains.nonEmpty || shiftPcts.nonEmpty)
-              Left(s"fishvol ($t) alongside a down-conversion, chain " +
-                "or shift_pct (hold-back emission cutoffs are not " +
-                "composed; run them as separate streams)")
-            else srcs.flatMap(n => sealedRead(n).orElse(fwdRead(n, st.env)))
-              .headOption.map(Left(_)).getOrElse {
-              srcs.find(n => st.env.getOrElse(n, (0, 0))._1 > 0) match {
-                case Some(n) =>
-                  Left(s"fishvol ($t) source $n carries lead reach " +
-                    s"+${st.env(n)._1}: a closing base year proves one " +
-                    "later row arrived, not the source's full lookahead")
-                case None =>
-                  // the Fisher link reads each source at t−1: the carry
-                  // must keep one physical predecessor ahead of the
-                  // unemitted suffix, plus the sources' own lag reach
-                  val srcLag = srcs.map(n =>
-                    st.env.getOrElse(n, (0, 0))._2).foldLeft(0)(math.max)
-                  fishvols += FishvolSpec(t, vs, ps, baseYear)
-                  sealedNames += t
-                  chainSrcNames ++= srcs
-                  accept(t, Right((0, srcLag + 1)))
-                    .map(st2 => st2.copy(assigned = st2.assigned + t))
-              }
-            }
+            holdBack("fishvol", t, (vs ++ ps).distinct, linkLag = 1)(
+              fishvols += FishvolSpec(t, vs, ps, baseYear))
           case NlrxAssign(t, _, _)    => Left(s"nlrx ($t) whole-series solve")
         }
       }
@@ -1237,8 +1077,8 @@ object FameStream {
       chains.toList, fishvols.toList, shiftPcts.toList))
   }
 
-  /** Incremental micro-batched FAME for the bounded-reach script subset
-    * ([[incrementalReach]]): per-batch cost
+  /** Incremental micro-batched FAME for the scripts
+    * [[incrementalPlan]] accepts: per-batch cost
     * O(batch + (maxLag + maxLead)·keys) instead of [[run]]'s O(history)
     * snapshot recompute. Throws IllegalArgumentException on an
     * ineligible script — callers choose the fallback explicitly
@@ -1286,14 +1126,14 @@ object FameStream {
     *     input (from the carried flags) and the newest emittable one —
     *     each anchor exactly once, only after its bucket provably
     *     closed;
-    *  6. chain plans (r17) run under YEAR hold-back: a row emits once
-    *     its calendar year AND every chain base year have closed for
-    *     its key; still-unemitted rows (the open year; the pre-base-era
-    *     backlog) stay in the carry, and each closed year's aggregate
-    *     row joins a per-target versioned state table
-    *     (`bronzeDir/_state/<target>/v=<id>`) that seeds the kernel so
-    *     the link/cumprod/rebase pipeline recomputes over the COMPLETE
-    *     year history every batch.
+    *  6. plans with [[HoldBack]] statements emit a row only once every
+    *     spec's gate opens for its key (chain: its year and every base
+    *     year closed; fishvol: its base year closed; shift_pct: the
+    *     frontier past the anchor); still-unemitted rows stay in the
+    *     carry with their lag predecessors, and chain/fishvol state
+    *     joins a per-target versioned table
+    *     (`bronzeDir/_state/<target>/v=<id>`) that seeds the next
+    *     batch's kernel run.
     *
     * Contract: rows arrive in nondecreasing date order per key (the
     * standard series-ingest shape — a late row would need the
@@ -1310,10 +1150,8 @@ object FameStream {
       partitionKeys: Seq[String] = Nil,
       nlrx: Nlrx = Nlrx.HpSmoother,
       businessCal: BusinessCalendar = BusinessCalendar.WeekdaysOnly,
-      checkpointDir: Option[String] = None,
-      relaxedFp: Boolean = false): StreamingQuery = {
-    val plan = incrementalPlan(script, partitionKeys.nonEmpty,
-        Some(stream.columns.toSet), relaxedFp = relaxedFp) match {
+      checkpointDir: Option[String] = None): StreamingQuery = {
+    val plan = incrementalPlan(script, Some(stream.columns.toSet)) match {
       case Left(reason) => throw new IllegalArgumentException(
         s"script not incrementally evaluable: $reason (use FameStream.run)")
       case Right(p) => p
@@ -1437,11 +1275,95 @@ object FameStream {
           "for out-of-order ingest")
       }
       val work = leaf.drop("__NEW", "__LATE")
-      // chain scripts (r17): seed each $chain with the closed-year
-      // aggregate state finalized by the previous batch (versioned like
-      // the carry — replay of batch n re-reads v=n−1, idempotent), so
-      // the kernel links against the COMPLETE year history while the
-      // work frame holds only the open year's raw rows
+      // the emission gate: every hold-back spec's gate ANDed (the rows
+      // each gate holds form a suffix of the key's arrived rows):
+      //  - chain: the row's year has closed for its key (a later-year
+      //    row exists — in-order ingest proves the year complete) and
+      //    so has the base year (before that the rebase denominator,
+      //    hence EVERY index value, would still move); a base year
+      //    closing flushes the whole pre-base backlog;
+      //  - fishvol: the key's base year has closed — after it each
+      //    row's raw (hence index) is final on arrival, so unlike chain
+      //    the row's own year need not close;
+      //  - shift_pct: a row inside [start, anchor] waits until the key's
+      //    frontier has passed the anchor — then the whole window
+      //    (carried as the unemitted suffix) is in frame and the flush
+      //    is bit-exact (see [[ShiftPctSpec]]); rows outside every
+      //    window emit on arrival.
+      val maxYr = max(year(col(dateU))).over(kw)
+      val gated = plan.holdBacks.nonEmpty
+      val holdGate: Column = plan.holdBacks.map {
+        case c: ChainSpec =>
+          year(col(dateU)) < maxYr && lit(c.baseYear) < maxYr
+        case f: FishvolSpec => lit(f.baseYear) < maxYr
+        case sp: ShiftPctSpec =>
+          val aLit = lit(java.sql.Date.valueOf(sp.anchor))
+          val sCond = sp.start
+            .map(s0 => col(dateU) >= lit(java.sql.Date.valueOf(s0)))
+            .getOrElse(lit(true))
+          !(sCond && col(dateU) <= aLit) || (max(col(dateU)).over(kw) > aLit)
+      }.reduceOption(_ && _).getOrElse(lit(true))
+      // a row is emitted once it is past the generic lead hold AND the
+      // hold-back gate — the flag the carry keeps
+      val emittedNow = col("__EMITTED") || (!col("__HOLD") && holdGate)
+      // The stateful specs' finalizes: next batch's seed for the target,
+      // built (in a pool task) from this batch's output frame and the
+      // carried seed.
+      //  - chain: closed years' aggregate rows, computed from the output
+      //    frame (derived source columns materialized) and unioned with
+      //    the carried state — the state keeps the version finalized at
+      //    close time; later partial rows of the same year (tail/pin
+      //    leftovers) are anti-joined away;
+      //  - fishvol: per key, the raw prefix product at the NEWEST
+      //    EMITTED row (emitted ⇒ base year closed ⇒ raw final) and the
+      //    closed base average — recomputed from the same
+      //    [[Indices.fishvolRaw]] plan the kernel ran, so the stored
+      //    seed is the kernel's own value. Keys with no new emissions
+      //    keep their carried row (anti-join); the isEmpty probe (an
+      //    action) runs in the pool task, off the stream thread.
+      val finalizes
+          : Seq[(String, (DataFrame, Option[DataFrame]) => DataFrame)] =
+        plan.holdBacks.collect {
+          case c: ChainSpec => c.target -> { (out: DataFrame,
+              seed: Option[DataFrame]) =>
+            val closed = out
+              .withColumn("__CYR", year(col(dateU)))
+              .withColumn("__CMAXYR", maxYr)
+              .where(col("__CYR") < col("__CMAXYR"))
+            val fresh = graft.kernels.Indices.yearlyAggs(
+              closed, dateU, c.terms, keysU)
+            seed.fold(fresh)(st => st.unionByName(fresh.join(
+              st.select((keysU :+ "__year").map(col): _*),
+              keysU :+ "__year", "left_anti")))
+          }
+          case f: FishvolSpec => f.target -> { (out: DataFrame,
+              seed: Option[DataFrame]) =>
+            val emRows = graft.kernels.Indices.fishvolRaw(out, dateU,
+              f.volumes, f.prices, f.baseYear, keysU, seed)
+              .withColumn("__FVEM", emittedNow && col("__FV_RAW").isNotNull)
+              .where(col("__FVEM"))
+            val fresh = (if (keysU.isEmpty) emRows.groupBy()
+              else emRows.groupBy(keysU.map(col): _*)).agg(
+                max_by(col("__FV_RAW"), col(dateU)).as("__FV_SEED"),
+                max(col(dateU)).as("__FV_SEED_DATE"),
+                max(col("__FV_BAVG")).as("__FV_BAVG_ST"))
+              // unkeyed groupBy() yields one all-null row when nothing
+              // has been emitted yet — that is "no state", not a seed
+              .where(col("__FV_SEED").isNotNull)
+            seed match {
+              case Some(old) if keysU.nonEmpty =>
+                fresh.unionByName(old.join(
+                  fresh.select(keysU.map(col): _*), keysU, "left_anti"))
+              case Some(old) => if (fresh.isEmpty) old else fresh
+              case None => fresh
+            }
+          }
+        }
+      // each stateful target is seeded with the state the previous
+      // batch finalized (versioned like the carry — replay of batch n
+      // re-reads v=n−1, idempotent), so the kernel runs against the
+      // complete history while the work frame holds only the unemitted
+      // rows and their predecessors
       def readState(target: String): Option[DataFrame] =
         stateCache.get(target).collect {
           case (v, df) if v == batchId - 1 => df
@@ -1452,76 +1374,24 @@ object FameStream {
             Some(spark.read.parquet(p.toString))
           else None
         }
-      val chainSeeds: Map[String, DataFrame] = plan.chains.flatMap(c =>
-        readState(c.target).map(c.target -> _)).toMap
-      // fishvol state (relaxed-fp tier): per-key prefix product at the
-      // newest emitted row + the closed base average — versioned like
-      // the chain state (replay of batch n re-reads v=n−1, idempotent)
-      val fishSeeds: Map[String, DataFrame] = plan.fishvols.flatMap(f =>
-        readState(f.target).map(f.target -> _)).toMap
+      val seeds: Map[String, DataFrame] = finalizes.flatMap { case (t, _) =>
+        readState(t).map(t -> _) }.toMap
+      // one map serves both kernels: each looks up its own target
       val out0 = FameSession.run(script, work, dateU, keysU,
-        nlrx, businessCal = businessCal, chainSeed = chainSeeds,
-        fishvolSeed = fishSeeds).df
-      // chain/fishvol plans execute the output frame TWICE (the emit
-      // write + the state finalize) — materialize it for those; a plain
-      // plan executes it once and materializing would only add overhead.
+        nlrx, businessCal = businessCal, chainSeed = seeds,
+        fishvolSeed = seeds).df
+      // stateful plans execute the output frame TWICE (the emit write +
+      // the state finalize) — materialize it for those; any other plan
+      // executes it once and materializing would only add overhead.
       // localCheckpoint, not persist (r20): persist kept the full FAME
       // plan in every downstream task binary (the state finalize ships
       // the kernel recompute PLUS the cached plan it reads), where the
       // checkpoint truncates the lineage to a leaf RDD — the same
       // task-binary bloat the work checkpoint above removes.
-      val outGated = plan.chains.nonEmpty || plan.fishvols.nonEmpty
+      val outGated = finalizes.nonEmpty
       val out =
         if (outGated) out0.localCheckpoint(true)
         else out0
-      // YEAR hold-back gate (chain scripts): a row emits only once its
-      // calendar year has closed for its key (a later-year row exists —
-      // in-order ingest proves the year is complete) AND every chain's
-      // base year has closed (before that the rebase denominator, hence
-      // EVERY index value, would still move). maxBase < maxYr flushes
-      // the whole pre-base backlog the batch the base year closes.
-      val maxBase =
-        if (plan.chains.isEmpty) Int.MinValue
-        else plan.chains.map(_.baseYear).max
-      val yearGate: Column =
-        if (plan.chains.isEmpty) lit(true)
-        else {
-          val maxYr = max(year(col(dateU))).over(kw)
-          year(col(dateU)) < maxYr && lit(maxBase) < maxYr
-        }
-      // fishvol gate (relaxed-fp tier): a row emits once its key's BASE
-      // year has closed — before that the rebase denominator, hence
-      // every index value, would still move; AFTER it each row's raw
-      // (hence index) is final on arrival, so unlike chain the row's
-      // own year need not close
-      val fishGate: Column =
-        if (plan.fishvols.isEmpty) lit(true)
-        else {
-          val maxYr = max(year(col(dateU))).over(kw)
-          plan.fishvols.map(f => lit(f.baseYear) < maxYr).reduce(_ && _)
-        }
-      // shift_pct gate (r19): a row inside a statement's [start, anchor]
-      // reconstruction window emits only once its key's frontier has
-      // passed the anchor — at that point the whole window (carried as
-      // the unemitted suffix) is in frame, the kernel's suffix product
-      // multiplies the same factor sequence as the whole-history run,
-      // and the flush is bit-exact (see [[ShiftPctSpec]]). Rows outside
-      // every window keep their existing value and emit on arrival.
-      val shiftGate: Column =
-        if (plan.shiftPcts.isEmpty) lit(true)
-        else {
-          val frontier = max(col(dateU)).over(kw)
-          plan.shiftPcts.map { sp =>
-            val aLit = lit(java.sql.Date.valueOf(sp.anchor))
-            val sCond = sp.start
-              .map(s0 => col(dateU) >= lit(java.sql.Date.valueOf(s0)))
-              .getOrElse(lit(true))
-            !(sCond && col(dateU) <= aLit) || (frontier > aLit)
-          }.reduce(_ && _)
-        }
-      val holdGate = yearGate && fishGate && shiftGate
-      val gated = plan.chains.nonEmpty || plan.fishvols.nonEmpty ||
-        plan.shiftPcts.nonEmpty
       val emit =
         if (gated)
           out.withColumn("__EGATE", holdGate)
@@ -1561,7 +1431,7 @@ object FameStream {
             .drop("__CUT_NEW", "__CUT_PREV")
         }
       // Independent writes of this batch — bronze, the emit below, the
-      // carry, and the chain/fishvol state finalizes — all read the
+      // carry, and the state finalizes — all read the
       // MATERIALIZED leaf (or the out leaf) and land in disjoint
       // directories, so they run as concurrent jobs (guide §2.6: actions
       // are only sequential because the driver calls them sequentially).
@@ -1615,11 +1485,11 @@ object FameStream {
       val ascOrd = kw.orderBy(col(dateU).asc)
       val needRank = plan.pins.exists(p => p.prec > 0 || p.foll > 0) ||
         gated
-      // a chain-held row (open year / pre-base era) is NOT emitted even
-      // past the generic hold — the same yearGate governs the flag
+      // a gate-held row (open year / pre-base era / anchor window) is
+      // NOT emitted even past the generic hold — the same gate governs
+      // the flag
       val flagged = work
-        .withColumn("__EMITTED",
-          col("__EMITTED") || (!col("__HOLD") && holdGate))
+        .withColumn("__EMITTED", emittedNow)
         .drop("__HOLD")
         .withColumn("__RN", row_number().over(ord))
       val ranked =
@@ -1643,16 +1513,15 @@ object FameStream {
         }
         .reduceOption(_ || _).getOrElse(lit(false))
       // window aggregates (minRn/maxRn) may not sit inside WHERE —
-      // materialize the predicate as a column first. Chain plans also
-      // keep every still-unemitted row: the open year pends until it
-      // closes, and the pre-base-era backlog pends until the base year
-      // closes — both flushed (and dropped from the carry) the batch
-      // their gate opens.
-      // The year gate is monotone in date, so the unemitted rows form a
-      // SUFFIX per key — but they emit in a LATER batch than rows behind
-      // them, and their generic lags still read those rows then. Keep
-      // the suffix AND its maxLag physical predecessors (the newest-
-      // carrySize tail only guards the frontier, not a held suffix).
+      // materialize the predicate as a column first. Gated plans also
+      // keep every still-unemitted row (the open year, the pre-base-era
+      // backlog, the anchor window) — flushed, and dropped from the
+      // carry, the batch their gate opens.
+      // The gate holds a SUFFIX of each key's rows — but those emit in
+      // a LATER batch than rows behind them, and their generic lags
+      // still read those rows then. Keep the suffix AND its maxLag
+      // physical predecessors (the newest-carrySize tail only guards
+      // the frontier, not a held suffix).
       val keepUnemitted: Column =
         if (!gated) lit(false)
         else {
@@ -1688,66 +1557,12 @@ object FameStream {
           .select(cols.map(c => col(c.toUpperCase).as(c)): _*)
           .write.mode("overwrite").parquet(s"$bronzeDir/batch=$batchId")
       }
-      // finalize chain state: closed years' aggregate rows, computed
-      // from the output frame (derived source columns materialized) and
-      // unioned with the carried state — the state keeps the version
-      // finalized at close time; later partial rows of the same year
-      // (tail/pin leftovers) are anti-joined away
       // each finalized state is also handed to the next batch as an
       // in-memory leaf (built and written by its own pool task) — set
       // after quiescence below, only on batch success
-      val newStateRefs = scala.collection.mutable.ListBuffer
-        .empty[(String, java.util.concurrent.atomic.AtomicReference[DataFrame])]
-      plan.chains.foreach { c =>
-        val closed = out
-          .withColumn("__CYR", year(col(dateU)))
-          .withColumn("__CMAXYR", max(year(col(dateU))).over(kw))
-          .where(col("__CYR") < col("__CMAXYR"))
-        val fresh = graft.kernels.Indices.yearlyAggs(
-          closed, dateU, c.terms, keysU)
-        newStateRefs += c.target -> leafWrite(s"state:${c.target}",
-            s"$bronzeDir/_state/${c.target}/v=$batchId") {
-          chainSeeds.get(c.target) match {
-            case Some(st) => st.unionByName(fresh.join(
-              st.select((keysU :+ "__year").map(col): _*),
-              keysU :+ "__year", "left_anti"))
-            case None => fresh
-          }
-        }
-      }
-      // finalize fishvol state (relaxed-fp tier): per key, the raw
-      // prefix product at the NEWEST EMITTED row (emitted ⇒ base year
-      // closed ⇒ raw final) and the closed base average — recomputed
-      // from the same [[Indices.fishvolRaw]] plan the kernel ran, so
-      // the stored seed is the kernel's own value. Keys with no new
-      // emissions keep their carried row (anti-join).
-      plan.fishvols.foreach { f =>
-        val rawed = graft.kernels.Indices.fishvolRaw(out, dateU,
-          f.volumes, f.prices, f.baseYear, keysU, fishSeeds.get(f.target))
-          .withColumn("__FVEM",
-            (col("__EMITTED") || (!col("__HOLD") && holdGate)) &&
-              col("__FV_RAW").isNotNull)
-        val emRows = rawed.where(col("__FVEM"))
-        val fresh = (if (keysU.isEmpty) emRows.groupBy()
-          else emRows.groupBy(keysU.map(col): _*)).agg(
-            max_by(col("__FV_RAW"), col(dateU)).as("__FV_SEED"),
-            max(col(dateU)).as("__FV_SEED_DATE"),
-            max(col("__FV_BAVG")).as("__FV_BAVG_ST"))
-          // unkeyed groupBy() yields one all-null row when nothing has
-          // been emitted yet — that is "no state", not a seed
-          .where(col("__FV_SEED").isNotNull)
-        // the frame is built in the pool task, so the isEmpty probe (an
-        // action) stays off the stream thread
-        newStateRefs += f.target -> leafWrite(s"state:${f.target}",
-            s"$bronzeDir/_state/${f.target}/v=$batchId") {
-          fishSeeds.get(f.target) match {
-            case Some(old) if keysU.nonEmpty =>
-              fresh.unionByName(old.join(
-                fresh.select(keysU.map(col): _*), keysU, "left_anti"))
-            case Some(old) => if (fresh.isEmpty) old else fresh
-            case None => fresh
-          }
-        }
+      val newStateRefs = finalizes.map { case (t, finalize) =>
+        t -> leafWrite(s"state:$t", s"$bronzeDir/_state/$t/v=$batchId")(
+          finalize(out, seeds.get(t)))
       }
       // Await ALL pool futures before propagating any failure (ADVICE
       // r20): rethrowing at the FIRST failed write left later pool

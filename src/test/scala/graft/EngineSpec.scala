@@ -26,6 +26,19 @@ class EngineSpec extends SparkSpec {
     assertSeq(column(out, "RESULT"), Seq(Some(10.0), None))
   }
 
+  test("division by zero is NC: `/` and pct return null at a zero " +
+      "divisor instead of failing the job under ANSI mode") {
+    val in = frame(Seq("2020-01-01", "2020-02-01", "2020-03-01"),
+      "A" -> Seq(1.0, 0.0, 3.0), "B" -> Seq(2.0, 0.0, 4.0))
+    val out = FameSession.run("freq m\np = pct(a)\nq = a / b", in).df
+    assertSeq(column(out, "Q"), Seq(Some(0.5), None, Some(0.75)))
+    // pct after the zero level divides by it
+    assertSeq(column(out, "P"), Seq(None, Some(-100.0), None))
+    // a literal scalar division folds on the driver to the same NC
+    val s = FameSession.run("freq m\nscalar s = 1 / 0\nz = a + s", in).df
+    assertSeq(column(s, "Z"), Seq(None, None, None))
+  }
+
   test("F3: date-range masking (tests/test_fame2pygen.py:319-389)") {
     val in = frame(Seq("2019-12-01", "2020-06-01", "2020-12-01", "2021-06-01"))
     val out = FameSession.run(

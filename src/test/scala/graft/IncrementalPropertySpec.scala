@@ -6,7 +6,7 @@ import org.scalacheck.rng.Seed
 import graft.api.FameSession
 import graft.streaming.FameStream
 
-/** Property test for [[FameStream.incrementalEligibility]]'s reach
+/** Property test for [[FameStream.incrementalPlan]]'s reach
   * arithmetic (VERDICT r11 task 4): over randomly generated scripts
   * mixing lags, leads, nested pct/diff, whole-series functions, scalars
   * and chained derived-series references,
@@ -33,6 +33,27 @@ class IncrementalPropertySpec extends SparkSpec {
     (0 until n).foreach { i =>
       f(gen.pureApply(Gen.Parameters.default, Seed(0xFA7E + i), retries = 100))
     }
+
+  // The lag-only and lead-aware projections of the one incremental
+  // plan: eligibility is Right(maxLag) only for a plan that emits every
+  // row on arrival from a tail alone, reach is Right((maxLead, maxLag))
+  // only for a plan with no pins, buckets or hold-back specs.
+  private def incrementalEligibility(script: String,
+      inputColumns: Option[Set[String]] = None): Either[String, Int] =
+    incrementalReach(script, inputColumns).flatMap {
+      case (0, lag) => Right(lag)
+      case (lead, _) => Left(s"lead reach +$lead")
+    }
+
+  private def incrementalReach(script: String,
+      inputColumns: Option[Set[String]] = None)
+      : Either[String, (Int, Int)] =
+    graft.streaming.FameStream.incrementalPlan(script, inputColumns)
+      .flatMap { p =>
+        if (p.pins.isEmpty && !p.bucketed && p.holdBacks.isEmpty)
+          Right((p.maxLead, p.maxLag))
+        else Left(s"plan needs pins, buckets or hold-back specs: $p")
+      }
 
   // --- generator: expression text + the generator's OWN reach algebra ---
   // Reach is Either[refused, (maxLead, maxLag)] relative to the current
@@ -380,18 +401,19 @@ class IncrementalPropertySpec extends SparkSpec {
           "A" -> idx.map(av), "PA" -> idx.map(pav),
           "B" -> idx.map(bv), "PB" -> idx.map(pbv))
         val cols = Some(Set("DATE", "A", "PA", "B", "PB"))
-        // strict/reach tiers refuse; the plan carries the ChainSpec;
-        // keyed verdict equals unkeyed (chains stream keyed)
-        assert(FameStream.incrementalEligibility(script,
+        // the tail-only/lead-only projections refuse; the plan carries
+        // the ChainSpec; keyed verdict equals unkeyed (chains stream
+        // keyed)
+        assert(incrementalEligibility(script,
           inputColumns = cols).isLeft, script)
-        assert(FameStream.incrementalReach(script,
+        assert(incrementalReach(script,
           inputColumns = cols).isLeft, script)
         val got = FameStream.incrementalPlan(script, inputColumns = cols)
         assert(got == Right(FameStream.IncrementalPlan(0, lagK, Nil,
           bucketed = false,
           chains = Seq(FameStream.ChainSpec("X", terms, base)))),
           s"plan said $got:\n$script")
-        assert(FameStream.incrementalPlan(script, partitioned = true,
+        assert(FameStream.incrementalPlan(script,
           inputColumns = Some(Set("DATE", "K", "A", "PA", "B", "PB")))
           == got, script)
         val full = FameSession.run(script, fr(present)).df
@@ -525,7 +547,7 @@ class IncrementalPropertySpec extends SparkSpec {
         // the schema is what lets the walker trust a masked target had
         // nothing to preserve (bounded support) — the streaming entry
         // points pass it the same way
-        val got = FameStream.incrementalEligibility(script,
+        val got = incrementalEligibility(script,
           inputColumns = Some(Set("REV", "CNT")))
         expect match {
           case Left(_) =>
@@ -608,8 +630,8 @@ class IncrementalPropertySpec extends SparkSpec {
       Gen.listOfN(9, Gen.choose(1, 50)),
       Gen.listOfN(9, Gen.choose(1, 50))), n = 140) {
       case ((script, expect), revRaw, cntRaw) =>
-        val keyed = FameStream.incrementalEligibility(script,
-          partitioned = true, inputColumns = Some(Set("REV", "CNT", "K")))
+        val keyed = incrementalEligibility(script,
+          inputColumns = Some(Set("REV", "CNT", "K")))
         expect match {
           case Left(_) =>
             // keyed execution supports the full eligible surface, so
@@ -733,11 +755,11 @@ class IncrementalPropertySpec extends SparkSpec {
       Gen.listOfN(9, Gen.choose(1, 50)),
       Gen.listOfN(9, Gen.choose(1, 50))), n = 120) {
       case ((script, expect), revRaw, cntRaw) =>
-        val got = FameStream.incrementalReach(script,
+        val got = incrementalReach(script,
           inputColumns = Some(Set("REV", "CNT")))
         // keyed verdicts must equal unkeyed across the lead surface too
         // (the q215 bug class: a keyed path silently diverging)
-        assert(FameStream.incrementalReach(script, partitioned = true,
+        assert(incrementalReach(script,
           inputColumns = Some(Set("REV", "CNT", "K"))) == got, script)
         expect match {
           case Left(_) =>
@@ -905,7 +927,7 @@ class IncrementalPropertySpec extends SparkSpec {
         // (a draw with only plain lags under the open mask is
         // legitimately tail-eligible — no fixed reads, no pins)
         if (wantPins.nonEmpty)
-          assert(FameStream.incrementalReach(script,
+          assert(incrementalReach(script,
             inputColumns = Some(Set("REV", "CNT"))).isLeft, script)
         val got = FameStream.incrementalPlan(script,
           inputColumns = Some(Set("REV", "CNT")))
@@ -916,7 +938,7 @@ class IncrementalPropertySpec extends SparkSpec {
         // verdicts identically keyed and unkeyed: the batch engine
         // extracts series-derived scalars per key, so the keyed replay
         // is as deterministic as the unkeyed one
-        val keyed = FameStream.incrementalPlan(script, partitioned = true,
+        val keyed = FameStream.incrementalPlan(script,
           inputColumns = Some(Set("REV", "CNT", "K")))
         assert(keyed == got, script)
         if (script.contains("scalar sc")) {
@@ -1066,7 +1088,7 @@ class IncrementalPropertySpec extends SparkSpec {
           inputColumns = Some(Set("REV"))) ==
           Right(FameStream.IncrementalPlan(2, lag, Nil, bucketed = true)),
           script)
-        assert(FameStream.incrementalPlan(script, partitioned = true,
+        assert(FameStream.incrementalPlan(script,
           inputColumns = Some(Set("REV", "K"))) ==
           FameStream.incrementalPlan(script,
             inputColumns = Some(Set("REV"))), script)

@@ -13,6 +13,27 @@ class StreamingSpec extends SparkSpec {
 
   private def ts(s: String): Timestamp = Timestamp.valueOf(s)
 
+  // The lag-only and lead-aware projections of the one incremental
+  // plan: eligibility is Right(maxLag) only for a plan that emits every
+  // row on arrival from a tail alone, reach is Right((maxLead, maxLag))
+  // only for a plan with no pins, buckets or hold-back specs.
+  private def incrementalEligibility(script: String,
+      inputColumns: Option[Set[String]] = None): Either[String, Int] =
+    incrementalReach(script, inputColumns).flatMap {
+      case (0, lag) => Right(lag)
+      case (lead, _) => Left(s"lead reach +$lead")
+    }
+
+  private def incrementalReach(script: String,
+      inputColumns: Option[Set[String]] = None)
+      : Either[String, (Int, Int)] =
+    graft.streaming.FameStream.incrementalPlan(script, inputColumns)
+      .flatMap { p =>
+        if (p.pins.isEmpty && !p.bucketed && p.holdBacks.isEmpty)
+          Right((p.maxLead, p.maxLag))
+        else Left(s"plan needs pins, buckets or hold-back specs: $p")
+      }
+
   test("windowed counts aggregate a stream with watermark") {
     implicit val sql = spark.sqlContext
     import spark.implicits._
@@ -1036,7 +1057,6 @@ class StreamingSpec extends SparkSpec {
 
   test("incremental eligibility: forward-only scripts get their max lag, " +
       "whole-series/backward/lead constructs are named and refused") {
-    import graft.streaming.FameStream.incrementalEligibility
     assert(incrementalEligibility(
       "freq m\nbase = 100\nv2 = rev * 2\ngrowth = pct(v2)") == Right(1))
     // nested reach accumulates: pct(v[t-2], 3) looks 5 back
@@ -1245,14 +1265,13 @@ class StreamingSpec extends SparkSpec {
     // quarterly distance counts quarters, not months
     assert(incrementalEligibility(
       "freq q\nx[1995-10-01] = rev[\"1995-01-01\"]") == Right(3))
-    // PARTITIONED execution adds no refusals since r16: lookups
-    // materialize as per-key columns in the executor, so the keyed
-    // verdict and maxLag equal the unkeyed ones
+    // PARTITIONED execution adds no refusals since r16 (one plan for
+    // keyed and unkeyed streams): lookups materialize as per-key
+    // columns in the executor, so the keyed maxLag is the unkeyed one
     assert(incrementalEligibility(
-      "freq m\nx[1995-05-01] = rev[\"1995-02-01\"]",
-      partitioned = true) == Right(3))
+      "freq m\nx[1995-05-01] = rev[\"1995-02-01\"]") == Right(3))
     assert(incrementalEligibility(
-      "freq m\na = pct(rev)\nb = pct(a)", partitioned = true) == Right(2))
+      "freq m\na = pct(rev)\nb = pct(a)") == Right(2))
     // the r16 widening: bounded-support whole-series shapes are
     // eligible UNDER PARTITIONED execution too — the executor compiles
     // ave/firstvalue/lastvalue/dateof to windows PARTITIONED BY the
@@ -1261,20 +1280,19 @@ class StreamingSpec extends SparkSpec {
     assert(incrementalEligibility(
       "freq m\nset <date 1995-02-01 to 1995-04-01> m1 = rev\n" +
         "x[1995-06-01] = ave(m1)",
-      partitioned = true, inputColumns = cols) == Right(4))
+      inputColumns = cols) == Right(4))
     assert(incrementalEligibility(
       "freq m\nset <date 1995-02-01 to 1995-04-01> m1 = rev\n" +
         "d[1995-06-01] = dateof(m1, *, contain, end)",
-      partitioned = true, inputColumns = cols) == Right(4))
+      inputColumns = cols) == Right(4))
     // …while the UNBOUNDED whole-series shape stays refused by name
-    // under partitioned, exactly as unkeyed
     assert(incrementalEligibility("freq m\nx = ave(rev)",
-      partitioned = true, inputColumns = cols).isLeft)
+      inputColumns = cols).isLeft)
     // masked keyed lookup: same horizon arithmetic as unkeyed (r16 —
     // the executor's per-key lookup columns make it key-correct)
     assert(incrementalEligibility(
-      "freq m\nset <date 1995-04-01 to 1995-05-01> a = rev / rev[\"1995-01-01\"]\nb = diff(a)",
-      partitioned = true) == Right(5))
+      "freq m\nset <date 1995-04-01 to 1995-05-01> a = rev / rev[\"1995-01-01\"]\nb = diff(a)")
+      == Right(5))
     // r16 support widening: if/else and least/greatest of TWO bounded
     // series stay bounded (null where both branches are) — but one
     // literal/unbounded side unbounds the whole expression (least
@@ -1312,7 +1330,7 @@ class StreamingSpec extends SparkSpec {
       """freq m
         |a = pct(rev)
         |b = pct(a)""".stripMargin
-    assert(graft.streaming.FameStream.incrementalEligibility(script)
+    assert(incrementalEligibility(script)
       == Right(2))
     def d(s: String) = java.sql.Date.valueOf(s)
     val batches = Seq(
@@ -1354,7 +1372,7 @@ class StreamingSpec extends SparkSpec {
       """freq m
         |set <date 1995-04-01 to 1995-05-01> a = rev / rev["1995-01-01"]
         |b = diff(a)""".stripMargin
-    assert(graft.streaming.FameStream.incrementalEligibility(script)
+    assert(incrementalEligibility(script)
       == Right(5))
     def d(s: String) = java.sql.Date.valueOf(s)
     val batches = Seq(
@@ -1397,7 +1415,7 @@ class StreamingSpec extends SparkSpec {
         |set <date 1995-02-01 to 1995-03-01> m1 = rev
         |x[1995-05-01] = ave(m1)
         |set <date 1995-04-01 to 1995-06-01> y = lastvalue(m1)""".stripMargin
-    assert(graft.streaming.FameStream.incrementalEligibility(script,
+    assert(incrementalEligibility(script,
       inputColumns = Some(Set("DATE", "REV"))) == Right(4))
     def d(s: String) = java.sql.Date.valueOf(s)
     val batches = Seq(
@@ -1439,7 +1457,7 @@ class StreamingSpec extends SparkSpec {
       """freq m
         |set <date 1995-02-01 to 1995-03-01> m1 = rev
         |d[1995-06-01] = dateof(m1, *, contain, end)""".stripMargin
-    assert(graft.streaming.FameStream.incrementalEligibility(script,
+    assert(incrementalEligibility(script,
       inputColumns = Some(Set("DATE", "REV"))) == Right(4))
     def d(s: String) = java.sql.Date.valueOf(s)
     val batches = Seq(
@@ -1562,6 +1580,46 @@ class StreamingSpec extends SparkSpec {
     assert(got.size == 4)
   }
 
+  test("FameStream.run auto-dispatch keeps anchored SHIFT_PCT scripts " +
+      "on the snapshot path: anchor hold-back withholds the window until " +
+      "the frontier passes the anchor — a different output contract — so " +
+      "Auto must not route them incrementally") {
+    implicit val sql = spark.sqlContext
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    def d(s: String) = java.sql.Date.valueOf(s)
+    val base = java.nio.file.Files.createTempDirectory("famespauto").toString
+    val script = """freq m
+                   |lvl = rev * 2
+                   |date 1995-03-01 to 1996-06-01
+                   |lvl[t] = lvl[t+1]/(1+(pct(rev[t+1])/100))""".stripMargin
+    // the plan holds [1995-03, 1996-06] back; every row below ends
+    // BEFORE the anchor, so the incremental form would emit only Jan/Feb
+    val months = (1 to 8).map(m => d(f"1995-$m%02d-01"))
+    val revs = Seq(100.0, 110.0, 120.0, 115.0, 130.0, 125.0, 140.0, 150.0)
+    val batches = months.zip(revs).grouped(4).toSeq
+    val src = MemoryStream[(java.sql.Date, Double)]
+    val df = src.toDF().toDF("DATE", "REV")
+    val q = graft.streaming.FameStream.run(df, script,
+      s"$base/bronze", s"$base/result",
+      checkpointDir = Some(s"$base/ckpt"))
+    try batches.foreach { b => src.addData(b: _*); q.processAllAvailable() }
+    finally q.stop()
+    // snapshot layout: flat gold overwrite, no versioned tail — and
+    // EVERY row present
+    assert(!new java.io.File(s"$base/bronze/_tail").exists(),
+      "anchored shift_pct script was routed incrementally by Auto")
+    assert(!new java.io.File(s"$base/result/batch=0").exists())
+    def cells(dfx: org.apache.spark.sql.DataFrame) = dfx
+      .select(col("DATE").cast("string"), col("LVL"))
+      .orderBy("DATE").collect()
+      .map(r => (r.getString(0), Option(r.get(1)))).toSeq
+    val got = cells(spark.read.parquet(s"$base/result"))
+    assert(got == cells(graft.api.FameSession.run(script,
+      months.zip(revs).toDF("DATE", "REV")).df))
+    assert(got.size == months.size)
+  }
+
   test("FameStream.run auto-dispatch: eligible scripts take the " +
       "incremental path, ineligible fall back to snapshot; parity on both") {
     implicit val sql = spark.sqlContext
@@ -1651,7 +1709,7 @@ class StreamingSpec extends SparkSpec {
         |v2 = rev * 2
         |growth = pct(v2)
         |d2 = rev - rev[t-2]""".stripMargin
-    assert(graft.streaming.FameStream.incrementalEligibility(script)
+    assert(incrementalEligibility(script)
       == Right(2))
     def d(s: String) = java.sql.Date.valueOf(s)
     val batches = Seq(
@@ -1702,16 +1760,18 @@ class StreamingSpec extends SparkSpec {
   test("eligibility frontier (r16): lead-of-lagged-series and open-" +
       "ended masks are refused BY NAME, and necessarily — counterexamples " +
       "show the would-be-accepted shapes break batch parity") {
-    import graft.streaming.FameStream.incrementalEligibility
     // b[t] = a[t+1] = rev[t-2]: the VALUE dependence is net-backward,
     // but the COMPILED plan is lag(a, -1) over the window — it reads
     // through the next physical row, which at a batch edge has not
     // arrived yet. The walker must refuse despite the backward net
     // offset; interval arithmetic that cancelled the offsets would be
     // unsound against this executor.
+    import graft.streaming.FameStream.{incrementalPlan, IncrementalPlan, Pin}
     val script = "freq m\na = rev[t-3]\nb = a[t+1]"
     val got = incrementalEligibility(script)
-    assert(got.isLeft && got.swap.exists(_.contains("lead")), got.toString)
+    assert(got.isLeft, got.toString)
+    // the refusal is the lead term: b's lag(a, -1) is a lead of 1
+    assert(incrementalPlan(script) == Right(IncrementalPlan(1, 3, Nil)))
     // NECESSITY, not conservatism: the whole-history run has a real b
     // at 1995-04-01 (a's May row exists, carrying February's rev); a
     // work frame ending at April — exactly a batch edge — yields null
@@ -1730,22 +1790,25 @@ class StreamingSpec extends SparkSpec {
     assert(bAt(work).isEmpty,
       "work-frame April b is null at the batch edge — the refusal is " +
         "necessary, a maxLag tail cannot supply a next ROW")
-    // open-ENDED mask: no horizon end bounds the affected rows, so
-    // lookups and whole-series functions stay refused by name
+    // open-ENDED mask: no horizon end bounds the affected rows, so a
+    // tail alone cannot serve lookups and whole-series functions — the
+    // plan carries their fixed targets as PINS instead
     val cols = Some(Set("DATE", "REV"))
-    val l1 = incrementalEligibility(
-      "freq m\ndate 1995-02-01 to *\nx = rev / rev[\"1995-01-01\"]",
-      inputColumns = cols)
-    assert(l1.isLeft && l1.swap.exists(_.contains("closed date mask")),
-      l1.toString)
-    val l2 = incrementalEligibility(
-      "freq m\nset <date 1995-02-01 to 1995-03-01> m1 = rev\n" +
-        "date 1995-04-01 to *\nz = ave(m1)", inputColumns = cols)
-    assert(l2.isLeft && l2.swap.exists(_.contains("closed horizon")),
-      l2.toString)
+    def day(s: String) = java.time.LocalDate.parse(s)
+    val s1 = "freq m\ndate 1995-02-01 to *\nx = rev / rev[\"1995-01-01\"]"
+    val l1 = incrementalEligibility(s1, inputColumns = cols)
+    assert(l1.isLeft, l1.toString)
+    assert(incrementalPlan(s1, inputColumns = cols) == Right(IncrementalPlan(
+      0, 0, Seq(Pin(day("1995-01-01"), day("1995-01-01"), 0, 0)))))
+    val s2 = "freq m\nset <date 1995-02-01 to 1995-03-01> m1 = rev\n" +
+      "date 1995-04-01 to *\nz = ave(m1)"
+    val l2 = incrementalEligibility(s2, inputColumns = cols)
+    assert(l2.isLeft, l2.toString)
+    assert(incrementalPlan(s2, inputColumns = cols) == Right(IncrementalPlan(
+      0, 0, Seq(Pin(day("1995-02-01"), day("1995-03-01"), 0, 0)))))
     // open-STARTED mask: the horizon END exists but the earliest
     // affected row is unknown, so a fixed-date read can still be a
-    // forward read for early rows — refused by the same names
+    // forward read for early rows — refused
     val l3 = incrementalEligibility(
       "freq m\ndate * to 1995-05-01\nx = rev / rev[\"1995-03-01\"]",
       inputColumns = cols)
@@ -1755,15 +1818,15 @@ class StreamingSpec extends SparkSpec {
     // emission (the next test), not by a longer tail: b's physical
     // lead(a, 1) needs the next row to have ARRIVED, so emission waits
     // for it. Global lag is a's own 3, not b's net 2.
-    assert(graft.streaming.FameStream.incrementalReach(script)
+    assert(incrementalReach(script)
       == Right((1, 3)))
     // where hold-back cannot help, the lead-aware walker still refuses:
     // unbounded constructs (open masks, whole-series over unbounded
     // support) have no finite (lead, lag) either
-    assert(graft.streaming.FameStream.incrementalReach(
+    assert(incrementalReach(
       "freq m\ndate 1995-02-01 to *\nx = rev / rev[\"1995-01-01\"]",
       inputColumns = cols).isLeft)
-    assert(graft.streaming.FameStream.incrementalReach(
+    assert(incrementalReach(
       "x = ave(rev)", inputColumns = cols).isLeft)
   }
 
@@ -1783,8 +1846,8 @@ class StreamingSpec extends SparkSpec {
         |fchg = (rev[t+1] - rev) / rev * 100
         |a = rev[t-1]
         |nxt2 = a[t+2]""".stripMargin
-    assert(graft.streaming.FameStream.incrementalEligibility(script).isLeft)
-    assert(graft.streaming.FameStream.incrementalReach(script)
+    assert(incrementalEligibility(script).isLeft)
+    assert(incrementalReach(script)
       == Right((2, 1)))
     def d(s: String) = java.sql.Date.valueOf(s)
     val dates = (1 to 6).map(m => f"1995-0$m-01")
@@ -1862,12 +1925,12 @@ class StreamingSpec extends SparkSpec {
         |set <date 1994-07-01 to *> rel = rev / rev["1994-01-01"] * 100
         |set <date 1994-08-01 to *> dd = dateof(base, *, contain, end)""".stripMargin
     val cols = Some(Set("DATE", "K", "REV"))
-    assert(FameStream.incrementalEligibility(script, partitioned = true,
+    assert(incrementalEligibility(script,
       inputColumns = cols).isLeft)
-    assert(FameStream.incrementalReach(script, partitioned = true,
+    assert(incrementalReach(script,
       inputColumns = cols).isLeft)
     import java.time.LocalDate
-    assert(FameStream.incrementalPlan(script, partitioned = true,
+    assert(FameStream.incrementalPlan(script,
       inputColumns = cols) == Right(FameStream.IncrementalPlan(0, 1, Seq(
         FameStream.Pin(LocalDate.parse("1994-02-01"),
           LocalDate.parse("1994-03-01"), 0, 0),
@@ -1955,7 +2018,7 @@ class StreamingSpec extends SparkSpec {
         |a = rev[t-1]
         |set <date 1995-06-01 to *> z = rev / a["1995-04-01"]""".stripMargin
     import java.time.LocalDate
-    assert(FameStream.incrementalPlan(script, partitioned = true,
+    assert(FameStream.incrementalPlan(script,
       inputColumns = Some(Set("DATE", "K", "REV"))) ==
       Right(FameStream.IncrementalPlan(0, 1, Seq(
         FameStream.Pin(LocalDate.parse("1995-04-01"),
@@ -2023,10 +2086,10 @@ class StreamingSpec extends SparkSpec {
       """freq m
         |mom = pct(rev)
         |rev_q = convert(rev, q, discrete, sum)""".stripMargin
-    assert(FameStream.incrementalEligibility(script).isLeft)
-    // converts are PLAN-tier only: reach's (lead, lag) alone would let
+    assert(incrementalEligibility(script).isLeft)
+    // converts need the plan's bucket term: (lead, lag) alone would let
     // a tail-based caller drop sparse frames' synthetic anchors
-    assert(FameStream.incrementalReach(script).isLeft)
+    assert(incrementalReach(script).isLeft)
     assert(FameStream.incrementalPlan(script) ==
       Right(FameStream.IncrementalPlan(2, 1, Nil, bucketed = true)))
     // the span table: hold = max source rows per target bucket − 1
@@ -2359,7 +2422,7 @@ class StreamingSpec extends SparkSpec {
         |set <date 1995-06-01 to *> z = rev / s0 + s1""".stripMargin
     val cols = Some(Set("DATE", "REV"))
     import java.time.LocalDate
-    assert(FameStream.incrementalEligibility(script,
+    assert(incrementalEligibility(script,
       inputColumns = cols).isLeft)
     assert(FameStream.incrementalPlan(script, inputColumns = cols) ==
       Right(FameStream.IncrementalPlan(0, 1, Seq(
@@ -2380,7 +2443,7 @@ class StreamingSpec extends SparkSpec {
     // series-derived scalars per key (each key's own support-window
     // value), so the replay is deterministic — same plan as unkeyed
     // (q221 carries the keyed 3-chunk hash-parity gate proof)
-    assert(FameStream.incrementalPlan(script, partitioned = true,
+    assert(FameStream.incrementalPlan(script,
       inputColumns = Some(Set("DATE", "K", "REV"))) ==
       FameStream.incrementalPlan(script, inputColumns = cols))
     assert(FameStream.incrementalPlan(
@@ -2439,19 +2502,20 @@ class StreamingSpec extends SparkSpec {
         |mom = pct(a)
         |set x = $chain("a - b", "1997")""".stripMargin
     val cols = Some(Set("DATE", "K", "A", "PA", "B", "PB"))
-    // strict and reach tiers refuse; the PLAN accepts with a ChainSpec
-    assert(FameStream.incrementalEligibility(script, partitioned = true,
+    // the tail-only and lead-only projections refuse; the plan carries
+    // a ChainSpec
+    assert(incrementalEligibility(script,
       inputColumns = cols).isLeft)
-    assert(FameStream.incrementalReach(script, partitioned = true,
+    assert(incrementalReach(script,
       inputColumns = cols).isLeft)
-    assert(FameStream.incrementalPlan(script, partitioned = true,
+    assert(FameStream.incrementalPlan(script,
       inputColumns = cols) == Right(FameStream.IncrementalPlan(0, 1, Nil,
         bucketed = false,
         chains = Seq(FameStream.ChainSpec("X",
           Seq((1, "A"), (-1, "B")), 1997)))))
     // named-reason fences: downstream reads of the sealed index, source
     // reassignment after the chain, chain+convert composition, a lagged
-    // source, and fishvol's per-row fold
+    // source
     assert(FameStream.incrementalPlan(
       script + "\nz = x * 2", inputColumns = cols).isLeft)
     assert(FameStream.incrementalPlan(
@@ -2486,14 +2550,18 @@ class StreamingSpec extends SparkSpec {
         |c = a[t-1]
         |pc = pa[t-1]""".stripMargin,
       inputColumns = cols).isLeft)
+    // fishvol's per-row fold streams on the same plan (its seeded fold
+    // is bit-exact — the fishvol tests below), with its own spec
     assert(FameStream.incrementalPlan(
       "freq m\nx = fishvol_rebase({a},{pa},1996)",
-      inputColumns = cols).isLeft)
-    // forward references through ORDINARY statements are refused at
-    // every tier (r17 find: `b = a[t-1]; a = pct(rev)` used to verdict
+      inputColumns = cols) ==
+      Right(FameStream.IncrementalPlan(0, 1, Nil, fishvols = Seq(
+        FameStream.FishvolSpec("X", Seq("A"), Seq("PA"), 1996)))))
+    // forward references through ORDINARY statements are refused
+    // (r17 find: `b = a[t-1]; a = pct(rev)` used to verdict
     // Right(1) where the true transitive reach is 2 — the scheduler
     // computes `a` first, so the tail was silently under-carried)
-    assert(FameStream.incrementalEligibility(
+    assert(incrementalEligibility(
       "freq m\nb = a[t-1]\na = pct(rev)",
       inputColumns = Some(Set("DATE", "REV"))).isLeft)
     assert(FameStream.incrementalPlan(
@@ -2501,7 +2569,7 @@ class StreamingSpec extends SparkSpec {
       inputColumns = Some(Set("DATE", "REV"))).isLeft)
     // ...and the dependency-ordered spelling of the same script is
     // accepted with the CORRECT transitive reach
-    assert(FameStream.incrementalEligibility(
+    assert(incrementalEligibility(
       "freq m\na = pct(rev)\nb = a[t-1]",
       inputColumns = Some(Set("DATE", "REV"))) == Right(2))
     // integer-valued series: every yearly sum/avg is order-independent
@@ -2590,41 +2658,39 @@ class StreamingSpec extends SparkSpec {
         |mom = pct(a)
         |x = fishvol_rebase({a,b},{pa,pb},1996)""".stripMargin
     val cols = Some(Set("DATE", "K", "A", "PA", "B", "PB"))
-    // DEFAULT stays refused at every tier, message naming the flag
-    assert(FameStream.incrementalPlan(script, partitioned = true,
-      inputColumns = cols).left.exists(_.contains("relaxedFp")))
-    assert(FameStream.incrementalEligibility(script,
+    // the tail-only projection refuses (base-year hold-back needs
+    // runIncremental); the default plan accepts with this FishvolSpec
+    // and maxLag 1 (the Fisher link reads each source at t−1)
+    assert(incrementalEligibility(script,
       inputColumns = cols).isLeft)
-    // the relaxed tier accepts with a FishvolSpec and maxLag 1 (the
-    // Fisher link reads each source at t−1)
-    assert(FameStream.incrementalPlan(script, partitioned = true,
-      inputColumns = cols, relaxedFp = true) ==
+    assert(FameStream.incrementalPlan(script,
+      inputColumns = cols) ==
       Right(FameStream.IncrementalPlan(0, 1, Nil, bucketed = false,
         fishvols = Seq(FameStream.FishvolSpec("X", Seq("A", "B"),
           Seq("PA", "PB"), 1996)))))
     // fences: downstream reads of the sealed index, source
     // reassignment, composition with convert/chain, lead-bearing source
     assert(FameStream.incrementalPlan(script + "\nz = x * 2",
-      inputColumns = cols, relaxedFp = true).isLeft)
+      inputColumns = cols).isLeft)
     assert(FameStream.incrementalPlan(script + "\na = a * 2",
-      inputColumns = cols, relaxedFp = true).isLeft)
+      inputColumns = cols).isLeft)
     assert(FameStream.incrementalPlan(
       script + "\nv = convert(a, q, discrete, sum)",
-      inputColumns = cols, relaxedFp = true).isLeft)
+      inputColumns = cols).isLeft)
     assert(FameStream.incrementalPlan(
       script + "\nset y = $chain(\"a\", \"1996\")",
-      inputColumns = cols, relaxedFp = true).isLeft)
+      inputColumns = cols).isLeft)
     assert(FameStream.incrementalPlan(
       """freq m
         |c = a[t+1]
         |x = fishvol_rebase({c},{pa},1996)""".stripMargin,
-      inputColumns = cols, relaxedFp = true).isLeft)
+      inputColumns = cols).isLeft)
     // a LAGGED source folds its reach into maxLag (1 + 1)
     assert(FameStream.incrementalPlan(
       """freq m
         |c = a[t-1]
         |x = fishvol_rebase({c},{pa},1996)""".stripMargin,
-      inputColumns = cols, relaxedFp = true) ==
+      inputColumns = cols) ==
       Right(FameStream.IncrementalPlan(0, 2, Nil, bucketed = false,
         fishvols = Seq(FameStream.FishvolSpec("X", Seq("C"),
           Seq("PA"), 1996)))))
@@ -2647,7 +2713,7 @@ class StreamingSpec extends SparkSpec {
     val df = src.toDF().toDF("K", "DATE", "A", "PA", "B", "PB")
     val q = FameStream.runIncremental(df, script,
       s"$dir/bronze", s"$dir/result", partitionKeys = Seq("K"),
-      checkpointDir = Some(s"$dir/ckpt"), relaxedFp = true)
+      checkpointDir = Some(s"$dir/ckpt"))
     try Seq(0 until 14, 14 until 34, 34 until 42).foreach { r =>
       src.addData(rows(r): _*); q.processAllAvailable()
     } finally q.stop()
@@ -2692,26 +2758,27 @@ class StreamingSpec extends SparkSpec {
         |date 1995-03-01 to 1996-06-01
         |lvl[t] = lvl[t+1]/(1+(pct(rev[t+1])/100))""".stripMargin
     val cols = Some(Set("DATE", "K", "REV"))
-    // open/default-anchor forms stay refused by name on every tier
+    // open/default-anchor forms stay refused by name
     assert(FameStream.incrementalPlan(
       """freq m
         |lvl = rev * 2
         |lvl[t] = lvl[t+1]/(1+(pct(rev[t+1])/100))""".stripMargin,
-      partitioned = true, inputColumns = cols)
+      inputColumns = cols)
       .left.exists(_.contains("series end")))
     assert(FameStream.incrementalPlan(
       """freq m
         |lvl = rev * 2
         |date 1995-03-01 to *
         |lvl[t] = lvl[t+1]/(1+(pct(rev[t+1])/100))""".stripMargin,
-      partitioned = true, inputColumns = cols)
+      inputColumns = cols)
       .left.exists(_.contains("series end")))
-    // the reach tier refuses (anchor hold-back needs runIncremental)
-    assert(FameStream.incrementalEligibility(script,
+    // the tail-only projection refuses (anchor hold-back needs
+    // runIncremental)
+    assert(incrementalEligibility(script,
       inputColumns = cols).isLeft)
-    // the DEFAULT plan tier accepts — no relaxedFp needed: the flush is
-    // a single in-frame computation, never a cross-batch fold
-    assert(FameStream.incrementalPlan(script, partitioned = true,
+    // the plan accepts — the flush is a single in-frame computation,
+    // never a cross-batch fold
+    assert(FameStream.incrementalPlan(script,
       inputColumns = cols) ==
       Right(FameStream.IncrementalPlan(0, 1, Nil, bucketed = false,
         shiftPcts = Seq(FameStream.ShiftPctSpec("LVL", "REV",
@@ -2732,7 +2799,7 @@ class StreamingSpec extends SparkSpec {
     // hold have different emission cutoffs
     assert(FameStream.incrementalPlan(
       script + "\ndate *\nu = convert(rev, w, linear, average)",
-      partitioned = true, inputColumns = cols)
+      inputColumns = cols)
       .left.exists(_.contains("alongside")))
     assert(FameStream.incrementalPlan(
       """freq m
@@ -2740,7 +2807,7 @@ class StreamingSpec extends SparkSpec {
         |lvl = rev * 2
         |date 1995-03-01 to 1996-06-01
         |lvl[t] = lvl[t+1]/(1+(pct(rev[t+1])/100))""".stripMargin,
-      partitioned = true, inputColumns = cols)
+      inputColumns = cols)
       .left.exists(_.contains("alongside")))
     assert(FameStream.incrementalPlan(
       """freq m
@@ -2806,7 +2873,7 @@ class StreamingSpec extends SparkSpec {
         |set x = $chain("a - b", "1996")
         |set y = $chain("b", "1995")""".stripMargin
     val cols = Some(Set("DATE", "K", "A", "PA", "B", "PB"))
-    assert(FameStream.incrementalPlan(script, partitioned = true,
+    assert(FameStream.incrementalPlan(script,
       inputColumns = cols) == Right(FameStream.IncrementalPlan(0, 0, Nil,
         bucketed = false,
         chains = Seq(
@@ -3017,8 +3084,8 @@ class StreamingSpec extends SparkSpec {
         |x = fishvol_rebase({a},{pa},1995)
         |y = fishvol_rebase({b},{pb},1996)""".stripMargin
     val cols = Some(Set("DATE", "K", "A", "PA", "B", "PB"))
-    assert(FameStream.incrementalPlan(script, partitioned = true,
-      inputColumns = cols, relaxedFp = true) ==
+    assert(FameStream.incrementalPlan(script,
+      inputColumns = cols) ==
       Right(FameStream.IncrementalPlan(0, 1, Nil, bucketed = false,
         fishvols = Seq(
           FameStream.FishvolSpec("X", Seq("A"), Seq("PA"), 1995),
@@ -3045,7 +3112,7 @@ class StreamingSpec extends SparkSpec {
     val df = src.toDF().toDF("K", "DATE", "A", "PA", "B", "PB")
     val q = FameStream.runIncremental(df, script,
       s"$dir/bronze", s"$dir/result", partitionKeys = Seq("K"),
-      checkpointDir = Some(s"$dir/ckpt"), relaxedFp = true)
+      checkpointDir = Some(s"$dir/ckpt"))
     try Seq(0 until 14, 14 until 34, 34 until 42).foreach { r =>
       src.addData(rows(r): _*); q.processAllAvailable()
     } finally q.stop()
@@ -3103,7 +3170,7 @@ class StreamingSpec extends SparkSpec {
     def start() = FameStream.runIncremental(
       spark.readStream.schema(schema).parquet(s"$base/src"), script,
       s"$base/bronze", s"$base/result", partitionKeys = Seq("K"),
-      checkpointDir = Some(s"$base/ckpt"), relaxedFp = true)
+      checkpointDir = Some(s"$base/ckpt"))
     val q1 = start()
     try { q1.processAllAvailable(); chunk(14 until 34)
       q1.processAllAvailable() } finally q1.stop()
@@ -3159,7 +3226,7 @@ class StreamingSpec extends SparkSpec {
         |set <date 1995-05-01 to *> idx = rev / ave(base) * 100
         |rev_q = convert(rev, q, discrete, sum)""".stripMargin
     import java.time.LocalDate
-    assert(FameStream.incrementalPlan(script, partitioned = true,
+    assert(FameStream.incrementalPlan(script,
       inputColumns = Some(Set("DATE", "K", "REV"))) ==
       Right(FameStream.IncrementalPlan(2, 1, Seq(
         FameStream.Pin(LocalDate.parse("1995-01-01"),
@@ -3240,8 +3307,8 @@ class StreamingSpec extends SparkSpec {
         |b = pct(a)
         |set <date 1995-02-01 to 1995-03-01> m1 = rev
         |set <date 1995-04-01 to 1995-06-01> z = rev / ave(m1)""".stripMargin
-    assert(graft.streaming.FameStream.incrementalEligibility(script,
-      partitioned = true, inputColumns = Some(Set("DATE", "K", "REV")))
+    assert(incrementalEligibility(script,
+      inputColumns = Some(Set("DATE", "K", "REV")))
       == Right(4))
     def d(s: String) = java.sql.Date.valueOf(s)
     // FR and DE run Jan..Jun; IT first APPEARS in batch 1 (no tail rows,
@@ -3307,8 +3374,7 @@ class StreamingSpec extends SparkSpec {
       """freq m
         |set <date 1995-04-01 to 1995-05-01> a = rev / rev["1995-01-01"]
         |b = diff(a)""".stripMargin
-    assert(graft.streaming.FameStream.incrementalEligibility(script,
-      partitioned = true) == Right(5))
+    assert(incrementalEligibility(script) == Right(5))
     def d(s: String) = java.sql.Date.valueOf(s)
     val batches = Seq(
       Seq(("FR", "1995-01-01", 4.0), ("DE", "1995-01-01", 10.0),
