@@ -215,6 +215,28 @@ object QueriesExt {
   private def fameKeyedStreamSrc(s: SparkSession, dir: String): String =
     stageChunkedSrc(s, dir, "fame_ksrc")(QueriesCore.monthlyByNation(s, dir))
 
+  /** Per-nation revenue in INTEGER CENTS (decimal sum × 100, cast to
+    * double), one row per nation and `trunc` period (`unit` = "month" or
+    * "quarter"): integer-valued doubles sum exactly in ANY aggregation
+    * order, so every downstream average is an exact integer sum plus one
+    * division — bit-equal across Spark's window fold, the incremental
+    * replay, and DuckDB (the q201/q207 integer-grid recipe; the monthly
+    * q221/q223 and quarterly q224 fixtures).
+    */
+  private def byNationCents(s: SparkSession, dir: String,
+      unit: String): DataFrame = {
+    import org.apache.spark.sql.types.DecimalType
+    val o = s.read.parquet(s"$dir/orders.parquet")
+    val c = s.read.parquet(s"$dir/customer.parquet")
+    val n = s.read.parquet(s"$dir/nation.parquet")
+    o.join(c, col("o_custkey") === col("c_custkey"))
+      .join(broadcast(n), col("c_nationkey") === col("n_nationkey"))
+      .groupBy(col("n_name").as("NATION"),
+        trunc(col("o_orderdate").cast("date"), unit).as("DATE"))
+      .agg((sum(col("o_totalprice").cast(DecimalType(18, 2))) * 100)
+        .cast("double").as("REV"))
+  }
+
   /** Per-nation monthly two-goods frame (q14's A/R quantity+unit-price
     * pairs, keyed by the customer's nation) — the q219 incremental-chain
     * fixture. Quantities and unit prices are SNAPPED TO INTEGERS (the
@@ -228,43 +250,6 @@ object QueriesExt {
     * genuine per-nation date gaps at small SF, which the chain's year
     * aggregates handle like the batch path.
     */
-  /** Per-nation monthly revenue in INTEGER CENTS (decimal sum × 100,
-    * cast to double): integer-valued doubles sum exactly in ANY
-    * aggregation order, so every downstream average is an exact integer
-    * sum plus one division — bit-equal across Spark's window fold, the
-    * incremental replay, and DuckDB (the q201/q207 integer-grid recipe;
-    * the q221 fixture).
-    */
-  private def monthlyByNationCents(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.types.DecimalType
-    val o = s.read.parquet(s"$dir/orders.parquet")
-    val c = s.read.parquet(s"$dir/customer.parquet")
-    val n = s.read.parquet(s"$dir/nation.parquet")
-    o.join(c, col("o_custkey") === col("c_custkey"))
-      .join(broadcast(n), col("c_nationkey") === col("n_nationkey"))
-      .groupBy(col("n_name").as("NATION"),
-        trunc(col("o_orderdate").cast("date"), "month").as("DATE"))
-      .agg((sum(col("o_totalprice").cast(DecimalType(18, 2))) * 100)
-        .cast("double").as("REV"))
-  }
-
-  /** Per-nation QUARTERLY revenue in integer cents — the q224
-    * up-conversion streaming fixture (the quarterly analog of
-    * [[monthlyByNationCents]]; same exactness argument).
-    */
-  private def quarterlyByNationCents(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.types.DecimalType
-    val o = s.read.parquet(s"$dir/orders.parquet")
-    val c = s.read.parquet(s"$dir/customer.parquet")
-    val n = s.read.parquet(s"$dir/nation.parquet")
-    o.join(c, col("o_custkey") === col("c_custkey"))
-      .join(broadcast(n), col("c_nationkey") === col("n_nationkey"))
-      .groupBy(col("n_name").as("NATION"),
-        trunc(col("o_orderdate").cast("date"), "quarter").as("DATE"))
-      .agg((sum(col("o_totalprice").cast(DecimalType(18, 2))) * 100)
-        .cast("double").as("REV"))
-  }
-
   private def twoGoodsByNation(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
     val li = s.read.parquet(s"$dir/lineitem.parquet")
@@ -4899,7 +4884,7 @@ object QueriesExt {
         s.sparkContext.hadoopConfiguration)
       fs.delete(new org.apache.hadoop.fs.Path(base), true)
       val src = stageChunkedSrc(s, dir, "fame_scsrc")(
-        monthlyByNationCents(s, dir))
+        byNationCents(s, dir, "month"))
       val srcSchema = s.read.parquet(src).schema
       val stream = s.readStream.schema(srcSchema)
         .option("maxFilesPerTrigger", 1)
@@ -4986,7 +4971,7 @@ object QueriesExt {
         s.sparkContext.hadoopConfiguration)
       fs.delete(new org.apache.hadoop.fs.Path(base), true)
       val src = stageChunkedSrc(s, dir, "fame_scsrc")(
-        monthlyByNationCents(s, dir))
+        byNationCents(s, dir, "month"))
       val srcSchema = s.read.parquet(src).schema
       val stream = s.readStream.schema(srcSchema)
         .option("maxFilesPerTrigger", 1)
@@ -5025,7 +5010,7 @@ object QueriesExt {
         s.sparkContext.hadoopConfiguration)
       fs.delete(new org.apache.hadoop.fs.Path(base), true)
       val src = stageChunkedSrc(s, dir, "fame_qupsrc")(
-        quarterlyByNationCents(s, dir))
+        byNationCents(s, dir, "quarter"))
       val srcSchema = s.read.parquet(src).schema
       val stream = s.readStream.schema(srcSchema)
         .option("maxFilesPerTrigger", 1)

@@ -4,7 +4,6 @@ import java.time.LocalDate
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DoubleType
 
 import graft.ast._
 import graft.ast.FameExpr._
@@ -122,6 +121,8 @@ object FameSession {
 
     var lookupCols = Map.empty[(String, java.time.LocalDate), String]
     var lookupSeq = 0
+    // per-run names for inline `$chain(...)` columns
+    val chainIds = Iterator.from(1)
 
     def ctx = Ctx(dateCol, partitionKeys, scalars, refMap,
       lookup = (series, date) => {
@@ -252,7 +253,8 @@ object FameSession {
       if (plainAssigns.nonEmpty) {
         val batch = plainAssigns.map { b =>
           val Assign(target, expr0, inlineFilter, localDb) = b.stmt: @unchecked
-          val (expr, df2) = materializeInlineChains(expr0, cur, dateCol, partitionKeys)
+          val (expr, df2) = materializeInlineChains(expr0, cur, dateCol,
+            partitionKeys, chainIds)
           cur = df2
           materializeKeyedLookups(expr)
           val compiled = ColumnCompiler.compile(expr, ctx)
@@ -309,12 +311,13 @@ object FameSession {
           case PointInTime(target, date, e) =>
             materializeKeyedLookups(e)
             val v = ColumnCompiler.compile(e, ctx)
-            val existing: Column =
-              if (cur.columns.contains(target)) ColumnCompiler.qcol(target)
-              else nullLike(v, cur)
-            cur = cur.withColumn(target,
+            // no otherwise: off the date the value is a null of v's type
+            val atDate =
               when(col(dateCol) === lit(java.sql.Date.valueOf(date)), v)
-                .otherwise(existing))
+            cur = cur.withColumn(target,
+              if (cur.columns.contains(target))
+                atDate.otherwise(ColumnCompiler.qcol(target))
+              else atDate)
 
           case ChainAssign(target, terms, baseYear) =>
             cur = Indices.chain(cur, dateCol, terms, baseYear, target,
@@ -398,21 +401,6 @@ object FameSession {
     case other => throw new IllegalArgumentException(s"not a date: $other")
   }
 
-  /** Null literal typed like `value` (probed with one driver-side nested
-    * analysis over `cur`), so masked / point-in-time assigns of
-    * non-double expressions — `d[pit] = dateof(...)` is date-typed —
-    * don't hit CASE-branch type mismatches. An untypeable / NullType
-    * value keeps the historical DoubleType default (`x = nd` masked
-    * must stay a numeric series).
-    */
-  private def nullLike(value: Column, cur: DataFrame): Column = {
-    val dt =
-      try cur.select(value.as("__type_probe")).schema.head.dataType
-      catch { case _: Throwable => DoubleType }
-    lit(null).cast(
-      if (dt == org.apache.spark.sql.types.NullType) DoubleType else dt)
-  }
-
   /** Date-range masking — SURVEY §2.2 / APPLY_DATE_FILTER
     * (`formulas_generator.py:1499-1536`): inside the range the new value,
     * outside either the previous value (`preserve_existing`) or null.
@@ -426,12 +414,12 @@ object FameSession {
           lo.map(d => col(dateCol) >= lit(java.sql.Date.valueOf(d))),
           hi.map(d => col(dateCol) <= lit(java.sql.Date.valueOf(d)))
         ).flatten
-        val inRange = conds.reduce(_ && _)
-        val outside: Column =
-          if (preserve && cur.columns.contains(target))
-            ColumnCompiler.qcol(target)
-          else nullLike(value, cur)
-        when(inRange, value).otherwise(outside)
+        val masked = when(conds.reduce(_ && _), value)
+        // without preserve (or a previous value) the outside is a null of
+        // value's type — `when` with no otherwise types it already
+        if (preserve && cur.columns.contains(target))
+          masked.otherwise(ColumnCompiler.qcol(target))
+        else masked
     }
 
   /** Evaluate a scalar RHS. Pure-literal expressions fold on the driver with
@@ -483,14 +471,13 @@ object FameSession {
     * expression compiler only sees column refs (SURVEY §2.3 `$chain` inline,
     * `formulas_generator.py:562-626`).
     */
-  private var chainTmpId = 0
   private def materializeInlineChains(e: FameExpr, df: DataFrame,
-      dateCol: String, keys: Seq[String]): (FameExpr, DataFrame) = {
+      dateCol: String, keys: Seq[String],
+      chainIds: Iterator[Int]): (FameExpr, DataFrame) = {
     var cur = df
     def go(x: FameExpr): FameExpr = x match {
       case ChainCall(terms, year) =>
-        chainTmpId += 1
-        val tmp = s"__CHAIN_$chainTmpId"
+        val tmp = s"__CHAIN_${chainIds.next()}"
         cur = Indices.chain(cur, dateCol, terms, year, tmp, keys)
         Ref(tmp)
       case Bin(op, l, r) => Bin(op, go(l), go(r))

@@ -31,15 +31,14 @@ object ColumnCompiler {
 
   final case class CompileError(msg: String) extends RuntimeException(msg)
 
-  /** @param lookup  driver-side point lookup: (series, date) → value, for
-    *                `v["2020-01-01"]` / `v[scalar]` (the reference collects
-    *                the same way, `fame2py_converter.py:497-503`).
-    */
-  /** @param dateofStub reference-compat mode for `dateof` suffix variants:
+  /** @param lookup     driver-side point lookup: (series, date) → value,
+    *                    for `v["2020-01-01"]` / `v[scalar]` (the reference
+    *                    collects the same way,
+    *                    `fame2py_converter.py:497-503`).
+    * @param dateofStub reference-compat mode for `dateof` suffix variants:
     *                    emit the reference's literal stubs instead of the
     *                    real window implementation (SURVEY §7 compat flag).
-    */
-  /** @param lookupCols per-key lookup columns materialized by
+    * @param lookupCols per-key lookup columns materialized by
     *                    [[graft.api.FameSession]] under PARTITIONED
     *                    execution: (resolved series, date) → the name of
     *                    a key-constant column carrying that key's own

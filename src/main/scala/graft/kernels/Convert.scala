@@ -150,8 +150,6 @@ object Convert {
       sourceFreq: Frequency, target: Frequency, technique: String,
       keys: Seq[String] = Nil,
       businessCal: BusinessCalendar = BusinessCalendar.WeekdaysOnly): DataFrame = {
-    val spark = df.sparkSession
-
     // one calendar per (partition key) group, built distributed
     val bounds = df.groupBy(keys.map(col): _*)
       .agg(min(col(dateCol)).as("__lo"), max(col(dateCol)).as("__hi"))
@@ -179,10 +177,9 @@ object Convert {
     // FULL join so source observations that fall between grid points (e.g.
     // quarter starts under a Friday-anchored weekly grid) still feed the
     // fill/interpolation windows; only grid rows survive into the result
-    val joined0 = calendarF.withColumn("__cal", lit(true))
+    val joined = calendarF.withColumn("__cal", lit(true))
       .join(src, keys :+ dateCol, "full")
     def onGrid(d: DataFrame): DataFrame = d.where(col("__cal")).drop("__cal")
-    val joined = joined0
 
     val w =
       if (keys.isEmpty) Window.orderBy(dateCol)

@@ -1087,9 +1087,14 @@ object FameStream {
     *
     * Mechanics per micro-batch, all idempotent under checkpoint replay:
     *  1. (carried rows ∪ batch) is materialized ONCE as an in-memory
-    *     leaf — the batch's only scan of the source — with each row
-    *     flagged new, held (step 3) and late. A late row (dated before
-    *     its key's newest carried row) fails the batch with
+    *     leaf — the batch's only scan of the source — ordered
+    *     ASCENDING by date within each key, the order a whole-history
+    *     scan reads them, so every order-sensitive kernel (a convert's
+    *     sum, a running fold) adds in the whole-history order. ONE
+    *     per-key window ranks the rows (rank of count) and flags each
+    *     row new, held (step 3) and late; that one rank drives the
+    *     hold, the carry tail and the pins (step 4). A late row (dated
+    *     before its key's newest carried row) fails the batch with
     *     [[OutOfOrderIngestException]] before anything of it is
     *     written. Every later step reads the leaf; the writes of steps
     *     2–6 then run as concurrent jobs;
@@ -1102,18 +1107,22 @@ object FameStream {
     *     still-unemitted row's lookahead accumulates until it arrives.
     *     HOLD-BACK emission: a row's outputs land at
     *     `resultDir/batch=<id>` (overwrite) only once `maxLead` rows
-    *     after it (per key) have arrived — at that point every forward
+    *     after it (per key) have arrived — its rank is at most the
+    *     key's count minus `maxLead` — at that point every forward
     *     read the row makes is in frame, so its value is FINAL (the
     *     watermark-style delay; for lag-only scripts maxLead = 0 and
     *     every batch row emits immediately, the historical behavior).
     *     Already-emitted carried rows are marked and their outputs
     *     dropped (they were emitted by the batch that first saw their
-    *     lookahead complete);
+    *     lookahead complete). One emission rule covers every plan: not
+    *     yet emitted, not held, every hold-back gate open (step 6) — or
+    *     a newly closed synthetic anchor (step 5);
     *  4. the new carry (last `maxLag + maxLead` rows per key — plus one
     *     more when the plan is bucketed, plus every row a pin selects:
-    *     the window rows and their prec/foll physical neighbors by
-    *     per-key row rank, each flagged with whether it has been
-    *     emitted) is
+    *     the window rows and their prec/foll physical neighbors, each
+    *     flagged with whether it has been emitted — all selected by the
+    *     leaf's per-key rank, so the carry needs no window of its own
+    *     beyond the pin and hold-back bounds) is
     *     VERSIONED at `bronzeDir/_tail/v=<id>` — a replayed batch n
     *     re-reads carry v=n−1, which a later batch never overwrites, so
     *     recovery recomputes batch n byte-identically (the pin rows,
@@ -1212,21 +1221,26 @@ object FameStream {
       case _ => ()
     }
     w.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      val tailPath = new org.apache.hadoop.fs.Path(
-        s"$bronzeDir/_tail/v=${batchId - 1}")
-      val fs = tailPath.getFileSystem(hconf)
+      // the versioned artifact (carry or state) batch n−1 wrote under
+      // `dir` — what a restarted query reads in place of the leaves
+      def readPrev(dir: String): Option[DataFrame] = {
+        val p = new org.apache.hadoop.fs.Path(s"$dir/v=${batchId - 1}")
+        if (batchId > 0 && p.getFileSystem(hconf).exists(p))
+          Some(spark.read.parquet(p.toString))
+        else None
+      }
       val upper = batch.select(
         cols.map(c => col(c).as(c.toUpperCase)): _*)
       val cachedTail = tailCache.collect {
         case (v, df) if v == batchId - 1 => df }
-      val prevTail: DataFrame = cachedTail.getOrElse {
-        if (batchId > 0 && fs.exists(tailPath)) {
-          val t = spark.read.parquet(tailPath.toString)
+      val prevTail: DataFrame = cachedTail
+        .orElse(readPrev(s"$bronzeDir/_tail").map { t =>
           // carries written before the hold-back contract lack the
           // emitted flag; every row in such a carry was emitted
           if (t.columns.contains("__EMITTED")) t
           else t.withColumn("__EMITTED", lit(true))
-        } else
+        })
+        .getOrElse(
           // empty tail built on the ORIGINAL session, not as a filter of
           // the micro-batch frame (r20): the stream runner's cloned
           // session pins batch-unfriendly confs (AQE off), and the work
@@ -1234,15 +1248,12 @@ object FameStream {
           // otherwise run its whole pipeline under the stream clone
           spark.createDataFrame(
             spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            upper.schema).withColumn("__EMITTED", lit(true))
-      }
-      // position from the key's frontier: the last maxLead rows per key
-      // are PENDING (their forward reads are incomplete) — everything
-      // older is emittable. For lag-only scripts maxLead = 0 and every
-      // row is emittable the batch it arrives, the historical behavior.
+            upper.schema).withColumn("__EMITTED", lit(true)))
       val keyCols = if (keysU.isEmpty) Seq(lit(1)) else keysU.map(col)
       val kw = Window.partitionBy(keyCols: _*)
-      val ord = kw.orderBy(col(dateU).desc)
+      val ascOrd = kw.orderBy(col(dateU).asc)
+      val wholeKey = ascOrd.rowsBetween(
+        Window.unboundedPreceding, Window.unboundedFollowing)
       // MATERIALIZE the work frame once (r20, guide §2.4/§5) as the
       // batch's one in-memory leaf: the only action that scans the
       // micro-batch (its source is re-read by every action over it), and
@@ -1252,14 +1263,23 @@ object FameStream {
       // binary) the tail ∪ batch ∪ hold-window lineage. __NEW marks the
       // batch's rows; __LATE flags a batch row dated before its key's
       // newest carried row — a late arrival the incremental form cannot
-      // evaluate correctly. Both windows share the __HOLD partitioning,
-      // so the leaf costs one exchange.
+      // evaluate correctly.
+      // ONE window ranks each key's rows ascending by date — the order a
+      // whole-history scan reads them, so every order-sensitive kernel
+      // downstream (a convert's sum, a running fold) adds in that order —
+      // and that rank (__ARN of __N) drives the hold, the carry tail and
+      // the pins. The last maxLead rows per key are PENDING (__HOLD: their
+      // forward reads are incomplete); everything older is emittable.
+      // For lag-only scripts maxLead = 0 and every row is emittable the
+      // batch it arrives. One spec, one exchange, one sort.
       val leaf = prevTail.withColumn("__NEW", lit(false))
         .unionByName(upper.withColumn("__EMITTED", lit(false))
           .withColumn("__NEW", lit(true)))
-        .withColumn("__HOLD", row_number().over(ord) <= lit(maxLead))
+        .withColumn("__ARN", row_number().over(ascOrd))
+        .withColumn("__N", count(lit(1)).over(wholeKey))
+        .withColumn("__HOLD", col("__ARN") > col("__N") - lit(maxLead))
         .withColumn("__LATE", col("__NEW") &&
-          col(dateU) < max(when(!col("__NEW"), col(dateU))).over(kw))
+          col(dateU) < max(when(!col("__NEW"), col(dateU))).over(wholeKey))
         .localCheckpoint(true)
       // Enforce the ingest contract instead of documenting it: fail
       // loudly rather than emit silently-wrong output, before any write
@@ -1291,7 +1311,6 @@ object FameStream {
       //    is bit-exact (see [[ShiftPctSpec]]); rows outside every
       //    window emit on arrival.
       val maxYr = max(year(col(dateU))).over(kw)
-      val gated = plan.holdBacks.nonEmpty
       val holdGate: Column = plan.holdBacks.map {
         case c: ChainSpec =>
           year(col(dateU)) < maxYr && lit(c.baseYear) < maxYr
@@ -1327,9 +1346,8 @@ object FameStream {
           case c: ChainSpec => c.target -> { (out: DataFrame,
               seed: Option[DataFrame]) =>
             val closed = out
-              .withColumn("__CYR", year(col(dateU)))
-              .withColumn("__CMAXYR", maxYr)
-              .where(col("__CYR") < col("__CMAXYR"))
+              .withColumn("__CLOSED", year(col(dateU)) < maxYr)
+              .where(col("__CLOSED"))
             val fresh = graft.kernels.Indices.yearlyAggs(
               closed, dateU, c.terms, keysU)
             seed.fold(fresh)(st => st.unionByName(fresh.join(
@@ -1367,18 +1385,12 @@ object FameStream {
       def readState(target: String): Option[DataFrame] =
         stateCache.get(target).collect {
           case (v, df) if v == batchId - 1 => df
-        }.orElse {
-          val p = new org.apache.hadoop.fs.Path(
-            s"$bronzeDir/_state/$target/v=${batchId - 1}")
-          if (batchId > 0 && p.getFileSystem(hconf).exists(p))
-            Some(spark.read.parquet(p.toString))
-          else None
-        }
+        }.orElse(readPrev(s"$bronzeDir/_state/$target"))
       val seeds: Map[String, DataFrame] = finalizes.flatMap { case (t, _) =>
         readState(t).map(t -> _) }.toMap
       // one map serves both kernels: each looks up its own target
-      val out0 = FameSession.run(script, work, dateU, keysU,
-        nlrx, businessCal = businessCal, chainSeed = seeds,
+      val out0 = FameSession.run(script, work.drop("__ARN", "__N"), dateU,
+        keysU, nlrx, businessCal = businessCal, chainSeed = seeds,
         fishvolSeed = seeds).df
       // stateful plans execute the output frame TWICE (the emit write +
       // the state finalize) — materialize it for those; any other plan
@@ -1388,48 +1400,41 @@ object FameStream {
       // the kernel recompute PLUS the cached plan it reads), where the
       // checkpoint truncates the lineage to a leaf RDD — the same
       // task-binary bloat the work checkpoint above removes.
-      val outGated = finalizes.nonEmpty
       val out =
-        if (outGated) out0.localCheckpoint(true)
+        if (finalizes.nonEmpty) out0.localCheckpoint(true)
         else out0
-      val emit =
-        if (gated)
-          out.withColumn("__EGATE", holdGate)
-            .where(!col("__EMITTED") && !col("__HOLD") && col("__EGATE"))
-            .drop("__EGATE")
-        else if (!plan.bucketed)
-          out.where(!col("__EMITTED") && !col("__HOLD"))
+      // Down-conversions can create SYNTHETIC rows (the convert
+      // bridge's full-outer join, at bucket-anchor dates with no input row
+      // — null __EMITTED/__HOLD). Emit each exactly once, after its bucket
+      // closes: a bucket whose anchor is at or before the key's newest
+      // EMITTABLE input (__CUT_NEW) has span−1 arrived rows past its
+      // anchor — closed (the hold-back closure argument) — and anchors at
+      // or before the newest ALREADY-EMITTED input (__CUT_PREV, recovered
+      // from the carried flags) were emitted by an earlier batch. Anchors
+      // in (__CUT_PREV, __CUT_NEW] are new: every row of such a bucket
+      // postdates the previous cutoff, so it was carried (pending) or just
+      // arrived — the work frame holds the WHOLE bucket and the value is
+      // the whole-history one. Replay of batch n re-reads carry v=n−1 →
+      // identical cutoffs, idempotent.
+      val anchors: Column =
+        if (!plan.bucketed) lit(false)
         else {
-          // Down-conversions can create SYNTHETIC rows (the convert
-          // bridge's full-outer join, at bucket-anchor dates with no
-          // input row — null __EMITTED/__HOLD). Emit each exactly once,
-          // after its bucket closes: a bucket whose anchor is at or
-          // before the key's newest EMITTABLE input (__CUT_NEW) has
-          // span−1 arrived rows past its anchor — closed (the hold-back
-          // closure argument) — and anchors at or before the newest
-          // ALREADY-EMITTED input (__CUT_PREV, recovered from the
-          // carried flags) were emitted by an earlier batch. Anchors in
-          // (__CUT_PREV, __CUT_NEW] are new: every row of such a bucket
-          // postdates the previous cutoff, so it was carried (pending)
-          // or just arrived — the work frame holds the WHOLE bucket and
-          // the value is the whole-history one. Replay of batch n
-          // re-reads carry v=n−1 → identical cutoffs, idempotent.
-          // Input rows have a non-null __EMITTED and synthetic rows a
-          // null one, so the two selections are disjoint and ONE filter
-          // takes both: a union of two filters would plan the whole FAME
-          // subplan twice (Catalyst cannot merge the branches).
-          val scoped = out
-            .withColumn("__CUT_NEW",
-              max(when(col("__HOLD") === false, col(dateU))).over(kw))
-            .withColumn("__CUT_PREV",
-              max(when(col("__EMITTED") === true, col(dateU))).over(kw))
-          scoped.where((!col("__EMITTED") && !col("__HOLD")) ||
-              (col("__EMITTED").isNull &&
-                col(dateU) <= col("__CUT_NEW") &&
-                (col("__CUT_PREV").isNull ||
-                  col(dateU) > col("__CUT_PREV"))))
-            .drop("__CUT_NEW", "__CUT_PREV")
+          val cutNew = max(when(col("__HOLD") === false, col(dateU))).over(kw)
+          val cutPrev = max(when(col("__EMITTED") === true, col(dateU))).over(kw)
+          col("__EMITTED").isNull && col(dateU) <= cutNew &&
+            (cutPrev.isNull || col(dateU) > cutPrev)
         }
+      // ONE emission rule: an input row not yet emitted, past the lead
+      // hold and every hold-back gate — or a newly closed synthetic
+      // anchor. Input rows have a non-null __EMITTED and synthetic rows a
+      // null one, so the two selections are disjoint and one filter takes
+      // both (a union of two filters would plan the FAME subplan twice).
+      // Window aggregates may not sit inside WHERE: the rule is a column.
+      val emit = out
+        .withColumn("__EMIT",
+          (!col("__EMITTED") && !col("__HOLD") && holdGate) || anchors)
+        .where(col("__EMIT"))
+        .drop("__EMIT")
       // Independent writes of this batch — bronze, the emit below, the
       // carry, and the state finalizes — all read the
       // MATERIALIZED leaf (or the out leaf) and land in disjoint
@@ -1482,19 +1487,10 @@ object FameStream {
       // (≤ maxLag rows behind it → in the tail; foll rows arrive later,
       // pinned on arrival), and every later carry re-selects them by
       // adjacency.
-      val ascOrd = kw.orderBy(col(dateU).asc)
-      val needRank = plan.pins.exists(p => p.prec > 0 || p.foll > 0) ||
-        gated
       // a gate-held row (open year / pre-base era / anchor window) is
       // NOT emitted even past the generic hold — the same gate governs
-      // the flag
-      val flagged = work
-        .withColumn("__EMITTED", emittedNow)
-        .drop("__HOLD")
-        .withColumn("__RN", row_number().over(ord))
-      val ranked =
-        if (needRank) flagged.withColumn("__ARN", row_number().over(ascOrd))
-        else flagged
+      // the flag. The carry reuses the leaf's ranks: no second window.
+      val flagged = work.withColumn("__EMITTED", emittedNow).drop("__HOLD")
       val pinned: Column = plan.pins
         .map { p =>
           val inWin = col(dateU).between(
@@ -1523,7 +1519,7 @@ object FameStream {
       // physical predecessors (the newest-carrySize tail only guards
       // the frontier, not a held suffix).
       val keepUnemitted: Column =
-        if (!gated) lit(false)
+        if (plan.holdBacks.isEmpty) lit(false)
         else {
           val minUnem = min(when(!col("__EMITTED"), col("__ARN"))).over(kw)
           !col("__EMITTED") || col("__ARN") >= minUnem - lit(maxLag)
@@ -1545,12 +1541,12 @@ object FameStream {
       }
       // the carry leaf is next batch's prevTail
       val carryRef = leafWrite("carry", s"$bronzeDir/_tail/v=$batchId") {
-        ranked
+        flagged
           .withColumn("__PINNED", coalesce(pinned, lit(false)))
           .withColumn("__KEEPUN", coalesce(keepUnemitted, lit(false)))
-          .where(col("__RN") <= carrySize || col("__PINNED") ||
-            col("__KEEPUN"))
-          .drop("__RN", "__ARN", "__PINNED", "__KEEPUN")
+          .where(col("__ARN") > col("__N") - lit(carrySize) ||
+            col("__PINNED") || col("__KEEPUN"))
+          .drop("__ARN", "__N", "__PINNED", "__KEEPUN")
       }
       parallel("bronze") {
         leaf.where(col("__NEW"))
@@ -1580,7 +1576,7 @@ object FameStream {
       // this batch's consumed leaves are dead once the writes are done:
       // release their blocks now instead of at RDD GC (ADVICE r20)
       releaseLeaf(leaf)
-      if (outGated) releaseLeaf(out)
+      if (finalizes.nonEmpty) releaseLeaf(out)
       cachedTail.foreach(releaseLeaf)
       stateCache.foreach { case (_, (v, df)) =>
         if (v == batchId - 1) releaseLeaf(df) }

@@ -2175,6 +2175,52 @@ class StreamingSpec extends SparkSpec {
     assert(perBatch == Map(0L -> 1L, 1L -> 6L, 2L -> 6L), perBatch.toString)
   }
 
+  test("bucketed incremental: an ORDER-SENSITIVE m→q sum convert emits " +
+      "cells bit-equal to the whole-history run — each key's rows are " +
+      "folded in ascending date order, as a whole-history scan reads " +
+      "them") {
+    implicit val sql = spark.sqlContext
+    import spark.implicits._
+    val base = tmpDir("famebktorder").toString
+    val script = "freq m\nrev_q = convert(rev, q, discrete, sum)"
+    def d(s: String) = java.sql.Date.valueOf(s)
+    // every quarter's sum depends on the fold order:
+    // (0.1 + 0.2) + 0.3 != (0.3 + 0.2) + 0.1, and B runs the reverse
+    val vals = Map("A" -> Seq(0.1, 0.2, 0.3), "B" -> Seq(0.3, 0.2, 0.1))
+    def rows(lo: Int, hi: Int) =
+      for (k <- Seq("A", "B"); m <- lo to hi)
+        yield (k, d(f"1995-$m%02d-01"), vals(k)((m - 1) % 3))
+    val src = MemoryStream[(String, java.sql.Date, Double)]
+    val q = graft.streaming.FameStream.runIncremental(
+      src.toDF().toDF("K", "DATE", "REV"), script,
+      s"$base/bronze", s"$base/result", partitionKeys = Seq("K"),
+      checkpointDir = Some(s"$base/ckpt"))
+    try Seq((1, 3), (4, 6), (7, 9), (10, 12)).foreach { case (lo, hi) =>
+      src.addData(rows(lo, hi): _*); q.processAllAvailable()
+    } finally q.stop()
+    def cells(df: org.apache.spark.sql.DataFrame) = {
+      val vs = df.columns.filterNot(Set("K", "DATE", "batch")).sorted.toSeq
+      df.select(("K" +: "DATE" +: vs).map(col): _*)
+        .orderBy("K", "DATE").collect()
+        .map(r => (r.getString(0), r.getDate(1).toString,
+          vs.indices.map(j => if (r.isNullAt(j + 2)) None
+            else Some(java.lang.Double.doubleToLongBits(r.getDouble(j + 2))))))
+        .toSeq
+    }
+    val got = cells(spark.read.parquet(s"$base/result"))
+    val full = graft.api.FameSession.run(script,
+      rows(1, 12).toDF("K", "DATE", "REV"), partitionKeys = Seq("K")).df
+    // the newest 2 rows per key stay pending: Jan..Oct emit, Oct's
+    // bucket complete
+    val want = cells(full).filter(_._2 < "1995-11-01")
+    assert(got.size == 20)
+    assert(got == want, s"\ngot  = $got\nwant = $want")
+    // the fixture discriminates: A's Q1 anchor is the ascending fold
+    val ascending = java.lang.Double.doubleToLongBits((0.1 + 0.2) + 0.3)
+    assert(ascending != java.lang.Double.doubleToLongBits((0.3 + 0.2) + 0.1))
+    assert(got.find(_._2 == "1995-01-01").get._3.contains(Some(ascending)))
+  }
+
   test("up-conversion incremental (r19): a q→m LINEAR upsample streams " +
       "under OBSERVATION hold-back — fine-grid rows emit once the " +
       "key's newest observation reaches them (their bracketing obs are " +
@@ -3490,7 +3536,7 @@ class StreamingSpec extends SparkSpec {
 
   // SQL executions one bucketed micro-batch may run: the work leaf, the
   // late check, the bronze, emit and carry writes, the carry leaf's
-  // shuffle stage, and foreachBatch's own. An eager action added to the
+  // localCheckpoint, and foreachBatch's own. An eager action added to the
   // batch has to raise this visibly.
   private val bucketedBatchExecBudget = 7
 
@@ -3536,10 +3582,21 @@ class StreamingSpec extends SparkSpec {
   test("incremental FAME bucketed emit plans the FAME subplan once: one " +
       "FullOuter convert-bridge join per down-convert statement") {
     val joins = new java.util.concurrent.ConcurrentLinkedQueue[Int]
+    // Window nodes in the plan of each batch's carry leaf: the carry
+    // reuses the work leaf's ranks, so it needs no window of its own
+    val carryWindows = new java.util.concurrent.ConcurrentLinkedQueue[Int]
     val aqe = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
       def onSuccess(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+          qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit = {
+        // the carry leaf is the checkpoint that keeps the emitted flag
+        // but not the work leaf's hold flag
+        val names = qe.analyzed.output.map(_.name).toSet
+        if (funcName == "localCheckpoint" && names("__EMITTED") &&
+            !names("__HOLD"))
+          carryWindows.add(qe.optimizedPlan.collect {
+            case w: org.apache.spark.sql.catalyst.plans.logical.Window => w
+          }.size): Unit
         qe.analyzed.collectFirst {
           case c: org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
               if c.outputPath.toString.contains("/result/batch=") => ()
@@ -3549,6 +3606,7 @@ class StreamingSpec extends SparkSpec {
                 if j.joinType == org.apache.spark.sql.catalyst.plans.FullOuter => j
           }.size): Unit
         }
+      }
       def onFailure(funcName: String,
           qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
     }
@@ -3558,5 +3616,6 @@ class StreamingSpec extends SparkSpec {
     finally { drainListeners(); spark.listenerManager.unregister(listener) }
     import scala.jdk.CollectionConverters._
     assert(joins.asScala.toSeq == Seq(1, 1, 1))
+    assert(carryWindows.asScala.toSeq == Seq(0, 0, 0))
   }
 }
