@@ -154,6 +154,20 @@ object QueriesExt {
   private def scratch(sub: String): String =
     scratchRoot.resolve(sub).toString
 
+  /** `rel`, a file committed in the repository, found by walking up from
+    * where this class was loaded (`<repo>/target/scala-2.13/classes`), so
+    * the result does not depend on the working directory.
+    */
+  private[graft] def repoFile(rel: String): String = {
+    val classes = java.nio.file.Paths.get(
+      getClass.getProtectionDomain.getCodeSource.getLocation.toURI)
+    Iterator.iterate(classes)(_.getParent).takeWhile(_ != null)
+      .map(_.resolve(rel)).find(java.nio.file.Files.isRegularFile(_))
+      .getOrElse(throw new java.nio.file.NoSuchFileException(
+        s"$rel (searched from $classes upwards)"))
+      .toString
+  }
+
   /** Chunked file-stream source for the FAME streaming twins (q185 /
     * q210), staged ONCE per (JVM, sfDir) and shared by both: the
     * monthly series split into 3 contiguous date ranges, one parquet
@@ -4856,7 +4870,7 @@ object QueriesExt {
     // syntax included) and every output cell replays in DuckDB.
     "q220_fame_adversarial_text" -> ((s, dir) => {
       val out = graft.api.FameSession.runFile(
-        "tools/adversarial_fame.inp", QueriesCore.monthly(s, dir))
+        repoFile("tools/adversarial_fame.inp"), QueriesCore.monthly(s, dir))
       out.df.select(col("DATE").as("date"),
           col("C060").as("c060"), col("`V.DOT`").as("v_dot"),
           col("V_DL").as("v_dl"), col("AA_LOC").as("loc"),

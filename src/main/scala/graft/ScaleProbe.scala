@@ -15,7 +15,11 @@ import org.apache.spark.sql.SparkSession
   *    while no job runs), and the query's `jobs`, `stages`,
   *    `tasks` and cumulative `task_time_ms`. For a query whose data is
   *    tiny the split tells whether to optimize the plan (executor) or
-  *    the per-query fixed cost (driver).
+  *    the per-query fixed cost (driver);
+  *  - generated code — `codegen_compiles` and `codegen_ms`, the code-cache
+  *    misses of the reported run and their compile time. A warm run
+  *    reuses the classes the earlier runs compiled, so a count above 0
+  *    there is recompiled code.
   *
   * Usage:
   *  - `runMain graft.ScaleProbe <sfDir> <q1,q2,...> [runs]` — one JSON
@@ -271,6 +275,13 @@ object ScaleProbe {
         mb("disk_spill")}}""")
   }
 
+  /** (compiles, compile ns) of generated code so far in this JVM: every
+    * compile is a code-cache miss.
+    */
+  private def codegen(): (Long, Long) = (
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
+    org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime)
+
   def main(args: Array[String]): Unit = {
     val planMode = args.headOption.contains("plan")
     if (planMode) require(args.length == 5,
@@ -371,10 +382,12 @@ object ScaleProbe {
       val matches = byName.keys.filter(_.contains(pat)).toSeq.sorted
       matches.foreach { name =>
         // run 1 untimed warmup (codegen), then `runs` timed; report the
-        // min-wall run's metrics (listener drained and reset per run)
+        // min-wall run's metrics (listener drained and reset per run) and
+        // the code it compiled: a warm run that recompiles shows here
         var best: (Double, Map[String, Long]) = (Double.MaxValue, Map.empty)
         (0 to runs).foreach { i =>
           drain(); listener.reset()
+          val compiled0 = codegen()
           val t0 = System.nanoTime()
           // noop sink, NOT count(): count() lets column pruning delete
           // the whole projection of a map-only query (a pure per-row
@@ -385,7 +398,10 @@ object ScaleProbe {
             .write.mode("overwrite").format("noop").save()
           val wall = (System.nanoTime() - t0) / 1e9
           drain()
-          val snap = listener.snapshot()
+          val compiled = codegen()
+          val snap = listener.snapshot() +
+            ("codegen_compiles" -> (compiled._1 - compiled0._1)) +
+            ("codegen_ms" -> (compiled._2 - compiled0._2) / 1000000)
           if (i > 0 && wall < best._1) best = (wall, snap)
         }
         val (wall, m) = best
@@ -400,7 +416,9 @@ object ScaleProbe {
         },"memory_spill_mb":${mb("memory_spill")},"disk_spill_mb":${
           mb("disk_spill")},"job_wall":${sec(jobWall)},"driver_gap":${
           sec(wall - jobWall)},"jobs":${n("jobs")},"stages":${n("stages")
-        },"tasks":${n("tasks")},"task_time_ms":${n("task_time_ms")}}""")
+        },"tasks":${n("tasks")},"task_time_ms":${n("task_time_ms")
+        },"codegen_compiles":${n("codegen_compiles")},"codegen_ms":${
+          n("codegen_ms")}}""")
       }
       }
     }

@@ -17,9 +17,36 @@ object SparkEntry {
     * SCALING.md) and only rescues the small-R regime where per-file churn
     * dominates. An A/B against the Spark default goes through
     * [[session]]'s `extra` map (ScaleProbe's `SPARK_GRAFT_EXTRA_CONF`).
+    *
+    * The two codegen settings let a warm pass of the same query reuse the
+    * Java classes the previous pass compiled, instead of compiling them
+    * again. Spark's counter (`CodegenMetrics`) read 167 compiles on the
+    * cold pass of the keyed FAME model of the `fame_keyed_batch` benchmark
+    * workload (`local[3]`) and 162, 160, 162 and 160 on four identical
+    * warm passes. Two causes stack, and each setting fixes one:
+    *
+    *  - `spark.sql.codegen.cache.maxEntries=1000`: the keyed plan has
+    *    145-167 distinct generated classes and Spark's cache holds 100,
+    *    evicting the least recently used, so each pass evicted the classes
+    *    the next one needed. Turning ids off alone still recompiled
+    *    136-139 per warm pass. This is a static conf, read once per JVM
+    *    when `CodeGenerator` loads; [[session]] checks that it took effect.
+    *  - `spark.sql.codegen.useIdInClassName=false`: under AQE the
+    *    whole-stage codegen ids follow the order in which query stages
+    *    get planned, which varies from run to run, and the id is part of
+    *    the generated source (`GeneratedIteratorForCodegenStage35` in one
+    *    pass, `...33` in the next), so equal code missed the cache. The
+    *    1000-entry cache alone still recompiled 46, 36, 18 and 8.
+    *
+    * With both, the warm passes compiled 0 classes, and the median warm
+    * keyed pass fell from 5.3 s to 3.2 s (ten seeds, 4-core VM). The
+    * trade: generated class names in stack traces lose the stage id; the
+    * `*(n)` ids in `explain` output stay.
     */
   def sessionDefaults: Map[String, String] = Map(
-    "spark.shuffle.sort.bypassMergeThreshold" -> "1")
+    "spark.shuffle.sort.bypassMergeThreshold" -> "1",
+    "spark.sql.codegen.useIdInClassName" -> "false",
+    "spark.sql.codegen.cache.maxEntries" -> "1000")
 
   /** THE engine session: `local[cpus]` with `cpus` shuffle partitions,
     * UTC, [[graft.plans.GraftExtensions]], nanosecond parquet timestamps
@@ -31,6 +58,9 @@ object SparkEntry {
     * (static confs such as `spark.sql.extensions` are ignored on reuse),
     * and a session built elsewhere without the extension fails now, by
     * name, instead of at the first query that needs a native function.
+    * The codegen cache size is checked the same way: a reused session
+    * keeps its own, and one below [[sessionDefaults]]'s would recompile
+    * every warm pass.
     */
   def session(cpus: Int, extra: Map[String, String] = Map.empty)
       : SparkSession = {
@@ -49,6 +79,14 @@ object SparkEntry {
         "registered. A session created earlier without " +
         "spark.sql.extensions=graft.plans.GraftExtensions was reused; " +
         "stop it or build it with the extension.")
+    val cacheKey = "spark.sql.codegen.cache.maxEntries"
+    val cache = spark.conf.get(cacheKey).toInt
+    if (cache < sessionDefaults(cacheKey).toInt)
+      throw new IllegalStateException(
+        s"$cacheKey is $cache in this SparkSession, below the engine's " +
+        s"${sessionDefaults(cacheKey)}: warm passes would recompile their " +
+        "generated code. It is a static conf: a session created earlier " +
+        "without it was reused (stop it first), or `extra` lowered it.")
     spark
   }
 

@@ -117,6 +117,15 @@ class HarnessSpec extends SparkSpec {
     }
   }
 
+  test("q220's FAME file resolves from the repository, not the working " +
+      "directory") {
+    val inp = java.nio.file.Paths.get(
+      QueriesExt.repoFile("tools/adversarial_fame.inp"))
+    assert(inp.isAbsolute && java.nio.file.Files.isRegularFile(inp), inp)
+    intercept[java.nio.file.NoSuchFileException](
+      QueriesExt.repoFile("tools/no_such_fixture.inp"))
+  }
+
   test("Bench.subsetPassCount tolerates malformed/absent/negative env " +
       "values (a typo must not kill the bench run)") {
     assert(Bench.subsetPassCount(None) == 3)
