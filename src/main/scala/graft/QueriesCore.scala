@@ -326,12 +326,13 @@ object QueriesCore {
         .orderBy("nation")
     }),
 
-    // #16 nlrx at entity scale: one independent HP solve per nation,
-    // distributed via the mapGroups path (Nlrx.groupedSolve) — no driver
-    // collect. Cell-exact like q18: the oracle runs the same recursive-CTE
-    // replay partitioned by nation; PartitionedSpec additionally pins the
-    // grouped path value-equal to independent per-entity keyless solves,
-    // and the digest is partition-order-free (round → DECIMAL sum).
+    // #16 nlrx at entity scale: one independent HP solve per nation, in
+    // the task that holds the nation's rows (the PerKeySeries operator) —
+    // no driver collect, no join back. Cell-exact like q18: the oracle
+    // runs the same recursive-CTE replay partitioned by nation;
+    // PartitionedSpec additionally pins the keyed path value-equal to
+    // independent per-entity keyless solves, and the digest is
+    // partition-order-free (round → DECIMAL sum).
     "q86_nlrx_partitioned" -> ((s, dir) => {
       val out = FameSession.run(
         "sm = nlrx(1600, rev, rev, rev, rev, rev, rev, rev)",
@@ -344,9 +345,10 @@ object QueriesCore {
     }),
 
     // the q14 chain script over ~2500 replicated entities: proves the
-    // keyed chain path stays entity-parallel with NO forced broadcast of
-    // the |entities|x|years| yearly index (PartitionedSpec asserts the
-    // plan carries no join hint in keyed mode — AQE decides). Replicas
+    // keyed chain path stays entity-parallel, one PerKeySeries operator
+    // over the entity-clustered frame with no |entities|x|years| index
+    // table to join back or broadcast (PartitionedSpec asserts the plan
+    // has no join and no hint). Replicas
     // are identical, so the oracle computes the q14 index once and
     // cross-joins the entity ids; DECIMAL sums keep the digest
     // partition-order independent.

@@ -1,10 +1,12 @@
 package graft.kernels
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.compile.ColumnCompiler.qcol
+import graft.plans.{PerKeySeries, SeriesKernel}
 
 /** Chain-linked volume indices (FAME `$chain`/`mchain`) and Fisher volume
   * rebasing (`fishvol_rebase`) — SURVEY §2.7.
@@ -24,10 +26,13 @@ import graft.compile.ColumnCompiler.qcol
   * the term sign (`$chain("a - b + c", …)` subtracts b's contributions,
   * `fame2pygen/formulas_generator.py:605-623`).
   *
-  * Execution shape (scales): one `groupBy(year)` shuffle over (keys, year),
-  * ordered window over the tiny per-key year table for the cumulative
-  * product (the native [[graft.plans.ProductAgg]]), then a broadcast join
-  * back to the fact rows.
+  * Execution shape: an unseeded chain is one [[graft.plans.PerKeySeries]]
+  * operator over the frame it extends. The frame is clustered by the keys
+  * and sorted by (keys, date), and [[ChainKernel]] folds each key's years
+  * in date order, so the index does not depend on the partition count and
+  * the plan does not branch. A seeded chain (the incremental streaming
+  * executor's carried years) still aggregates per (keys, year) with
+  * [[chainYearly]] and joins the index back on the year.
   */
 object Indices {
 
@@ -45,7 +50,7 @@ object Indices {
       .over(w.rowsBetween(Window.unboundedPreceding, 0))
 
   /** Per-(keys, year) chain aggregates — the groupBy stage of
-    * [[chainYearly]], exposed on its own because the incremental
+    * [[chainYearly]]. Only the seeded chain uses it: the incremental
     * streaming executor ([[graft.streaming.FameStream.runIncremental]])
     * materializes CLOSED years' rows of this exact table as carried
     * derived state: a year's aggregates are constants once the year
@@ -67,7 +72,10 @@ object Indices {
   }
 
   /** Annually chain-linked Fisher volume index over signed
-    * (quantity, price=`P<quantity>`) term pairs.
+    * (quantity, price=`P<quantity>`) term pairs, as a year table. Only
+    * the seeded chain uses it, for the carried state of the incremental
+    * streaming executor (`chainSeed`); the unseeded chain runs the same
+    * arithmetic in [[ChainKernel]].
     *
     * @param terms   (sign, quantityCol) pairs; price col = "P"+quantityCol
     * @param seed    closed-year aggregate rows ([[yearlyAggs]] schema)
@@ -133,25 +141,113 @@ object Indices {
       .select((keys.map(col) :+ col("__year") :+ col(idxName)): _*)
   }
 
-  /** Join a yearly chain index back onto the row-level frame as `idxName`.
-    *
-    * The broadcast hint is applied only in keyless (single-series) mode,
-    * where the yearly side is |years| rows. In keyed mode it is
-    * |entities| × |years| — proportional to the corpus — so a forced
-    * broadcast would funnel an arbitrarily large build side through the
-    * driver; the join key (keys, __year) hash-partitions on its own, and
-    * AQE still picks a broadcast at runtime whenever the yearly side
-    * turns out genuinely small.
+  /** The chain index as column `idxName` of `df`. Unseeded, each key's
+    * rows feed [[ChainKernel]] through one [[graft.plans.PerKeySeries]]
+    * operator. Seeded, [[chainYearly]]'s year table joins back on
+    * (keys, year); keyless, that table is |years| rows and is broadcast.
     */
   def chain(df: DataFrame, dateCol: String, terms: Seq[(Int, String)],
       baseYear: Int, idxName: String, keys: Seq[String] = Nil,
-      seed: Option[DataFrame] = None): DataFrame = {
-    val yearly = chainYearly(df, dateCol, terms, baseYear, idxName, keys,
-      seed)
-    val build = if (keys.isEmpty) broadcast(yearly) else yearly
-    df.withColumn("__year", year(col(dateCol)))
-      .join(build, keys :+ "__year", "left")
-      .drop("__year")
+      seed: Option[DataFrame] = None): DataFrame = seed match {
+    case None =>
+      PerKeySeries.append(df, keys, dateCol,
+        terms.flatMap { case (_, q) => Seq("P" + q, q) }, idxName,
+        ChainKernel(terms.map(_._1.toDouble), baseYear))
+    case Some(_) =>
+      val yearly = chainYearly(df, dateCol, terms, baseYear, idxName, keys,
+        seed)
+      val build = if (keys.isEmpty) broadcast(yearly) else yearly
+      df.withColumn("__year", year(col(dateCol)))
+        .join(build, keys :+ "__year", "left")
+        .drop("__year")
+  }
+
+  /** [[chainYearly]]'s arithmetic over one key's date-sorted rows
+    * `(date, P₀, Q₀, P₁, Q₁, …)`, for [[graft.plans.PerKeySeries]].
+    *
+    * Each year's average price is the sum of its non-null prices, taken
+    * in date order from 0.0, over their count, and its quantity is the
+    * sum of its non-null quantities (null when there are none): the
+    * values Spark's `avg` and `sum` give over the same rows in the same
+    * order. The links then follow chainYearly expression by expression:
+    * terms `(s·p)·q` summed left to right, the Laspeyres and Paasche
+    * divisions, `coalesce(sqrt(when(lp > 0, lp)), 1.0)`, the running
+    * product of [[graft.plans.ProductAgg]] and `raw / base * 100`. Spark's
+    * semantics hold where Scala's differ: a null operand gives null, NaN
+    * compares above every number, and a zero divisor fails as ANSI
+    * division does. Every row of a year gets that year's index.
+    */
+  final case class ChainKernel(signs: Seq[Double], baseYear: Int)
+      extends SeriesKernel {
+
+    private type D = Option[Double]
+    private def add(a: D, b: D): D = for (x <- a; y <- b) yield x + y
+    private def mul(a: D, b: D): D = for (x <- a; y <- b) yield x * y
+    private def div(a: D, b: D): D = for (x <- a; y <- b) yield {
+      if (y == 0) throw new ArithmeticException(
+        "[DIVIDE_BY_ZERO] Division by zero in a $chain link")
+      x / y
+    }
+    // Spark orders NaN above every other double
+    private def positive(v: Double): Boolean = v > 0 || v.isNaN
+
+    def apply(rows: IndexedSeq[InternalRow]): Array[Option[Double]] = {
+      val n = signs.length
+      val yearOf = rows.map(r =>
+        java.time.LocalDate.ofEpochDay(r.getInt(0).toLong).getYear)
+      // one (prices, quantities) entry per year present, ascending, and
+      // each row's entry
+      val years = scala.collection.mutable.ArrayBuffer.empty[Int]
+      val aggs = scala.collection.mutable.ArrayBuffer.empty[(Array[D], Array[D])]
+      val entryOf = new Array[Int](rows.length)
+      var i = 0
+      while (i < rows.length) {
+        val y = yearOf(i)
+        val pSum = new Array[Double](n); val pCnt = new Array[Long](n)
+        val qSum = new Array[Double](n); val qSeen = new Array[Boolean](n)
+        while (i < rows.length && yearOf(i) == y) {
+          val r = rows(i)
+          for (t <- 0 until n) {
+            if (!r.isNullAt(1 + 2 * t)) {
+              pSum(t) += r.getDouble(1 + 2 * t); pCnt(t) += 1
+            }
+            if (!r.isNullAt(2 + 2 * t)) {
+              qSum(t) += r.getDouble(2 + 2 * t); qSeen(t) = true
+            }
+          }
+          entryOf(i) = years.length
+          i += 1
+        }
+        years += y
+        aggs += ((Array.tabulate(n)(t =>
+            if (pCnt(t) == 0) None else Some(pSum(t) / pCnt(t).toDouble)),
+          Array.tabulate(n)(t => if (qSeen(t)) Some(qSum(t)) else None)))
+      }
+
+      def dot(p: Array[D], q: Array[D]): D =
+        (0 until n).map(t => mul(mul(Some(signs(t)), p(t)), q(t)))
+          .reduce(add)
+      val none = Array.fill[D](n)(None)
+      var raw: D = None
+      val raws = years.indices.map { k =>
+        val (p, q) = aggs(k)
+        // the first year has no predecessor (lag is null): a unit link
+        val (pp, pq) = if (k == 0) (none, none) else aggs(k - 1)
+        val lasp = div(dot(pp, q), dot(pp, pq))
+        val paas = div(dot(p, q), dot(p, pq))
+        val fisher =
+          mul(lasp, paas).filter(positive).map(math.sqrt).getOrElse(1.0)
+        // a link is positive or NaN, so ProductAgg's `> 0` guard keeps it
+        raw = Some(raw.fold(fisher)(_ * fisher))
+        raw
+      }
+      val base = years.indexOf(baseYear) match {
+        case -1 => None
+        case k => raws(k)
+      }
+      val index = raws.map(r => mul(div(r, base), Some(100.0)))
+      entryOf.map(index)
+    }
   }
 
   /** Period-to-period chained Fisher volume index over (volume, price)

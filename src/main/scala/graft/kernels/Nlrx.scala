@@ -1,8 +1,9 @@
 package graft.kernels
 
-import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
 import graft.compile.ColumnCompiler.qcol
+import graft.plans.{PerKeySeries, SeriesKernel}
 
 /** NLRX — λ-parameterized nonlinear relaxation smoothing — SURVEY §2.8.
   *
@@ -20,104 +21,37 @@ import graft.compile.ColumnCompiler.qcol
   *    standard published λ-relaxation for a single series. The
   *    pentadiagonal system is solved in O(n) with a banded Cholesky.
   *
-  * Execution shape: the series is driver-sized by construction (one value
-  * per period of an econometric model), so we collect the (DATE, y)
-  * columns — same boundary where the reference calls `.item()` — solve on
-  * the driver, and broadcast-join the result back by DATE. Weight series
-  * w1..w4/gss/gpr are accepted for surface parity and currently unused
-  * (documented).
+  * Execution shape: one [[graft.plans.PerKeySeries]] operator over the
+  * frame it extends. It clusters the frame by the keys (one partition
+  * when there are none), sorts each key's rows by date and solves each
+  * key's series in the task that holds it: no driver collect, no
+  * broadcast, no join back. Rows without a date take no part and get
+  * null. Weight series w1..w4/gss/gpr are accepted for surface parity
+  * and currently unused (documented).
   */
 trait Nlrx {
-  def apply(df: DataFrame, dateCol: String, target: String, lambda: Double,
-      args: Seq[String]): DataFrame
-
-  /** Partitioned form: one independent solve per entity key group,
-    * distributed with the groupBy shuffle (no driver collect). Default
-    * delegates to the keyless form when no keys are given.
+  /** `df` plus `target`: nlrx of `args.head` over each key's series, or
+    * over the whole frame when `keys` is empty.
     */
   def grouped(df: DataFrame, dateCol: String, target: String, lambda: Double,
-      args: Seq[String], keys: Seq[String]): DataFrame =
-    if (keys.isEmpty) apply(df, dateCol, target, lambda, args)
-    else Nlrx.groupedSolve(df, dateCol, target, lambda, args, keys)
+      args: Seq[String], keys: Seq[String]): DataFrame
 }
 
 object Nlrx {
 
-  /** Distributed per-entity HP solves: rows group by the entity keys, each
-    * group sorts by date and runs the O(n) banded Cholesky in the executor
-    * (`mapGroups` — the Scala analogue of grouped-map `applyInPandas`),
-    * then the smoothed series joins back on (keys, date). Scales to any
-    * number of entities; per-entity series stay driver-of-one-task-sized
-    * like every per-key state in this engine.
-    */
-  def groupedSolve(df: DataFrame, dateCol: String, target: String,
-      lambda: Double, args: Seq[String], keys: Seq[String]): DataFrame = {
-    val spark = df.sparkSession
-    val y = args.head
-    // ONE null-safe key expression used on both the solve side and the
-    // join-back side: a null key column maps to a \u0000 sentinel and
-    // columns join with \u0001, so an entity with a null key still gets
-    // its smoothed series and separator-containing values can't collide
-    // (the old code rendered null differently on the two sides, silently
-    // nulling that entity's output).
-    val keyExpr = concat_ws("\u0001",
-      keys.map(c => coalesce(col(c).cast("string"), lit("\u0000"))): _*)
-    val in = df.select(keyExpr.as("__k"), col(dateCol), qcol(y).cast("double"))
-    import spark.implicits._
-    implicit val enc: org.apache.spark.sql.Encoder[
-      (String, java.sql.Date, java.lang.Double)] =
-      org.apache.spark.sql.Encoders.tuple(
-        org.apache.spark.sql.Encoders.STRING,
-        org.apache.spark.sql.Encoders.DATE,
-        org.apache.spark.sql.Encoders.DOUBLE)
-    val ds = in.map { r =>
-      (r.getString(0), r.getDate(1),
-        if (r.isNullAt(2)) null else java.lang.Double.valueOf(r.getDouble(2)))
-    }
-    val solved = ds.groupByKey(_._1).flatMapGroups { (key, it) =>
-      val rows = it.toArray.sortBy(_._2.getTime)
-      val ys = rows.map(r => if (r._3 == null) Double.NaN else r._3.doubleValue)
-      val xs = HpSmoother.solve(ys, lambda)
-      rows.zip(xs).iterator.map { case ((k, d, _), x) =>
-        (k, d, if (x.isNaN) null else java.lang.Double.valueOf(x))
-      }
-    }
-    val out = solved.toDF("__k", dateCol, target)
-    val withKey = df.withColumn("__k", keyExpr)
-    withKey.join(out, Seq("__k", dateCol), "left").drop("__k")
-  }
-
   /** Mock-parity kernel: target is y itself. */
   object Compat extends Nlrx {
-    def apply(df: DataFrame, dateCol: String, target: String, lambda: Double,
-        args: Seq[String]): DataFrame =
+    def grouped(df: DataFrame, dateCol: String, target: String,
+        lambda: Double, args: Seq[String], keys: Seq[String]): DataFrame =
       df.withColumn(target, qcol(args.head))
   }
 
   /** HP-filter penalized-least-squares smoother, (I + λDᵀD)x = y. */
   object HpSmoother extends Nlrx {
-    def apply(df: DataFrame, dateCol: String, target: String, lambda: Double,
-        args: Seq[String]): DataFrame = {
-      val y = args.head
-      val rows = df.select(col(dateCol), qcol(y).cast("double"))
-        .where(col(dateCol).isNotNull)
-        .orderBy(dateCol)
-        .collect()
-      val dates = rows.map(_.get(0))
-      val ys = rows.map(r => if (r.isNullAt(1)) Double.NaN else r.getDouble(1))
-      val xs = solve(ys, lambda)
-
-      val spark = df.sparkSession
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        df.schema(dateCol),
-        org.apache.spark.sql.types.StructField(target,
-          org.apache.spark.sql.types.DoubleType)))
-      val out = spark.createDataFrame(
-        java.util.Arrays.asList(dates.zip(xs).map { case (d, x) =>
-          Row(d, if (x.isNaN) null else x): Row }: _*),
-        schema)
-      df.join(broadcast(out), Seq(dateCol), "left")
-    }
+    def grouped(df: DataFrame, dateCol: String, target: String,
+        lambda: Double, args: Seq[String], keys: Seq[String]): DataFrame =
+      PerKeySeries.append(df, keys, dateCol, Seq(args.head), target,
+        HpKernel(lambda))
 
     /** Solve (I + λDᵀD)x = y for the pentadiagonal HP system, O(n) banded
       * Cholesky (bandwidth 2). NaN inputs (nulls) are interpolated out
@@ -203,5 +137,16 @@ object Nlrx {
       for (i <- 0 until n) if (nanMask(i)) x(i) = Double.NaN
       x
     }
+  }
+
+  /** [[HpSmoother.solve]] over one key's date-sorted rows `(date, y)`,
+    * for [[graft.plans.PerKeySeries]]: a null y enters the solve as NaN
+    * and a NaN result leaves it as null.
+    */
+  final case class HpKernel(lambda: Double) extends SeriesKernel {
+    def apply(rows: IndexedSeq[InternalRow]): Array[Option[Double]] =
+      HpSmoother.solve(
+        rows.map(r => if (r.isNullAt(1)) Double.NaN else r.getDouble(1)).toArray,
+        lambda).map(x => if (x.isNaN) None else Some(x))
   }
 }

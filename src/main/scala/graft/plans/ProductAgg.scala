@@ -65,6 +65,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // after the fixed-point operator batch: last rewrite attempt, then
     // strip unmatched markers WITH a warning (silent-fallback guard)
     ext.injectPreCBORule(RangeBinStripRule)
+    // the per-key series operator behind keyed and keyless $chain / nlrx
+    ext.injectPlannerStrategy(_ => PerKeySeriesStrategy)
     ext.injectFunction((
       FunctionIdentifier("product_agg"),
       new ExpressionInfo(classOf[ProductAgg].getName, "product_agg"),

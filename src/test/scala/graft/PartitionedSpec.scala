@@ -229,7 +229,7 @@ class PartitionedSpec extends SparkSpec {
   }
 
   test("nlrx grouped solve equals independent per-entity solves (q86 digest)") {
-    // the q86 contract: the distributed mapGroups path must produce, per
+    // the q86 contract: the keyed per-key operator must produce, per
     // entity, exactly what a standalone keyless HP solve of that entity's
     // series produces — checked value-for-value at a real lambda on
     // distinct non-trivial series
@@ -279,6 +279,32 @@ class PartitionedSpec extends SparkSpec {
     assertSeq(byEntity(out, "B", "SM"), Seq.fill(4)(Some(5.0)))
   }
 
+  test("keyed nlrx gives a null-DATE row null and solves the key's other " +
+      "rows as without it") {
+    // the grouped solve sorted by date and threw on a null one; keyless
+    // nlrx always left such a row out and gave it null
+    val months = Seq("2020-01-01", "2020-02-01", "2020-03-01", "2020-04-01")
+    val ys = Seq(10.0, 14.0, 11.0, 19.0)
+    val dated = months.indices.map(i => Row("A", d(months(i)), ys(i))) ++
+      months.indices.map(i => Row("B", d(months(i)), 5.0 + i))
+    val schema = StructType(Seq(StructField("ENT", StringType),
+      StructField("DATE", DateType), StructField("Y", DoubleType)))
+    def df(rows: Seq[Row]) = spark.createDataFrame(
+      new java.util.ArrayList[Row](scala.jdk.CollectionConverters
+        .SeqHasAsJava(rows).asJava), schema)
+    def run(rows: Seq[Row]) = FameSession.run(
+      "sm = nlrx(1600, y, y, y, y, y, y, y)", df(rows),
+      partitionKeys = Seq("ENT")).df
+    val out = run(dated :+ Row("A", null, 1000.0))
+    val clean = run(dated)
+    val nullDate = out.where(out("DATE").isNull).select("SM").collect()
+    assert(nullDate.length == 1 && nullDate.head.isNullAt(0))
+    Seq("A", "B").foreach { e =>
+      assert(byEntity(out.where(out("DATE").isNotNull), e, "SM") ==
+        byEntity(clean, e, "SM"), s"entity $e")
+    }
+  }
+
   test("backward shift-pct anchors per entity") {
     // cnt-style driver series P grows 10%/period for A, flat for B;
     // rev2 anchored at the 2020-04-01 value and reconstructed backwards
@@ -299,8 +325,9 @@ class PartitionedSpec extends SparkSpec {
     assert(b.forall(v => math.abs(v.get - 500.0) < 1e-9)) // flat P → flat level
   }
 
-  test("keyed chain joins without a forced broadcast; keyless keeps the hint") {
-    import org.apache.spark.sql.catalyst.plans.logical.ResolvedHint
+  test("keyed and keyless chain: one per-key operator, no join back, no hint") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Join, ResolvedHint}
+    import graft.plans.PerKeySeries
     val months = Seq("2020-06-01", "2021-06-01")
     val rows = Seq(
       Row("A", d(months(0)), 10.0, 2.0), Row("A", d(months(1)), 20.0, 2.0),
@@ -310,19 +337,22 @@ class PartitionedSpec extends SparkSpec {
         .SeqHasAsJava(rows).asJava),
       StructType(Seq(StructField("ENT", StringType), StructField("DATE", DateType),
         StructField("A", DoubleType), StructField("PA", DoubleType))))
-    // keyed: the yearly index is |entities|x|years| — no hint; the join
-    // key (keys, __year) hash-partitions and AQE decides the strategy
+    // the |entities|x|years| index never leaves the frame: no year
+    // table, no join back on (keys, year), nothing to broadcast
     val keyed = graft.kernels.Indices.chain(in, "DATE", Seq(1 -> "A"),
       2020, "X", keys = Seq("ENT"))
-    val keyedHints = keyed.queryExecution.analyzed
-      .collect { case h: ResolvedHint => h }
-    assert(keyedHints.isEmpty,
-      s"keyed chain must not force a broadcast, found: $keyedHints")
-    // keyless: |years| rows — the broadcast hint is correct and kept
     val keyless = graft.kernels.Indices.chain(in.drop("ENT"), "DATE",
       Seq(1 -> "A"), 2020, "X")
-    assert(keyless.queryExecution.analyzed
-      .collect { case h: ResolvedHint => h }.nonEmpty)
+    Seq(keyed, keyless).foreach { out =>
+      val plan = out.queryExecution.analyzed
+      assert(plan.collect { case h: ResolvedHint => h }.isEmpty, plan)
+      assert(plan.collect { case j: Join => j }.isEmpty, plan)
+      assert(plan.collect { case p: PerKeySeries => p }.size == 1, plan)
+    }
+    assertSeq(byEntity(keyed, "A", "X"), Seq(Some(100.0), Some(200.0)))
+    // keyless: both entities' rows form one basket per year
+    assertSeq(column(keyless, "X"),
+      Seq(Some(100.0), Some(100.0), Some(100.0 * 25 / 15), Some(100.0 * 25 / 15)))
   }
 
   test("partitioned scripts plan no keyless (single-partition) windows") {
