@@ -3,6 +3,7 @@ package graft.api
 import java.time.LocalDate
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.ast._
@@ -66,10 +67,11 @@ object FameSession {
     * @param chainSeed   per-chain-target closed-year aggregate tables
     *                    ([[Indices.yearlyAggs]] schema) carried by the
     *                    incremental streaming executor; a seeded
-    *                    `$chain` statement links against seed ∪ the
-    *                    frame's own year aggregates instead of the
-    *                    frame alone. Empty (the default) = historical
-    *                    behavior for every batch caller.
+    *                    `$chain` statement links each key's carried
+    *                    years, which replace the frame's own rows of
+    *                    those years, and the frame's other years
+    *                    ([[Indices.chain]]). Empty (the default) =
+    *                    historical behavior for every batch caller.
     * @param fishvolSeed per-fishvol-target carried state for the
     *                    incremental streaming executor
     *                    ([[Indices.fishvolRaw]] seed schema: prefix
@@ -119,6 +121,9 @@ object FameSession {
     var localDbCols = Map.empty[String, Seq[String]] // db -> prefixed col names
     var sessionFreq: Option[Frequency] = bounds.flatMap(_.freq).headOption
 
+    // the per-key lookups and scalars read each key's whole series (a
+    // null key is one key, as in every per-key window)
+    val keyWin = Window.partitionBy(partitionKeys.map(col): _*)
     var lookupCols = Map.empty[(String, java.time.LocalDate), String]
     var lookupSeq = 0
     // per-run names for inline `$chain(...)` columns
@@ -137,10 +142,10 @@ object FameSession {
       * key's OWN value at the date — the unkeyed driver literal is one
       * arbitrary row of the multi-entity frame (frame-dependent). Walk
       * the expression for lookup sites and materialize each distinct
-      * (series, date) as a key-constant column: filter the frame to the
-      * date, group by the keys, left-join back (one #keys-row join per
-      * site, broadcast-sized at any scale). The compiler then reads the
-      * column instead of inlining a literal (Ctx.lookupCols). Entries
+      * (series, date) as a key-constant column: the key's value at the
+      * date, `max(when(date === d, series))` over the per-key window, on
+      * the frame it extends. The compiler then reads the column instead
+      * of inlining a literal (Ctx.lookupCols). Entries
       * invalidate when their series is reassigned — a later lookup of
       * the new definition re-materializes under a fresh name. The
       * `__LKP_` columns are dropped from the final frame.
@@ -153,11 +158,9 @@ object FameSession {
             cur.columns.contains(series)) {
           lookupSeq += 1
           val name = s"__LKP_$lookupSeq"
-          val lk = cur
-            .where(col(dateCol) === lit(java.sql.Date.valueOf(d)))
-            .groupBy(partitionKeys.map(col): _*)
-            .agg(first(ColumnCompiler.qcol(series)).as(name))
-          cur = cur.join(lk, partitionKeys, "left")
+          cur = cur.withColumn(name, max(when(
+            col(dateCol) === lit(java.sql.Date.valueOf(d)),
+            ColumnCompiler.qcol(series))).over(keyWin))
           lookupCols += (series, d) -> name
         }
       }
@@ -291,16 +294,12 @@ object FameSession {
               materializeKeyedLookups(e)
               val compiled = ColumnCompiler.compile(e, ctx)
               val tmp = s"__SCL_$name"
-              val vals = cur
-                .select((partitionKeys.map(col) :+ col(dateCol) :+
-                  compiled.as(tmp)): _*)
-                .groupBy(partitionKeys.map(col): _*)
-                .agg(min_by(col(tmp), col(dateCol)).as(tmp))
-              // reassignment: drop the stale __SCL_ column first, or the
-              // re-join leaves two columns named tmp and later Ref reads
-              // resolve AMBIGUOUS_REFERENCE (vals above already read the
-              // OLD value, so an RHS referencing the scalar still sees it)
-              cur = cur.drop(tmp).join(vals, partitionKeys, "left")
+              // the RHS goes to a column first: it may hold window
+              // functions (ave → a per-key window), which cannot nest in
+              // the per-key min_by. A reassignment replaces the stale
+              // column in place, after the RHS has read the OLD value.
+              cur = cur.withColumn(tmp, compiled)
+                .withColumn(tmp, min_by(col(tmp), col(dateCol)).over(keyWin))
               refMap += name -> tmp
               scalars -= name
             } else {

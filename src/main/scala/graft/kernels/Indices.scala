@@ -26,13 +26,11 @@ import graft.plans.{PerKeySeries, SeriesKernel}
   * the term sign (`$chain("a - b + c", …)` subtracts b's contributions,
   * `fame2pygen/formulas_generator.py:605-623`).
   *
-  * Execution shape: an unseeded chain is one [[graft.plans.PerKeySeries]]
-  * operator over the frame it extends. The frame is clustered by the keys
-  * and sorted by (keys, date), and [[ChainKernel]] folds each key's years
-  * in date order, so the index does not depend on the partition count and
-  * the plan does not branch. A seeded chain (the incremental streaming
-  * executor's carried years) still aggregates per (keys, year) with
-  * [[chainYearly]] and joins the index back on the year.
+  * Execution shape: a chain, seeded or not, is one
+  * [[graft.plans.PerKeySeries]] operator over the frame it extends. The
+  * frame is clustered by the keys and sorted by (keys, date), and
+  * [[ChainKernel]] folds each key's years in date order, so the index
+  * does not depend on the partition count and the plan does not branch.
   */
 object Indices {
 
@@ -49,14 +47,15 @@ object Indices {
     call_function("product_agg", when(c > 0, c))
       .over(w.rowsBetween(Window.unboundedPreceding, 0))
 
-  /** Per-(keys, year) chain aggregates — the groupBy stage of
-    * [[chainYearly]]. Only the seeded chain uses it: the incremental
-    * streaming executor ([[graft.streaming.FameStream.runIncremental]])
-    * materializes CLOSED years' rows of this exact table as carried
-    * derived state: a year's aggregates are constants once the year
-    * closes, and carrying them (1 row per key per year) is what lets
-    * the chain recompute its whole link/cumprod/rebase pipeline each
-    * batch without carrying O(history) raw rows.
+  /** Per-(keys, year) chain aggregates: for each term i, the year's
+    * average price `__p$i = avg(P<q>)` and quantity sum
+    * `__q$i = sum(<q>)`. The incremental streaming executor
+    * ([[graft.streaming.FameStream.runIncremental]]) materializes CLOSED
+    * years' rows of this table as carried derived state and hands them
+    * back to [[chain]] as its seed: a year's aggregates are constants
+    * once the year closes, and carrying them (1 row per key per year)
+    * lets the chain relink its whole history each batch without
+    * carrying O(history) raw rows.
     *
     * @return frame `keys :+ __year :+ (__p$i, __q$i per term)`.
     */
@@ -71,111 +70,69 @@ object Indices {
     df.groupBy((keys.map(col) :+ y): _*).agg(aggs.head, aggs.tail: _*)
   }
 
-  /** Annually chain-linked Fisher volume index over signed
-    * (quantity, price=`P<quantity>`) term pairs, as a year table. Only
-    * the seeded chain uses it, for the carried state of the incremental
-    * streaming executor (`chainSeed`); the unseeded chain runs the same
-    * arithmetic in [[ChainKernel]].
+  /** Marks a seed row in the series a seeded [[chain]] hands its kernel. */
+  private val SeedFlag = "__CHAIN_SEED"
+
+  /** The annually chain-linked Fisher volume index over signed
+    * (quantity, price=`P<quantity>`) term pairs, as column `idxName` of
+    * `df`: each key's rows feed [[ChainKernel]] through one
+    * [[graft.plans.PerKeySeries]] operator.
     *
-    * @param terms   (sign, quantityCol) pairs; price col = "P"+quantityCol
-    * @param seed    closed-year aggregate rows ([[yearlyAggs]] schema)
-    *                carried by the incremental streaming executor: they
-    *                REPLACE this frame's own (possibly partial)
-    *                aggregates for those years, so a work frame holding
-    *                only the open year's raw rows still links against
-    *                the complete history. The link/cumprod/rebase
-    *                pipeline always recomputes over the FULL year table
-    *                (seed ∪ fresh) — the same window fold over the same
-    *                year rows as a whole-history run, so seeding changes
-    *                no fp association (fishvol's per-row fold instead
-    *                seeds a running product in the incremental
-    *                executor; see [[fishvolRaw]]).
-    * @return frame `keys :+ __year :+ idxName` (one row per year) to join
-    *         back on year.
-    */
-  def chainYearly(df: DataFrame, dateCol: String, terms: Seq[(Int, String)],
-      baseYear: Int, idxName: String, keys: Seq[String] = Nil,
-      seed: Option[DataFrame] = None): DataFrame = {
-
-    val fresh = yearlyAggs(df, dateCol, terms, keys)
-    val yearly = seed match {
-      case Some(st) =>
-        // the carried rows are the COMPLETE aggregates for their years
-        // (finalized when the year closed); the frame's own rows for
-        // those years may be partial (pinned/tail leftovers) — prefer
-        // the state
-        st.unionByName(fresh.join(
-          st.select((keys :+ "__year").map(col): _*),
-          keys :+ "__year", "left_anti"))
-      case None => fresh
-    }
-
-    val w = win(keys, "__year")
-    def lagc(name: String) = lag(col(name), 1).over(w)
-
-    def dot(price: Int => Column, qty: Int => Column): Column =
-      terms.zipWithIndex.map { case ((s, _), i) =>
-        lit(s.toDouble) * price(i) * qty(i)
-      }.reduce(_ + _)
-
-    val lasp = dot(i => lagc(s"__p$i"), i => col(s"__q$i")) /
-               dot(i => lagc(s"__p$i"), i => lagc(s"__q$i"))
-    val paas = dot(i => col(s"__p$i"), i => col(s"__q$i")) /
-               dot(i => col(s"__p$i"), i => lagc(s"__q$i"))
-    // first-year link (lag null) and degenerate negative products (signed
-    // baskets can net below zero) both collapse to a unit link — sqrt(NaN)
-    // would otherwise poison the cumulative product
-    val lp = lasp * paas
-    val fisher = coalesce(sqrt(when(lp > 0, lp)), lit(1.0))
-
-    val linked = yearly
-      .withColumn("__f", fisher)
-      .withColumn("__raw", cumprod(col("__f"), w))
-    // re-reference so base year = 100
-    val baseW =
-      if (keys.isEmpty) Window.partitionBy()
-      else Window.partitionBy(keys.map(col): _*)
-    val base = max(when(col("__year") === baseYear, col("__raw"))).over(baseW)
-    linked
-      .withColumn(idxName, col("__raw") / base * lit(100.0))
-      .select((keys.map(col) :+ col("__year") :+ col(idxName)): _*)
-  }
-
-  /** The chain index as column `idxName` of `df`. Unseeded, each key's
-    * rows feed [[ChainKernel]] through one [[graft.plans.PerKeySeries]]
-    * operator. Seeded, [[chainYearly]]'s year table joins back on
-    * (keys, year); keyless, that table is |years| rows and is broadcast.
+    * @param terms (sign, quantityCol) pairs; price col = "P"+quantityCol
+    * @param seed  closed-year aggregate rows ([[yearlyAggs]] schema)
+    *              carried by the incremental streaming executor. Each
+    *              joins its key's series as one extra row, dated Jan 1
+    *              of its year and flagged, that keeps its own `__p$i`
+    *              and `__q$i`: it REPLACES the frame's own (possibly
+    *              partial) aggregates for that year, so a work frame
+    *              holding only the open year's raw rows still links
+    *              against the complete history. The seed rows leave
+    *              the frame after the kernel.
     */
   def chain(df: DataFrame, dateCol: String, terms: Seq[(Int, String)],
       baseYear: Int, idxName: String, keys: Seq[String] = Nil,
-      seed: Option[DataFrame] = None): DataFrame = seed match {
-    case None =>
-      PerKeySeries.append(df, keys, dateCol,
-        terms.flatMap { case (_, q) => Seq("P" + q, q) }, idxName,
-        ChainKernel(terms.map(_._1.toDouble), baseYear))
-    case Some(_) =>
-      val yearly = chainYearly(df, dateCol, terms, baseYear, idxName, keys,
-        seed)
-      val build = if (keys.isEmpty) broadcast(yearly) else yearly
-      df.withColumn("__year", year(col(dateCol)))
-        .join(build, keys :+ "__year", "left")
-        .drop("__year")
+      seed: Option[DataFrame] = None): DataFrame = {
+    val inputs = terms.flatMap { case (_, q) => Seq("P" + q, q) }
+    val kernel = ChainKernel(terms.map(_._1.toDouble), baseYear)
+    seed match {
+      case None =>
+        PerKeySeries.append(df, keys, dateCol, inputs, idxName, kernel)
+      case Some(st) =>
+        val carried = terms.indices.flatMap(i => Seq(s"__p$i", s"__q$i"))
+        val dateType = df.select(qcol(dateCol)).schema.head.dataType
+        val rows = st
+          .withColumn(dateCol,
+            make_date(col("__year"), lit(1), lit(1)).cast(dateType))
+          .withColumn(SeedFlag, lit(true))
+          .drop("__year")
+        PerKeySeries.append(df.unionByName(rows, allowMissingColumns = true),
+            keys, dateCol, (inputs :+ SeedFlag) ++ carried, idxName, kernel)
+          .where(col(SeedFlag).isNull)
+          .drop((SeedFlag +: carried): _*)
+    }
   }
 
-  /** [[chainYearly]]'s arithmetic over one key's date-sorted rows
-    * `(date, P₀, Q₀, P₁, Q₁, …)`, for [[graft.plans.PerKeySeries]].
+  /** The chain index over one key's date-sorted rows
+    * `(date, P₀, Q₀, P₁, Q₁, …)`, for [[graft.plans.PerKeySeries]]. A
+    * seeded chain's rows go on with `(flag, p₀, q₀, p₁, q₁, …)`: a
+    * flagged row is a carried year's aggregates.
     *
     * Each year's average price is the sum of its non-null prices, taken
     * in date order from 0.0, over their count, and its quantity is the
     * sum of its non-null quantities (null when there are none): the
     * values Spark's `avg` and `sum` give over the same rows in the same
-    * order. The links then follow chainYearly expression by expression:
-    * terms `(s·p)·q` summed left to right, the Laspeyres and Paasche
-    * divisions, `coalesce(sqrt(when(lp > 0, lp)), 1.0)`, the running
-    * product of [[graft.plans.ProductAgg]] and `raw / base * 100`. Spark's
-    * semantics hold where Scala's differ: a null operand gives null, NaN
-    * compares above every number, and a zero divisor fails as ANSI
-    * division does. Every row of a year gets that year's index.
+    * order. A year that holds a flagged row takes its (p, q) from that
+    * row alone. Each link then takes, with p̄/Q the year's and p̄₋/Q₋
+    * the previous year's aggregates (null for the first year):
+    * `L = Σ((s·p̄₋)·Q) / Σ((s·p̄₋)·Q₋)` and `P = Σ((s·p̄)·Q) / Σ((s·p̄)·Q₋)`,
+    * each Σ summed over the terms left to right; the link is
+    * `√(L·P)` when that product is positive and 1.0 otherwise (a null
+    * or negative product); the running product of the links, in the
+    * order of [[graft.plans.ProductAgg]], is the raw level; and the
+    * index is `raw / raw(baseYear) * 100`. Spark's semantics hold where
+    * Scala's differ: a null operand gives null, NaN compares above every
+    * number, and a zero divisor fails as ANSI division does. Every row
+    * of a year gets that year's index.
     */
   final case class ChainKernel(signs: Seq[Double], baseYear: Int)
       extends SeriesKernel {
@@ -193,6 +150,8 @@ object Indices {
 
     def apply(rows: IndexedSeq[InternalRow]): Array[Option[Double]] = {
       val n = signs.length
+      val flag = 1 + 2 * n
+      def seedRow(r: InternalRow) = r.numFields > flag && !r.isNullAt(flag)
       val yearOf = rows.map(r =>
         java.time.LocalDate.ofEpochDay(r.getInt(0).toLong).getYear)
       // one (prices, quantities) entry per year present, ascending, and
@@ -203,21 +162,26 @@ object Indices {
       var i = 0
       while (i < rows.length) {
         val y = yearOf(i)
+        var end = i
+        while (end < rows.length && yearOf(end) == y) end += 1
+        val seeded = (i until end).exists(k => seedRow(rows(k)))
+        // a seed row reads its own (p, q) columns, after the flag
+        val at = if (seeded) flag + 1 else 1
         val pSum = new Array[Double](n); val pCnt = new Array[Long](n)
         val qSum = new Array[Double](n); val qSeen = new Array[Boolean](n)
-        while (i < rows.length && yearOf(i) == y) {
-          val r = rows(i)
-          for (t <- 0 until n) {
-            if (!r.isNullAt(1 + 2 * t)) {
-              pSum(t) += r.getDouble(1 + 2 * t); pCnt(t) += 1
+        for (k <- i until end) {
+          val r = rows(k)
+          if (seedRow(r) == seeded) for (t <- 0 until n) {
+            if (!r.isNullAt(at + 2 * t)) {
+              pSum(t) += r.getDouble(at + 2 * t); pCnt(t) += 1
             }
-            if (!r.isNullAt(2 + 2 * t)) {
-              qSum(t) += r.getDouble(2 + 2 * t); qSeen(t) = true
+            if (!r.isNullAt(at + 1 + 2 * t)) {
+              qSum(t) += r.getDouble(at + 1 + 2 * t); qSeen(t) = true
             }
           }
-          entryOf(i) = years.length
-          i += 1
+          entryOf(k) = years.length
         }
+        i = end
         years += y
         aggs += ((Array.tabulate(n)(t =>
             if (pCnt(t) == 0) None else Some(pSum(t) / pCnt(t).toDouble)),

@@ -166,11 +166,13 @@ object FameStream {
     * closed (the rebase denominator is final; before that every index
     * value would still move). Closed years' aggregate rows
     * ([[graft.kernels.Indices.yearlyAggs]] — 1 row per key per year)
-    * are carried as versioned derived state and seeded back into the
-    * kernel, so each batch recomputes the full link/cumprod/rebase
-    * pipeline over the COMPLETE year table without carrying O(history)
-    * raw rows. The honest latency trade: up to one year of hold-back
-    * (q218's bucket argument with span = periods-per-year).
+    * are carried as versioned derived state.
+    * [[graft.kernels.Indices.chain]] adds them to each key's series as
+    * flagged rows that replace the work frame's own rows of those
+    * years, so each batch relinks the COMPLETE year history without
+    * carrying O(history) raw rows. The honest latency trade: up to one
+    * year of hold-back (q218's bucket argument with span =
+    * periods-per-year).
     */
   final case class ChainSpec(target: String, terms: Seq[(Int, String)],
       baseYear: Int) extends HoldBack

@@ -558,9 +558,8 @@ class EngineSpec extends SparkSpec {
     assert(pushed.count() == 2)
   }
 
-  test("fame_run, KEYED: a WHERE on the partition key pushes below the " +
-      "key-partitioned windows AND into both sides of the per-key " +
-      "lookup join — per-entity queries pay only for their entity") {
+  test("fame_run, KEYED: a WHERE on the key reaches one scan below the " +
+      "per-key windows") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("famekeypush").toString
     Seq(("FR", java.sql.Date.valueOf("1995-01-01"), 4.0),
@@ -575,18 +574,18 @@ class EngineSpec extends SparkSpec {
     val rows = df.orderBy("DATE").collect()
     assert(rows.map(_.getString(0)).toSeq == Seq("FR", "FR"))
     assert(rows(1).getDouble(3) == 5.0 / 4.0) // FR's OWN Jan level
-    val plan = df.queryExecution.executedPlan.toString
-      .replaceAll("\\s+", " ")
-    // the main scan prunes to the key…
-    assert(plan.matches(".*PushedFilters: \\[[^\\]]*EqualTo\\(K,FR\\).*"),
-      s"key filter not pushed to the scan:\n$plan")
-    // …and the LOOKUP side prunes to (key AND date) — the per-key
-    // materialization composes with predicate pushdown instead of
-    // rescanning every entity for one entity's rebase
-    assert(plan.matches(
-      ".*PushedFilters: \\[[^\\]]*EqualTo\\(DATE,1995-01-01\\)," +
-        " EqualTo\\(K,FR\\).*"),
-      s"lookup-side scan not pruned to (date, key):\n$plan")
+    // the lookup is a per-key window over the frame it extends, so the
+    // key filter passes it like the pct window: one scan, pruned to the
+    // key, instead of rescanning every entity for one entity's rebase
+    val executed = df.queryExecution.executedPlan
+    val scans = new org.apache.spark.sql.execution.adaptive
+        .AdaptiveSparkPlanHelper {}.collect(executed) {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec => s
+    }
+    assert(scans.size == 1, s"expected one file scan:\n$executed")
+    assert(scans.head.toString.replaceAll("\\s+", " ")
+      .matches(".*PushedFilters: \\[[^\\]]*EqualTo\\(K,FR\\).*"),
+      s"key filter not pushed to the scan:\n$executed")
   }
 
   test("dotted series names read through every kernel (r18: chain/fishvol/" +
@@ -606,7 +605,8 @@ class EngineSpec extends SparkSpec {
       "PA.X" -> pa, "PB.Y" -> pb)
     val plain  = frame(dates, "A" -> a, "B" -> b, "PA" -> pa, "PB" -> pb)
 
-    // chain: term read goes through yearlyAggs (qcol(q), qcol("P"+q))
+    // chain: PerKeySeries resolves each term's q and "P"+q column by its
+    // literal name
     val cd = FameSession.run("""set x = $chain("a.x - b.y", "1995")""", dotted).df
     val cp = FameSession.run("""set x = $chain("a - b", "1995")""", plain).df
     assertSeq(column(cd, "X"), column(cp, "X"))

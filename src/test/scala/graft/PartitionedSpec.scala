@@ -279,6 +279,59 @@ class PartitionedSpec extends SparkSpec {
     assertSeq(byEntity(out, "B", "SM"), Seq.fill(4)(Some(5.0)))
   }
 
+  test("a null partition key is one entity for lookups, scalars and the " +
+      "seeded chain") {
+    import org.apache.spark.sql.functions.{col, year}
+    // 24 months of integer levels and prices, so every yearly sum and
+    // average is exact in any order
+    val months = (0 until 24).map(m =>
+      java.time.LocalDate.of(2020, 1, 1).plusMonths(m.toLong))
+    val rows = for ((k, lvl) <- Seq[(String, Int)]((null, 10), ("B", 100));
+                    (m, i) <- months.zipWithIndex)
+      yield Row(k, java.sql.Date.valueOf(m), (lvl + 2 * i).toDouble,
+        (3 + i % 4).toDouble)
+    val in = spark.createDataFrame(
+      new java.util.ArrayList[Row](scala.jdk.CollectionConverters
+        .SeqHasAsJava(rows).asJava),
+      StructType(Seq(StructField("ENT", StringType),
+        StructField("DATE", DateType), StructField("V", DoubleType),
+        StructField("PV", DoubleType))))
+    val out = FameSession.run(
+      """freq m
+        |p = pct(v)
+        |l = lastvalue(v)
+        |rel = v / v[2020-01-01]
+        |scalar mu = ave(v)
+        |dev = v - mu""".stripMargin, in, partitionKeys = Seq("ENT")).df
+    def nullKey(df: DataFrame, c: String): Seq[Option[Double]] =
+      df.where(df("ENT").isNull).orderBy("DATE").select(c).collect()
+        .toSeq.map(r => if (r.isNullAt(0)) None else Some(r.getDouble(0)))
+    val v = (0 until 24).map(i => 10.0 + 2 * i)
+    // pct and lastvalue already read the null key's own rows…
+    assertSeq(nullKey(out, "P"),
+      None +: (1 until 24).map(i => Some((v(i) / v(i - 1) - 1) * 100)))
+    assertSeq(nullKey(out, "L"), Seq.fill(24)(Some(v.last)))
+    // …and so do the fixed-date lookup and the per-key scalar
+    assertSeq(nullKey(out, "REL"), v.map(x => Some(x / 10.0)))
+    assertSeq(nullKey(out, "DEV"), v.map(x => Some(x - v.sum / 24)))
+    assertSeq(byEntity(out, "B", "REL"),
+      (0 until 24).map(i => Some((100.0 + 2 * i) / 100.0)))
+    // a seeded chain over 2021, with 2020 carried, gives every key,
+    // the null one included, the whole-history index
+    val script = """set x = $chain("v", "2020")"""
+    val whole = FameSession.run(script, in, partitionKeys = Seq("ENT")).df
+      .where(year(col("DATE")) === 2021)
+    val seed = graft.kernels.Indices.yearlyAggs(
+      in.where(year(col("DATE")) === 2020), "DATE", Seq(1 -> "V"), Seq("ENT"))
+    val seeded = FameSession.run(script,
+      in.where(year(col("DATE")) === 2021), partitionKeys = Seq("ENT"),
+      chainSeed = Map("X" -> seed)).df
+    assert(seeded.count() == 24)
+    assert(nullKey(seeded, "X").forall(_.isDefined))
+    assert(nullKey(seeded, "X") == nullKey(whole, "X"))
+    assert(byEntity(seeded, "B", "X") == byEntity(whole, "B", "X"))
+  }
+
   test("keyed nlrx gives a null-DATE row null and solves the key's other " +
       "rows as without it") {
     // the grouped solve sorted by date and threw on a null one; keyless

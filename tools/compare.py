@@ -11,11 +11,14 @@ contract. Doubles are compared bit-for-bit (struct pack), which is
 what the driver's value hash does. An oracle query that DuckDB cannot
 run prints `<query>: ORACLE ERROR <message>` and counts as a failure;
 the compare goes on, and exits non-zero at the end if anything failed.
+Each line carries the query's oracle wall time, and the ten slowest
+oracle queries are listed at the end.
 """
 import json
 import math
 import struct
 import sys
+import time
 
 import duckdb
 
@@ -61,6 +64,7 @@ def main():
         except Exception:
             pass
     fails = 0
+    oracle_s = {}
     for q in queries:
         if q not in oracle:
             print(f"{q}: NO ORACLE (rows-only)")
@@ -70,12 +74,16 @@ def main():
         # one query's oracle failure (q110_ivfpq runs DuckDB out of
         # memory on a 15 GB machine) must not leave every later query
         # unchecked: record it as a failure and go on
+        t0 = time.monotonic()
         try:
             oracle_df = con.execute(oracle[q]).df()
         except duckdb.Error as e:
-            print(f"{q}: ORACLE ERROR {str(e).splitlines()[0][:160]}")
+            oracle_s[q] = time.monotonic() - t0
+            print(f"{q}: ORACLE ERROR {str(e).splitlines()[0][:160]} "
+                  f"oracle_s={oracle_s[q]:.2f}")
             fails += 1
             continue
+        oracle_s[q] = time.monotonic() - t0
         s_cols, o_cols = sorted(spark_df.columns), sorted(oracle_df.columns)
         ok_schema = s_cols == o_cols
         ok_rows = len(spark_df) == len(oracle_df)
@@ -91,11 +99,17 @@ def main():
                 for i in bad:
                     print(f"  row {i}:\n    spark  {s[i]}\n    oracle {o[i]}")
         print(f"{q}: rows={ok_rows} ({len(spark_df)}/{len(oracle_df)}) "
-              f"schema={ok_schema} hash={ok_hash}")
+              f"schema={ok_schema} hash={ok_hash} oracle_s={oracle_s[q]:.2f}")
         if not ok_schema:
             print(f"  spark cols : {s_cols}\n  oracle cols: {o_cols}")
         if not (ok_rows and ok_schema and ok_hash):
             fails += 1
+    slowest = sorted(oracle_s.items(), key=lambda kv: -kv[1])[:10]
+    if slowest:
+        print(f"slowest oracle queries (of {len(oracle_s)}, "
+              f"{sum(oracle_s.values()):.1f} s in all):")
+        for q, secs in slowest:
+            print(f"  {secs:9.2f} s  {q}")
     sys.exit(1 if fails else 0)
 
 
